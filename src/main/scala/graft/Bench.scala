@@ -1106,7 +1106,11 @@ object Bench {
       val k = kernelEffOf(s); val m = membwEffOf(s)
       k >= 0.35 && k <= 1.25 && m >= 0.7 && m <= 1.3
     }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+    }
     def rawEffOf(s: (Double, Double, Double, Double, Double, Double)) =
       (s._1 / s._4) / 4.0
     def normEffOf(s: (Double, Double, Double, Double, Double, Double)) = {

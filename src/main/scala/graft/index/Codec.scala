@@ -10,6 +10,12 @@ import java.io.ByteArrayOutputStream
   * docIds delta+varint encoded, tfs/dls varint, positions delta+varint,
   * ~blockSize docs per block (Lucene-like 128).
   *
+  * Each block has two regions: a header (`n`, then `docDelta, tf, dl,
+  * nPos` per posting) and, after it, the positions region (each posting's
+  * position deltas in posting order). A query without a phrase decodes
+  * only the header (see [[encodeBlock]]). The on-disk layout is versioned
+  * by [[FormatVersion]].
+  *
   * Pure JVM code, no Spark dependency — property-tested for roundtrip
   * identity and sortedness invariants (CodecSpec).
   */
@@ -51,9 +57,8 @@ object Codec {
     def toArray: Array[Byte] = java.util.Arrays.copyOf(a, n)
   }
 
-  final class Reader(bytes: Array[Byte]) {
+  private final class Reader(bytes: Array[Byte]) {
     private var pos = 0
-    def hasNext: Boolean = pos < bytes.length
     def readVarint(): Long = {
       var shift = 0
       var result = 0L
@@ -66,16 +71,20 @@ object Codec {
       } while ((b & 0x80) != 0)
       result
     }
-    /** Advance past one varint without assembling its value. */
-    def skipVarint(): Unit = {
-      while ((bytes(pos) & 0x80) != 0) pos += 1
-      pos += 1
-    }
   }
 
   /** Encode a docId-sorted run of postings into one block payload.
     * Postings MUST be strictly increasing by docId; positions MUST be
     * strictly increasing. firstDocId is the delta base.
+    *
+    * Layout (two regions, every value an unsigned varint):
+    * {{{
+    *   header:    n, then per posting: docDelta, tf, dl, nPos
+    *   positions: per posting, its nPos position deltas (base 0)
+    * }}}
+    * The header alone yields docIds, tfs and dls, so a decode that needs no
+    * positions stops at the end of the header and never reads a position
+    * byte.
     */
   def encodeBlock(firstDocId: Long, postings: Seq[Posting]): Array[Byte] = {
     val out = new ByteBuf(postings.size * 6)
@@ -87,8 +96,10 @@ object Codec {
       prev = p.docId
       out.writeVarint(p.tf.toLong)
       out.writeVarint(p.dl.toLong)
+      out.writeVarint(p.positions.length.toLong)
+    }
+    postings.foreach { p =>
       val ps = p.positions
-      out.writeVarint(ps.length.toLong)
       var prevPos = 0L
       var i = 0
       while (i < ps.length) {
@@ -100,39 +111,20 @@ object Codec {
     out.toArray
   }
 
+  /** Row-shaped decode (exhaustive baseline, oracle, compaction, SQL
+    * `decode_postings`): the columnar decode with positions, one
+    * [[Posting]] per entry. */
   def decodeBlock(firstDocId: Long, bytes: Array[Byte]): Array[Posting] = {
-    val in = new Reader(bytes)
-    val n = in.readVarint().toInt
-    val result = new Array[Posting](n)
-    var prev = firstDocId
-    var i = 0
-    while (i < n) {
-      val docId = prev + in.readVarint()
-      prev = docId
-      val tf = in.readVarint().toInt
-      val dl = in.readVarint().toInt
-      val nPos = in.readVarint().toInt
-      val positions = new Array[Int](nPos)
-      var j = 0
-      var prevPos = 0L
-      while (j < nPos) {
-        prevPos += in.readVarint()
-        positions(j) = prevPos.toInt
-        j += 1
-      }
-      result(i) = Posting(docId, tf, dl, positions)
-      i += 1
-    }
-    result
+    val b = decodeBlockColumnar(firstDocId, bytes, needPositions = true)
+    Array.tabulate(b.n)(i => Posting(b.docIds(i), b.tfs(i), b.dls(i), b.positionsOf(i)))
   }
 
   /** Columnar image of one decoded block — the WAND/serving hot-path shape:
     * a handful of primitive arrays per BLOCK instead of one Posting object
-    * plus one positions array per POSTING ([[decodeBlock]] stays the
-    * row-shaped reference decode for the exhaustive baseline, the oracle
-    * and the property tests). Positions are decoded only when the caller
-    * needs them (phrase scoring); their varints are byte-skipped otherwise.
-    * Values are identical to [[decodeBlock]] (CodecSpec differential). */
+    * plus one positions array per POSTING. Positions are decoded only when
+    * the caller needs them (phrase scoring); otherwise the decode stops at
+    * the end of the header region. Posting `i`'s positions are the slice
+    * `positions[posOffsets(i), posOffsets(i + 1))`. */
   final class DecodedBlock(val n: Int, val docIds: Array[Long],
       val tfs: Array[Int], val dls: Array[Int],
       val posOffsets: Array[Int], val positions: Array[Int]) {
@@ -149,7 +141,6 @@ object Codec {
     val tfs = new Array[Int](n)
     val dls = new Array[Int](n)
     val posOffsets = if (needPositions) new Array[Int](n + 1) else null
-    var positions = if (needPositions) new Array[Int](math.max(4, n * 2)) else null
     var posN = 0
     var prev = firstDocId
     var i = 0
@@ -159,26 +150,24 @@ object Codec {
       tfs(i) = in.readVarint().toInt
       dls(i) = in.readVarint().toInt
       val nPos = in.readVarint().toInt
-      if (needPositions) {
-        posOffsets(i) = posN
-        if (posN + nPos > positions.length)
-          positions = java.util.Arrays.copyOf(positions,
-            math.max(positions.length * 2, posN + nPos))
-        var j = 0
-        var prevPos = 0L
-        while (j < nPos) {
-          prevPos += in.readVarint()
-          positions(posN) = prevPos.toInt
-          posN += 1
-          j += 1
-        }
-      } else {
-        var j = 0
-        while (j < nPos) { in.skipVarint(); j += 1 }
+      if (needPositions) { posOffsets(i) = posN; posN += nPos }
+      i += 1
+    }
+    if (!needPositions) return new DecodedBlock(n, docIds, tfs, dls, null, null)
+    posOffsets(n) = posN
+    val positions = new Array[Int](posN)
+    var k = 0
+    i = 0
+    while (i < n) {
+      val end = posOffsets(i + 1)
+      var prevPos = 0L
+      while (k < end) {
+        prevPos += in.readVarint()
+        positions(k) = prevPos.toInt
+        k += 1
       }
       i += 1
     }
-    if (needPositions) posOffsets(n) = posN
     new DecodedBlock(n, docIds, tfs, dls, posOffsets, positions)
   }
 

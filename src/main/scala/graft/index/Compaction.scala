@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one shuffle of BLOCK rows keyed by docGroup (bounded by
   * docGroupSize docs regardless of term df — same skew bound as the build),
   * then a per-partition streaming decode→re-encode pass with O(blockSize)
-  * memory (BlockBuildIterator). No row ever reaches the driver; the only
+  * memory (PostingBlockIterator). No row ever reaches the driver; the only
   * driver-side state is the segment-name list (one string per micro-batch,
   * the same cardinality Retention already collects).
   *
@@ -95,6 +95,7 @@ object Compaction {
   def compact(spark: SparkSession, dir: String, blockSize: Int = 128,
       io: TableIO = ParquetTableIO): Option[String] =
     WriterLock.withLock(spark, dir) {
+      FormatVersion.require(spark, dir)
       Retention.recoverPendingExpiry(spark, dir, io)
       recoverPendingCompaction(spark, dir, io)
       val segments = io.read(spark, IndexBuilder.Layout(dir).lineage)
@@ -112,6 +113,7 @@ object Compaction {
   def expungeDeletes(spark: SparkSession, dir: String, blockSize: Int = 128,
       io: TableIO = ParquetTableIO): Option[String] =
     WriterLock.withLock(spark, dir) {
+      FormatVersion.require(spark, dir)
       Retention.recoverPendingExpiry(spark, dir, io)
       recoverPendingCompaction(spark, dir, io)
       if (Deletes.count(spark, dir, io) == 0L) return None
@@ -136,6 +138,7 @@ object Compaction {
   def compactSegments(spark: SparkSession, dir: String, chosen: Seq[String],
       blockSize: Int = 128, io: TableIO = ParquetTableIO,
       force: Boolean = false): Option[String] = WriterLock.withLock(spark, dir) {
+    FormatVersion.require(spark, dir)
     Retention.recoverPendingExpiry(spark, dir, io)
     recoverPendingCompaction(spark, dir, io)
     if (chosen.isEmpty || (chosen.distinct.size <= 1 && !force)) return None
@@ -207,6 +210,7 @@ object Compaction {
   def compactToBudget(spark: SparkSession, dir: String, maxSegments: Int,
       blockSize: Int = 128, io: TableIO = ParquetTableIO): Option[String] = WriterLock.withLock(spark, dir) {
     require(maxSegments >= 1, "maxSegments must be >= 1")
+    FormatVersion.require(spark, dir)
     Retention.recoverPendingExpiry(spark, dir, io)
     recoverPendingCompaction(spark, dir, io)
     val ordered = io.read(spark, IndexBuilder.Layout(dir).lineage)
@@ -341,8 +345,8 @@ object Compaction {
     * block rows by docGroup (<= docGroupSize docs per group by
     * construction), per-term global order restored by the in-partition sort
     * (firstDocId — blockIdx restarts per segment and only breaks ties),
-    * then streaming decode -> occurrence stream -> re-encode via the
-    * build's own BlockBuildIterator. Output stays partitioned and sorted by
+    * then streaming decode -> posting stream -> re-encode via the
+    * build's own PostingBlockIterator. Output stays partitioned and sorted by
     * docGroup, so the write needs no second shuffle. */
   private[graft] def mergedBlocks(spark: SparkSession, dir: String,
       segments: Seq[String], blockSize: Int,

@@ -17,77 +17,15 @@ case class BlockRow(
     firstDocId: Long, lastDocId: Long, n: Int, sumTf: Long,
     maxTf: Int, minTf: Int, minDl: Int, maxDl: Int, bytes: Array[Byte])
 
-/** Streaming block builder over token occurrences sorted by
-  * (field, term, docGroup, docId, pos): accumulates one posting at a time,
-  * emits a compressed block every `blockSize` postings — memory is
-  * O(blockSize), never a whole posting list. */
-final class BlockBuildIterator(
-    rows: Iterator[(String, String, Long, Long, Int, Int)],
-    blockSize: Int) extends Iterator[BlockRow] {
-
-  private val buf = rows.buffered
-  private val out = scala.collection.mutable.Queue[BlockRow]()
-
-  override def hasNext: Boolean = {
-    while (out.isEmpty && buf.hasNext) consumeKey()
-    out.nonEmpty
-  }
-  override def next(): BlockRow = {
-    if (!hasNext) throw new NoSuchElementException
-    out.dequeue()
-  }
-
-  /** Consume all rows of the next (field, term, docGroup) key, enqueueing
-    * its blocks. */
-  private def consumeKey(): Unit = {
-    val (f, t, g, _, _, _) = buf.head
-    val block = new scala.collection.mutable.ArrayBuffer[Posting](blockSize)
-    var blockIdx = 0
-
-    var curDoc = Long.MinValue
-    var curDl = 0
-    val poss = new scala.collection.mutable.ArrayBuffer[Int]()
-
-    def flushBlock(): Unit = if (block.nonEmpty) {
-      val bytes = Codec.encodeBlock(block.head.docId, block.toSeq)
-      out.enqueue(BlockRow(f, t, g, blockIdx, block.head.docId, block.last.docId,
-        block.size, block.iterator.map(_.tf.toLong).sum,
-        block.iterator.map(_.tf).max, block.iterator.map(_.tf).min,
-        block.iterator.map(_.dl).min, block.iterator.map(_.dl).max, bytes))
-      blockIdx += 1
-      block.clear()
-    }
-    def flushDoc(): Unit = if (curDoc != Long.MinValue) {
-      block += Posting(curDoc, poss.length, curDl, poss.toArray)
-      if (block.size >= blockSize) flushBlock()
-      poss.clear()
-    }
-
-    var continue = true
-    while (continue && buf.hasNext) {
-      val h = buf.head
-      if (h._1 != f || h._2 != t || h._3 != g) continue = false
-      else {
-        val (_, _, _, d, dl, p) = buf.next()
-        if (d != curDoc) { flushDoc(); curDoc = d; curDl = dl }
-        poss += p
-      }
-    }
-    flushDoc()
-    flushBlock()
-  }
-}
-
-/** Posting-grained sibling of [[BlockBuildIterator]]: consumes ONE row per
-  * (field, term, docGroup, docId) carrying the doc's ascending positions
+/** Streaming block builder: consumes ONE row per (field, term, docGroup,
+  * docId), sorted by that key, carrying the doc's ascending positions
   * array — exactly the shape the build's packed shuffle rows and the
-  * compaction decode already produce — and emits byte-identical blocks.
-  * The occurrence-grained iterator forced callers to first EXPLODE each
-  * posting into one 6-tuple per position (~avg-tf× the posting count of
-  * short-lived allocations in the tightest build loop) and then re-gather
-  * the positions into a buffer; this one appends the posting directly and
-  * computes the block statistics in a single pass. Output equivalence with
-  * [[BlockBuildIterator]] is differential-tested (CodecSpec). */
+  * compaction decode produce — and emits a compressed block every
+  * `blockSize` postings, computing the block statistics in a single pass.
+  * Memory is O(blockSize), never a whole posting list. Every posting must
+  * satisfy tf == positions.length >= 1 (tf is the position count). Output
+  * is differential-tested against an occurrence-grained reference builder
+  * (CodecSpec). */
 final class PostingBlockIterator(
     rows: Iterator[(String, String, Long, Long, Int, Array[Int])],
     blockSize: Int) extends Iterator[BlockRow] {
@@ -140,6 +78,9 @@ final class PostingBlockIterator(
       if (h._1 != f || h._2 != t || h._3 != g) continue = false
       else {
         val (_, _, _, d, dl, ps) = buf.next()
+        require(ps != null && ps.length >= 1,
+          s"posting ($f, $t, docGroup $g, docId $d) has no positions: " +
+            "tf == positions.length >= 1 is required")
         block += Posting(d, ps.length, dl, ps)
         if (block.size >= blockSize) flushBlock()
       }
@@ -342,6 +283,7 @@ object IndexBuilder {
       params: Params = Params()): Unit = WriterLock.withLock(spark, dir) {
     params.io.drop(spark, dir) // takes the lock file with it
     WriterLock.reassert(spark, dir)
+    FormatVersion.write(spark, dir)
     buildGroups(spark, corpus, dir, params, resume = false)
   }
 
@@ -352,6 +294,7 @@ object IndexBuilder {
     * indistinguishable from a from-scratch build of the union. */
   def resume(spark: SparkSession, corpus: DataFrame, dir: String,
       params: Params = Params()): Unit = WriterLock.withLock(spark, dir) {
+    FormatVersion.requireOrCreate(spark, dir)
     // appending changes the live (key -> docId, sha) view without
     // maintaining the upsert keymap: drop its validity marker FIRST so a
     // later Upsert probes ground truth (KeyMap crash-ordering contract)

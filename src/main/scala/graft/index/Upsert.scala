@@ -136,6 +136,7 @@ object Upsert {
     require(keyCols.nonEmpty, "upsert needs at least one natural-key column")
     require(!corpus.columns.contains("docId"),
       "upsert assigns docIds itself — the incoming batch must not carry one")
+    FormatVersion.requireOrCreate(spark, dir)
     val io = params.io
     val layout = IndexBuilder.Layout(dir)
     val keyCs = keyCols.map(col)

@@ -17,6 +17,7 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     // no driver/executor-resident set (DeleteSpec exercises the fallback)
     val maxBroadcastTombstones: Long = SearchIndex.MaxBroadcastTombstones) {
   private val layout = IndexBuilder.Layout(dir)
+  graft.index.FormatVersion.require(spark, dir)
   // crash-recovery sweep: a _pending_expiry marker means a Retention expiry
   // died between its partition deletes and the derived-table refresh — the
   // derived df/avgdl would silently reference expired segments; a
@@ -435,29 +436,54 @@ object QueryEngine {
         phraseIdf, index.blocksDecoded, index.deletesBroadcast)
   }
 
-  /** Phrase tfNorm arm shared by all paths (fixed op order). */
-  private[query] def phraseScore(pTerms: Array[String], byTerm: Map[String, Array[Int]],
-      dl: Int, avgdl: Double, pb: Double, phraseIdf: Double, p: BM25.Params): Double = {
-    if (!pTerms.forall(byTerm.contains)) return 0.0
-    val occ = countPhrase(pTerms, byTerm)
+  /** Phrase tfNorm arm shared by all paths (fixed op order). Phrase term
+    * `i`'s positions are the slice `pos(i)[from(i), to(i))`; a null
+    * `pos(i)` means the doc lacks that term. */
+  private[query] def phraseScore(pos: Array[Array[Int]], from: Array[Int],
+      to: Array[Int], dl: Int, avgdl: Double, pb: Double, phraseIdf: Double,
+      p: BM25.Params): Double = {
+    var i = 0
+    while (i < pos.length) { if (pos(i) == null) return 0.0; i += 1 }
+    val occ = countPhrase(pos, from, to)
     if (occ == 0) 0.0
     else pb * phraseIdf *
       (occ * (p.k1 + 1.0) / (occ + p.k1 * (1.0 - p.b + p.b * dl / avgdl)))
   }
 
-  def countPhrase(pTerms: Array[String], byTerm: Map[String, Array[Int]]): Int = {
-    val first = byTerm(pTerms.head)
+  /** [[phraseScore]] over whole per-term position arrays. */
+  private[query] def phraseScore(pTerms: Array[String], byTerm: Map[String, Array[Int]],
+      dl: Int, avgdl: Double, pb: Double, phraseIdf: Double, p: BM25.Params): Double = {
+    val pos = pTerms.map(t => byTerm.getOrElse(t, null))
+    phraseScore(pos, new Array[Int](pos.length),
+      pos.map(a => if (a == null) 0 else a.length), dl, avgdl, pb, phraseIdf, p)
+  }
+
+  /** Occurrences of the phrase: start positions `p0` of term 0 such that
+    * term `i` occurs at `p0 + i` for every `i`. Term `i`'s ascending
+    * positions are the slice `pos(i)[from(i), to(i))`. */
+  def countPhrase(pos: Array[Array[Int]], from: Array[Int], to: Array[Int]): Int = {
+    val first = pos(0)
     var occ = 0
-    first.foreach { p0 =>
+    var k = from(0)
+    while (k < to(0)) {
+      val p0 = first(k)
       var ok = true
       var i = 1
-      while (ok && i < pTerms.length) {
-        if (java.util.Arrays.binarySearch(byTerm(pTerms(i)), p0 + i) < 0) ok = false
+      while (ok && i < pos.length) {
+        if (java.util.Arrays.binarySearch(pos(i), from(i), to(i), p0 + i) < 0) ok = false
         i += 1
       }
       if (ok) occ += 1
+      k += 1
     }
     occ
+  }
+
+  /** [[countPhrase]] over whole per-term position arrays; every phrase
+    * term must be present in `byTerm`. */
+  def countPhrase(pTerms: Array[String], byTerm: Map[String, Array[Int]]): Int = {
+    val pos = pTerms.map(byTerm)
+    countPhrase(pos, new Array[Int](pos.length), pos.map(_.length))
   }
 
   // ---------------------------------------------------------------- exhaustive
@@ -566,43 +592,79 @@ object QueryEngine {
     }
   }
 
-  /** Bounded heap keeping top-m by (score desc, docId asc); head of the
-    * underlying priority queue is the current WORST kept entry. */
+  /** Bounded heap keeping top-m by (score desc, docId asc): a binary
+    * max-heap by "worse" over parallel docId/score arrays, so its root is
+    * the current WORST kept entry. "Worse" is the (-score, docId) order
+    * with `java.lang.Double.compare` on the negated score: a smaller score
+    * (with -0.0 below 0.0), then a larger docId. */
   private[query] final class BoundedTopK(m: Int) {
-    // "worse" = smaller score, then larger docId; pq is a max-heap by this
-    // ordering, so pq.head is the worst kept entry.
-    private val worseFirst = Ordering.by[(Long, Double), (Double, Long)] {
-      case (d, s) => (-s, d)
-    }
-    private val pq = scala.collection.mutable.PriorityQueue.empty[(Long, Double)](worseFirst)
+    private var docs = new Array[Long](math.max(0, math.min(m, 64)))
+    private var scores = new Array[Double](docs.length)
+    private var size = 0
     /** docs actually scored (heap.add calls) — the WAND pruning metric:
       * exhaustive scores every posting's doc; WAND skips the ones whose
       * bound can't reach the floor. */
     var scored: Long = 0L
-    def full: Boolean = pq.size >= m
-    def floor: Double = if (full) pq.head._2 else Double.NegativeInfinity
+    def full: Boolean = size >= m
+    def floor: Double = if (full) scores(0) else Double.NegativeInfinity
+    private def worse(i: Int, j: Int): Boolean = {
+      val c = java.lang.Double.compare(-scores(i), -scores(j))
+      c > 0 || (c == 0 && docs(i) > docs(j))
+    }
+    private def swap(i: Int, j: Int): Unit = {
+      val d = docs(i); docs(i) = docs(j); docs(j) = d
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+    }
     def add(docId: Long, s: Double): Unit = {
       scored += 1
-      if (!full) pq.enqueue((docId, s))
-      else {
-        val (wd, ws) = pq.head
-        if (s > ws || (s == ws && docId < wd)) { pq.dequeue(); pq.enqueue((docId, s)) }
+      if (!full) {
+        if (size == docs.length) {
+          val cap = math.min(m, docs.length * 2)
+          docs = java.util.Arrays.copyOf(docs, cap)
+          scores = java.util.Arrays.copyOf(scores, cap)
+        }
+        docs(size) = docId; scores(size) = s
+        var i = size
+        size += 1
+        while (i > 0 && worse(i, (i - 1) >>> 1)) { swap(i, (i - 1) >>> 1); i = (i - 1) >>> 1 }
+      } else {
+        val wd = docs(0)
+        val ws = scores(0)
+        if (s > ws || (s == ws && docId < wd)) {
+          docs(0) = docId; scores(0) = s
+          var i = 0
+          var done = false
+          while (!done) {
+            val l = 2 * i + 1
+            val r = l + 1
+            var w = i
+            if (l < size && worse(l, w)) w = l
+            if (r < size && worse(r, w)) w = r
+            if (w == i) done = true else { swap(i, w); i = w }
+          }
+        }
       }
     }
-    def results: Seq[(Long, Double)] = pq.toSeq
+    def results: Seq[(Long, Double)] = Seq.tabulate(size)(i => (docs(i), scores(i)))
   }
 
   private final class TermCursor(val field: String, val term: String,
-      blockList: IndexedSeq[BlockRow], weight: Double, avgdl: Double,
+      blockList: Array[BlockRow], weight: Double, avgdl: Double,
       p: BM25.Params, onDecode: () => Unit, needPositions: Boolean = false) {
+    private val nBlocks = blockList.length
+    private val lastDocs: Array[Long] = blockList.map(_.lastDocId)
     private var bi = 0
     private var decoded: Codec.DecodedBlock = _
     private var pi = 0
+    /** [[currentDoc]], kept in step with (bi, pi): the block's firstDocId
+      * until the block is decoded (exact at block start), then the decoded
+      * docId; Long.MaxValue once exhausted. */
+    private var cur: Long = if (nBlocks == 0) Long.MaxValue else blockList(0).firstDocId
     private val blockUbs: Array[Double] = blockList.map { b =>
       val maxN = BM25.tfNorm(b.maxTf, b.minDl, avgdl, p)
       val minN = BM25.tfNorm(b.minTf, b.maxDl, avgdl, p)
       BM25.blockUpperBound(weight, maxN, minN) // weight = boost*idf (signed)
-    }.toArray
+    }
     /** suffix max of blockUbs (clamped at 0 — a term can contribute nothing
       * by simply not matching). */
     private val suffixUb: Array[Double] = {
@@ -612,12 +674,16 @@ object QueryEngine {
       while (i >= 0) { acc = math.max(acc, blockUbs(i)); out(i) = acc; i -= 1 }
       out
     }
-    def exhausted: Boolean = bi >= blockList.length
+    def exhausted: Boolean = bi >= nBlocks
     def remainingUb: Double = if (exhausted) 0.0 else math.max(0.0, suffixUb(bi))
     /** Exact UB of this term's contribution to any doc in the CURRENT block
       * (may be negative under negative idf) — the block-max refinement. */
     def currentBlockUb: Double = blockUbs(bi)
-    def currentBlockLast: Long = blockList(bi).lastDocId
+    def currentBlockLast: Long = lastDocs(bi)
+    private def toBlock(b: Int): Unit = {
+      bi = b; decoded = null; pi = 0
+      cur = if (b < nBlocks) blockList(b).firstDocId else Long.MaxValue
+    }
     private def ensureDecoded(): Unit =
       if (decoded == null) {
         val b = blockList(bi)
@@ -626,13 +692,15 @@ object QueryEngine {
         // for phrase-scored terms) — values identical to Codec.decodeBlock
         decoded = Codec.decodeBlockColumnar(b.firstDocId, b.bytes, needPositions)
         pi = 0
+        if (decoded.n > 0) cur = decoded.docIds(0)
       }
-    def currentDoc: Long =
-      if (exhausted) Long.MaxValue
-      else if (decoded == null) blockList(bi).firstDocId // lower bound is exact at block start
-      else decoded.docIds(pi)
+    def currentDoc: Long = cur
     def currentDl: Int = { ensureDecoded(); decoded.dls(pi) }
-    def currentPositions: Array[Int] = { ensureDecoded(); decoded.positionsOf(pi) }
+    /** The current posting's positions are `currentPositions[currentPosFrom,
+      * currentPosTo)` — valid only for a cursor decoding positions. */
+    def currentPositions: Array[Int] = { ensureDecoded(); decoded.positions }
+    def currentPosFrom: Int = { ensureDecoded(); decoded.posOffsets(pi) }
+    def currentPosTo: Int = { ensureDecoded(); decoded.posOffsets(pi + 1) }
     def contributionAtCurrent: Double = {
       ensureDecoded()
       weight * BM25.tfNorm(decoded.tfs(pi), decoded.dls(pi), avgdl, p)
@@ -640,7 +708,7 @@ object QueryEngine {
     def advance(): Unit = {
       ensureDecoded()
       pi += 1
-      if (pi >= decoded.n) { bi += 1; decoded = null; pi = 0 }
+      if (pi >= decoded.n) toBlock(bi + 1) else cur = decoded.docIds(pi)
     }
     /** First doc >= target, skipping whole blocks WITHOUT decoding them:
       * binary search over the block list by lastDocId (the skip-list role of
@@ -649,25 +717,27 @@ object QueryEngine {
       * block. */
     @scala.annotation.tailrec
     def advanceTo(target: Long): Unit = {
-      if (!exhausted && blockList(bi).lastDocId < target) {
+      if (!exhausted && lastDocs(bi) < target) {
         var lo = bi + 1
-        var hi = blockList.length
+        var hi = nBlocks
         while (lo < hi) {
           val mid = (lo + hi) >>> 1
-          if (blockList(mid).lastDocId < target) lo = mid + 1 else hi = mid
+          if (lastDocs(mid) < target) lo = mid + 1 else hi = mid
         }
-        bi = lo; decoded = null; pi = 0
+        toBlock(lo)
       }
       if (!exhausted) {
         ensureDecoded()
+        val ids = decoded.docIds
         var lo = pi
         var hi = decoded.n
         while (lo < hi) {
           val mid = (lo + hi) >>> 1
-          if (decoded.docIds(mid) < target) lo = mid + 1 else hi = mid
+          if (ids(mid) < target) lo = mid + 1 else hi = mid
         }
         pi = lo
-        if (pi >= decoded.n) { bi += 1; decoded = null; pi = 0; advanceTo(target) }
+        if (pi >= decoded.n) { toBlock(bi + 1); advanceTo(target) }
+        else cur = ids(pi)
       }
     }
   }
@@ -688,13 +758,22 @@ object QueryEngine {
       .groupBy(b => (b.field, b.term)).toArray
       .sortBy(_._1)
       .map { case ((f, t), bl) =>
-        new TermCursor(f, t, bl.sortBy(b => (b.firstDocId, b.blockIdx)).toIndexedSeq,
+        new TermCursor(f, t, bl.sortBy(b => (b.firstDocId, b.blockIdx)).toArray,
           weights((f, t)), avgdls(f), p, onDecode,
           needPositions = phraseOn && f == pf && pTerms.contains(t))
       }
 
     // whole-group skip (strict: boundary ties must still be scored)
     if (heap.full && cursors.map(_.remainingUb).sum + phraseUb < heap.floor) return
+
+    // phrase slots, resolved once per group: phraseCursor(i) is the cursor
+    // of phrase term i (-1 when the group has no block of it); the scratch
+    // slices below are refilled per scored doc, never reallocated
+    val phraseCursor = if (!phraseOn) Array.empty[Int]
+      else pTerms.map(t => cursors.indexWhere(c => c.field == pf && c.term == t))
+    val phPos = new Array[Array[Int]](phraseCursor.length)
+    val phFrom = new Array[Int](phraseCursor.length)
+    val phTo = new Array[Int](phraseCursor.length)
 
     // The document-at-a-time loop below runs once per pivot step — tens of
     // thousands of times per query on the serving tier — so the live-cursor
@@ -805,22 +884,40 @@ object QueryEngine {
                 while (j < a) { work(j).advanceTo(dNext); j += 1 }
               } else {
                 var score = 0.0
-                var phrasePositions: Map[String, Array[Int]] = Map.empty
-                var dlPhrase = 0
-                cursors.foreach { c =>
-                  if (!c.exhausted && c.currentDoc == pivotDoc) {
+                ci = 0
+                while (ci < cursors.length) {
+                  val c = cursors(ci)
+                  if (!c.exhausted && c.currentDoc == pivotDoc)
                     score += c.contributionAtCurrent
-                    if (phraseOn && c.field == pf && pTerms.contains(c.term)) {
-                      phrasePositions += (c.term -> c.currentPositions)
+                  ci += 1
+                }
+                if (phraseOn) {
+                  // every phrase term present at the doc has the doc's
+                  // phrase-field length; an absent one scores the phrase 0
+                  var dlPhrase = 0
+                  j = 0
+                  while (j < phraseCursor.length) {
+                    val pc = phraseCursor(j)
+                    val c = if (pc < 0) null else cursors(pc)
+                    if (c == null || c.exhausted || c.currentDoc != pivotDoc) phPos(j) = null
+                    else {
+                      phPos(j) = c.currentPositions
+                      phFrom(j) = c.currentPosFrom
+                      phTo(j) = c.currentPosTo
                       dlPhrase = c.currentDl
                     }
+                    j += 1
                   }
-                }
-                if (phraseOn)
-                  score += phraseScore(pTerms, phrasePositions, dlPhrase,
+                  score += phraseScore(phPos, phFrom, phTo, dlPhrase,
                     avgdls(pf), pb, phraseIdf, p)
+                }
                 heap.add(pivotDoc, score)
-                cursors.foreach(c => if (!c.exhausted && c.currentDoc == pivotDoc) c.advance())
+                ci = 0
+                while (ci < cursors.length) {
+                  val c = cursors(ci)
+                  if (!c.exhausted && c.currentDoc == pivotDoc) c.advance()
+                  ci += 1
+                }
               }
             } else {
               var j = 0

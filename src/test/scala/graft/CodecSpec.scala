@@ -59,6 +59,59 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  /** The header region an encoder must produce: varint n, then docDelta,
+    * tf, dl, nPos per posting. */
+  private def headerOf(first: Long, ps: Seq[Posting]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Codec.writeVarint(out, ps.size.toLong)
+    var prev = first
+    ps.foreach { p =>
+      Codec.writeVarint(out, p.docId - prev); prev = p.docId
+      Codec.writeVarint(out, p.tf.toLong)
+      Codec.writeVarint(out, p.dl.toLong)
+      Codec.writeVarint(out, p.positions.length.toLong)
+    }
+    out.toByteArray
+  }
+
+  test("no-positions decode never reads the positions region " +
+      "(every byte after the header overwritten, 300 random blocks)") {
+    val rnd = new Random(777)
+    var checked = 0
+    (1 to 300).foreach { _ =>
+      val ps = randomPostings(rnd)
+      if (ps.nonEmpty) {
+        val first = ps.head.docId
+        val bytes = Codec.encodeBlock(first, ps)
+        val header = headerOf(first, ps)
+        assert(bytes.take(header.length).sameElements(header),
+          "block does not start with the header region")
+        if (bytes.length > header.length) checked += 1
+        // all-0xFF reads as one unterminated varint, random bytes as garbage
+        for (fill <- Seq((_: Int) => 0xff.toByte, (_: Int) => rnd.nextInt(256).toByte)) {
+          val clobbered = bytes.clone()
+          (header.length until clobbered.length).foreach(i => clobbered(i) = fill(i))
+          val col = Codec.decodeBlockColumnar(first, clobbered, needPositions = false)
+          assert(col.n == ps.length)
+          ps.zipWithIndex.foreach { case (p, i) =>
+            assert(col.docIds(i) == p.docId && col.tfs(i) == p.tf && col.dls(i) == p.dl)
+          }
+        }
+      }
+    }
+    assert(checked > 200, s"only $checked blocks had a positions region")
+  }
+
+  test("PostingBlockIterator rejects a posting without positions " +
+      "(tf == positions.length >= 1)") {
+    import graft.index.PostingBlockIterator
+    val rows = Seq(("content", "t", 0L, 5L, 10, Array(1, 4)),
+      ("content", "t", 0L, 6L, 10, Array.empty[Int]))
+    val e = intercept[IllegalArgumentException](
+      new PostingBlockIterator(rows.iterator, 128).toList)
+    assert(e.getMessage.contains("docId 6"), e.getMessage)
+  }
+
   test("encoder rejects unsorted postings") {
     val bad = Seq(Posting(10, 1, 5, Array()), Posting(9, 1, 5, Array()))
     intercept[IllegalArgumentException](Codec.encodeBlock(10, bad))
