@@ -170,9 +170,15 @@ object BenchExtra {
           def fmt(df: org.apache.spark.sql.DataFrame): String =
             df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
-          def dump(name: String, header: String, body: String): Unit =
+          // a "before" plan is the old expression rebuilt on the current
+          // code, so its header says where it came from
+          def dump(name: String, header: String, body: String): Unit = {
+            val origin = if (name.endsWith("_before"))
+              "# reconstructed by the r6 code, not captured from the parent build\n"
+            else ""
             Files.write(outDir.resolve(s"$name.txt"),
-              (s"# $header\n\n$body\n").getBytes("UTF-8"))
+              (s"# $header\n$origin\n$body\n").getBytes("UTF-8"))
+          }
           val params = IndexBuilder.Params(blockSize = 128, docGroupSize = 8192L,
             fields = Seq("content"))
           val dir = "/tmp/graft-benchextra/plans-index"

@@ -330,14 +330,10 @@ object Compaction {
         .repartition(col("docGroup")).sortWithinPartitions("docId"),
       layout.docs, Seq("docGroup", "segment"))
 
-    // merged segment keeps the table's nBytes discipline: write the column
-    // iff the surviving files carry it (mixed per-file schemas poison reads)
-    val merged0 = mergedBlocks(spark, dir, segments, blockSize, io)
+    // the merged segment stores nBytes like every build (buildGroups)
+    val merged = mergedBlocks(spark, dir, segments, blockSize, io)
       .toDF().withColumn("segment", lit(newSeg))
-    val merged =
-      if (io.read(spark, layout.postings).columns.contains("nBytes"))
-        merged0.withColumn("nBytes", length(col("bytes")))
-      else merged0
+      .withColumn("nBytes", length(col("bytes")))
     io.overwritePartitions(merged, layout.postings, Seq("docGroup", "segment"))
   }
 
@@ -424,7 +420,7 @@ object Compaction {
       .join(
         segPostings.groupBy($"docGroup")
           .agg(sum($"n").as("p_"),
-            sum(IndexBuilder.blockLen(segPostings)).as("b_"),
+            sum($"nBytes").as("b_"),
             countDistinct($"term").as("f_")),
         Seq("docGroup"), "left_outer")
       .join(carried, Seq("docGroup"), "left_outer")

@@ -543,19 +543,15 @@ object IndexBuilder {
     // dictionary/metrics derivation) stay METADATA-only scans — without it
     // each `sum(length(bytes))` re-reads the whole compressed index (the
     // `bytes` column is ~95% of the table's bytes) right after writing it.
-    // Appends to a pre-nBytes index skip the column (mixed per-file schemas
-    // poison parquet reads); aggregates fall back to length(bytes) there.
+    // Every writer stores it (the format stamp refuses older layouts).
+    //
     // a postings-side failure must still AWAIT the side-thread docs write
     // before propagating — an abandoned in-flight write racing an
     // in-process retry would be a same-holder writer overlap the lock
     // cannot see
     try {
-      val writeNBytes = !(resume && io.exists(spark, layout.postings)) ||
-        io.read(spark, layout.postings).columns.contains("nBytes")
-      val blocksOut0 = blocks.toDF().withColumn("segment", lit(segment))
-      val blocksOut =
-        if (writeNBytes) blocksOut0.withColumn("nBytes", length($"bytes"))
-        else blocksOut0
+      val blocksOut = blocks.toDF().withColumn("segment", lit(segment))
+        .withColumn("nBytes", length($"bytes"))
       io.overwritePartitions(
         if (fused) blocksOut
         else blocksOut.repartition(col("docGroup"))
@@ -596,7 +592,7 @@ object IndexBuilder {
         min($"shaOk").as("shaOk"))
       .join(
         segPostings.groupBy($"docGroup")
-          .agg(sum($"n").as("p_"), sum(blockLen(allBlocks)).as("b_"),
+          .agg(sum($"n").as("p_"), sum($"nBytes").as("b_"),
             countDistinct($"term").as("f_")),
         Seq("docGroup"), "left_outer")
       .withColumn("postingsEmitted", coalesce($"p_", lit(0L)))
@@ -623,18 +619,6 @@ object IndexBuilder {
     }
     } finally if (opaqueInput) { staged.unpersist(false); () }
   }
-
-  /** Compressed payload length of a block row: the stored `nBytes` column
-    * when the table carries it, else `length(bytes)`. The stored column is
-    * used ALONE — a `coalesce(nBytes, length(bytes))` fallback was measured
-    * to defeat the whole point (the scan must still read the `bytes` column
-    * to evaluate the fallback arm; see plans/r06). Safe because the writers
-    * keep tables unmixed by construction: a fresh build always writes
-    * nBytes, and every append/compaction writes it iff the existing files
-    * carry it (buildGroups / Compaction.writeCompactedSegment). */
-  private[graft] def blockLen(blocks: DataFrame): Column =
-    if (blocks.columns.contains("nBytes")) col("nBytes")
-    else length(col("bytes"))
 
   /** Re-derive dictionary, stats and metrics from the CURRENT docs/postings
     * tables (fields inferred from the docs schema's dl_ columns) — the
@@ -717,7 +701,7 @@ object IndexBuilder {
       .agg(sum($"n").as("df"), sum($"sumTf").as("totalTf"),
         count(lit(1)).as("nBlocks"), max($"maxTf").as("maxTf"),
         min($"minDl").as("minDl"),
-        countDistinct($"docGroup").as("g"), sum(blockLen(allBlocks)).as("bc"),
+        countDistinct($"docGroup").as("g"), sum($"nBytes").as("bc"),
         sum(lit(16L) * $"n" + lit(4L) * $"sumTf").as("raw"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // provision at PHYSICAL-PARTITION grain: rows land in (tlen, termBucket)
@@ -910,7 +894,7 @@ object IndexBuilder {
         min($"minDl").as("minDl2"),
         // metrics contributions ride the same scan (bc2/raw2 roll up below
         // instead of a second segment aggregation)
-        sum(blockLen(segBlocks)).as("bc2"),
+        sum($"nBytes").as("bc2"),
         sum(lit(16L) * $"n" + lit(4L) * $"sumTf").as("raw2"))
       .withColumn("tlen", length($"term"))
       .withColumn("termBucket", termBucketCol(nBuckets))

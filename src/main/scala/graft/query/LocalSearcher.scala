@@ -30,7 +30,12 @@ object LocalSearcher {
   case class Hit(rank: Int, docId: Long, score: Double, repo: String,
       path: String, lang: String, qualityScore: Double, repoScore: Double)
 
-  /** In-memory image of an index dir (blocks remain varint-compressed).
+  /** In-memory image of an index dir (blocks remain varint-compressed),
+    * filled on demand. A cold query pays two sequential Spark jobs: the
+    * dictionary and block probes side by side ([[termData]]), then the
+    * page-metadata probe ([[docsOf]]); a warm one runs no job and starts
+    * no thread.
+    *
     * With `shard = Some((i, n))` the image holds only docGroups with
     * `docGroup % n == i` — the loading scan is partition-pruned on the
     * docGroup partition key, so a serving node reads ONLY its shard's
@@ -69,9 +74,9 @@ object LocalSearcher {
       * queries actually touch, NEVER the full vocabulary (at 10^9 terms a
       * per-shard dictionary map is tens of GB; the global df a shard needs
       * for bit-identical scores is exactly its queries' terms). Misses are
-      * fetched in ONE pruned probe per query (tlen + term predicates reach
-      * the scan) and ABSENT terms are cached too (None), so unknown-term
-      * queries don't re-probe. LRU-bounded; `residentDictTerms` reports the
+      * fetched in one pruned probe (tlen + term predicates reach the scan)
+      * and ABSENT terms are cached too (None), so unknown-term queries
+      * don't re-probe. LRU-bounded; `residentDictTerms` reports the
       * footprint (BENCH counter). */
     private val dictCacheMax = 1 << 20
     private val dictCache =
@@ -82,13 +87,21 @@ object LocalSearcher {
       }
     def residentDictTerms: Int = dictCache.synchronized(dictCache.size())
     def dfs(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] = {
-      val keys = for (f <- fields; t <- terms) yield (f, t)
-      // snapshot hit VALUES in the same critical section that detects the
-      // misses: under concurrent serving at the cache cap, an entry seen by
-      // containsKey can be evicted before a later read, and re-reading would
-      // silently drop that term's df from the query (nondeterministic
-      // scores). Hits come from the snapshot, misses from this probe.
-      val (hits, misses) = dictCache.synchronized {
+      val (hits, misses) = dictSplit(keysOf(fields, terms))
+      dfsOf(fields, hits, misses)
+    }
+
+    private def keysOf(fields: Seq[String], terms: Seq[String]): Seq[(String, String)] =
+      for (f <- fields; t <- terms) yield (f, t)
+
+    // snapshot hit VALUES in the same critical section that detects the
+    // misses: under concurrent serving at the cache cap, an entry seen by
+    // containsKey can be evicted before a later read, and re-reading would
+    // silently drop that term's df from the query (nondeterministic
+    // scores). Hits come from the snapshot, misses from the probe.
+    private def dictSplit(keys: Seq[(String, String)])
+        : (Seq[((String, String), Option[Long])], Seq[(String, String)]) =
+      dictCache.synchronized {
         val h = Seq.newBuilder[((String, String), Option[Long])]
         val m = Seq.newBuilder[(String, String)]
         keys.foreach { k =>
@@ -97,6 +110,11 @@ object LocalSearcher {
         }
         (h.result(), m.result())
       }
+
+    /** The df map from a [[dictSplit]]: hits as snapshotted, misses probed
+      * and cached (absent terms as None). */
+    private def dfsOf(fields: Seq[String], hits: Seq[((String, String), Option[Long])],
+        misses: Seq[(String, String)]): Map[(String, String), Long] = {
       val probed =
         if (misses.isEmpty) Map.empty[(String, String), Long]
         else {
@@ -114,13 +132,13 @@ object LocalSearcher {
       * used to load ALL its blocks at open, so its memory was bounded only
       * by adding shards; now a node holds at most `blockCacheBytes` of
       * compressed postings (LRU, default unbounded = the old resident
-      * posture after warm-up), misses are fetched in ONE probe per query
-      * (the postings files are sorted by (field, term) within each
-      * partition, so parquet row-group stats skip non-matching groups), and
-      * ABSENT terms cache as empty arrays so unknown-term queries don't
-      * re-probe. Eviction can never corrupt an in-flight query: the fetched
-      * arrays stay referenced by the query's own map; eviction only drops
-      * the cache's reference. */
+      * posture after warm-up), misses are fetched in one probe (the
+      * postings files are sorted by (field, term) within each partition,
+      * so parquet row-group stats skip non-matching groups), and ABSENT
+      * terms cache as empty arrays so unknown-term queries don't re-probe.
+      * Eviction can never corrupt an in-flight query: the fetched arrays
+      * stay referenced by the query's own map; eviction only drops the
+      * cache's reference. */
     private val blockCache =
       new _root_.java.util.LinkedHashMap[(String, String), Array[BlockRow]](16, 0.75f, true)
     private var blockCacheBytesUsed = 0L
@@ -145,8 +163,9 @@ object LocalSearcher {
         .view.mapValues(_.sortBy(b => (b.docGroup, b.firstDocId, b.blockIdx))).toMap
     }
 
-    def blocksOf(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] = {
-      val (hits, misses) = blockCache.synchronized {
+    private def blockSplit(keys: Seq[(String, String)])
+        : (Seq[((String, String), Array[BlockRow])], Seq[(String, String)]) =
+      blockCache.synchronized {
         val h = Seq.newBuilder[((String, String), Array[BlockRow])]
         val m = Seq.newBuilder[(String, String)]
         keys.foreach { k =>
@@ -155,31 +174,79 @@ object LocalSearcher {
         }
         (h.result(), m.result())
       }
-      val fetched =
-        if (misses.isEmpty) Map.empty[(String, String), Array[BlockRow]]
-        else {
-          val p = fetchBlocks(misses)
-          val entries = misses.map(k => k -> p.getOrElse(k, Array.empty[BlockRow]))
-          blockCache.synchronized {
-            entries.foreach { case (k, v) =>
-              val prev = blockCache.put(k, v)
-              blockCacheBytesUsed +=
-                v.iterator.map(_.bytes.length.toLong).sum -
-                  (if (prev == null) 0L
-                   else prev.iterator.map(_.bytes.length.toLong).sum)
-            }
-            // evict eldest until under budget — never below the entries a
-            // single query needs (they are already referenced by `entries`)
-            val it = blockCache.entrySet().iterator()
-            while (blockCacheBytesUsed > blockCacheBytes && it.hasNext) {
-              val e = it.next()
-              blockCacheBytesUsed -= e.getValue.iterator.map(_.bytes.length.toLong).sum
-              it.remove()
-            }
-          }
-          entries.toMap
+
+    /** Fetch `misses` (non-empty) in one probe and cache them, absent keys
+      * as empty arrays. */
+    private def fetchAndCache(misses: Seq[(String, String)])
+        : Map[(String, String), Array[BlockRow]] = {
+      val p = fetchBlocks(misses)
+      val entries = misses.map(k => k -> p.getOrElse(k, Array.empty[BlockRow]))
+      blockCache.synchronized {
+        entries.foreach { case (k, v) =>
+          val prev = blockCache.put(k, v)
+          blockCacheBytesUsed +=
+            v.iterator.map(_.bytes.length.toLong).sum -
+              (if (prev == null) 0L
+               else prev.iterator.map(_.bytes.length.toLong).sum)
         }
-      hits.toMap ++ fetched
+        // evict eldest until under budget — never below the entries a
+        // single query needs (they are already referenced by `entries`)
+        val it = blockCache.entrySet().iterator()
+        while (blockCacheBytesUsed > blockCacheBytes && it.hasNext) {
+          val e = it.next()
+          blockCacheBytesUsed -= e.getValue.iterator.map(_.bytes.length.toLong).sum
+          it.remove()
+        }
+      }
+      entries.toMap
+    }
+
+    def blocksOf(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] = {
+      val (hits, misses) = blockSplit(keys)
+      if (misses.isEmpty) hits.toMap else hits.toMap ++ fetchAndCache(misses)
+    }
+
+    /** Cold calls of [[termData]] that ran the block probe on a side
+      * thread (a warm call never does). */
+    val sideProbes = new _root_.java.util.concurrent.atomic.AtomicLong(0L)
+
+    /** A query's term data: the df of every (field, term) the dictionary
+      * holds, and the blocks of each of those keys.
+      *
+      * With every dictionary entry cached this is exactly
+      * `blocksOf(dfs(...).keys)`. A cold call (some dictionary miss) runs
+      * the two probes side by side instead of back to back: blocks are
+      * keyed by (field, term), so they need not wait for the df answer.
+      * The block probe for every uncached key of the query runs on a side
+      * thread while the dictionary probe runs on the caller; keys the
+      * dictionary lacks come back with no blocks and cache as empty
+      * arrays. The side thread is joined before anything returns or is
+      * rethrown, and its own failure is rethrown as is. It is a fresh
+      * thread, never a pool task: it inherits the caller's Spark local
+      * properties (job group, scheduler pool), and [[searchSharded]]
+      * already runs this on the scatter pool, where a nested submit could
+      * deadlock. */
+    def termData(fields: Seq[String], terms: Seq[String])
+        : (Map[(String, String), Long], Map[(String, String), Array[BlockRow]]) = {
+      val keys = keysOf(fields, terms)
+      val (dictHits, dictMisses) = dictSplit(keys)
+      if (dictMisses.isEmpty) {
+        val dfs = dfsOf(fields, dictHits, Nil)
+        (dfs, blocksOf(dfs.keys.toSeq))
+      } else {
+        val (blockHits, blockMisses) = blockSplit(keys)
+        val side =
+          if (blockMisses.isEmpty) None
+          else {
+            sideProbes.incrementAndGet()
+            Some(new SideProbe(fetchAndCache(blockMisses)))
+          }
+        val dfs =
+          try dfsOf(fields, dictHits, dictMisses)
+          catch { case t: Throwable => side.foreach(_.await()); throw t }
+        val blocks = blockHits.toMap ++ side.fold(Map.empty[(String, String), Array[BlockRow]])(_.get())
+        (dfs, blocks.filter { case (k, _) => dfs.contains(k) })
+      }
     }
 
     /** Single-key convenience for probes/tests. */
@@ -191,9 +258,13 @@ object LocalSearcher {
       * for the ≤ k·overfetch page, so the full-table at-open collect (the
       * last unbounded-at-open structure in the serving tier) is now the
       * same pruned-probe + LRU shape as [[dfs]]/[[blocksOf]]. Misses are
-      * fetched in ONE probe per page — `docId IN (...)` reaches the scan,
-      * and docs files are sorted by docId within partitions, so parquet
-      * row-group stats skip — and `docCacheEntries` bounds residency
+      * fetched in one probe per page — `docId IN (...)` reaches the scan
+      * (PushedFilters), and docs files are sorted by docId within
+      * partitions, so parquet row-group stats skip. Above
+      * `spark.sql.parquet.pushdown.inFilterThreshold` (10) ids — a full
+      * k·overfetch page is 30 — parquet evaluates the pushed IN as a
+      * min/max range on the row groups, so a page of scattered ids skips
+      * less — and `docCacheEntries` bounds residency
       * (default unbounded = the resident-after-warm-up posture). ABSENT
       * ids cache as None (the [[dfs]] discipline) — with the sharded
       * router's owner routing a shard is only ever asked for ids it
@@ -207,6 +278,9 @@ object LocalSearcher {
           size() > docCacheEntries
       }
     def residentDocs: Int = docCache.synchronized(docCache.size())
+    /** The probe [[docsOf]] runs for its misses (plan inspection). */
+    private[graft] def docsProbe(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+      index.pageProbe(ids, shardFilter(col("docGroup")))
     def docsOf(ids: Seq[Long]): Map[Long, DocMeta] = {
       val (hits, misses) = docCache.synchronized {
         val h = Map.newBuilder[Long, DocMeta]
@@ -220,11 +294,7 @@ object LocalSearcher {
       val fetched =
         if (misses.isEmpty) Map.empty[Long, DocMeta]
         else {
-          val rows = index.docs
-            .filter(shardFilter(col("docGroup")) &&
-              col("docId").isin(misses: _*))
-            .select("docId", "repo", "path", "lang", "qualityScore", "repoScore")
-            .collect()
+          val rows = docsProbe(misses).collect()
             .map(r => r.getLong(0) -> DocMeta(r.getString(1), r.getString(2),
               r.getString(3), r.getDouble(4), r.getDouble(5))).toMap
           docCache.synchronized {
@@ -233,6 +303,35 @@ object LocalSearcher {
           rows
         }
       hits ++ fetched
+    }
+  }
+
+  /** `body` on its own daemon thread, started at construction. A fresh
+    * thread inherits the creating thread's inheritable thread locals —
+    * Spark's local properties among them — so its jobs carry the caller's
+    * job group, description and scheduler pool. */
+  private final class SideProbe[T](body: => T) {
+    private var result: Either[Throwable, T] = _
+    private val thread = new Thread(() => {
+      result = try Right(body) catch { case t: Throwable => Left(t) }
+    }, "graft-block-probe")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Wait for the thread to finish, even across interrupts (the
+      * caller's interrupt status is restored). */
+    def await(): Unit = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join()
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+
+    /** [[await]], then the result or the thread's own exception. */
+    def get(): T = {
+      await()
+      result.fold(t => throw t, identity)
     }
   }
 
@@ -306,7 +405,7 @@ object LocalSearcher {
     if (terms.isEmpty) return Seq.empty
     val fieldNames = opts.fields.map(_._1)
     val boosts = opts.fields.toMap
-    val dfs = li.dfs(fieldNames, terms.toSeq)
+    val (dfs, blockMap) = li.termData(fieldNames, terms.toSeq)
     if (dfs.isEmpty) return Seq.empty
 
     val weights = dfs.map { case ((f, t), df) =>
@@ -327,7 +426,6 @@ object LocalSearcher {
 
     val m = opts.k * opts.overfetch
     val heap = new QueryEngine.BoundedTopK(m)
-    val blockMap = li.blocksOf(dfs.keys.toSeq)
     val allBlocks = dfs.keys.toSeq.flatMap(k => blockMap.getOrElse(k, Array.empty[BlockRow]))
     val onDecode: () => Unit = () => { li.decodeCount.incrementAndGet(); () }
     allBlocks.groupBy(_.docGroup).toSeq.sortBy(_._1).foreach { case (_, grp) =>

@@ -162,6 +162,14 @@ class SearchIndex(val spark: SparkSession, val dir: String,
       .filter(col("field").isin(fields: _*) && col("term").isin(terms: _*))
       .select("field", "term", "df")
   }
+
+  /** The doc-metadata page probe behind [[QueryEngine.search]] and the
+    * serving tier's `docsOf`, exposed for plan inspection (PlanSpec
+    * asserts `docId IN (ids)` reaches the scan's PushedFilters). `where`
+    * narrows the scan further (a serving shard's docGroup filter). */
+  private[graft] def pageProbe(ids: Seq[Long], where: Column = lit(true)): DataFrame =
+    docs.filter(where && col("docId").isin(ids: _*))
+      .select("docId", "repo", "path", "lang", "qualityScore", "repoScore")
 }
 
 object SearchIndex {
@@ -225,10 +233,7 @@ object QueryEngine {
       if (top.isEmpty) Array.empty
       else {
         val scores = top.toMap
-        index.docs
-          .filter($"docId".isin(top.map(_._1): _*))
-          .select($"docId", $"repo", $"path", $"lang",
-            $"qualityScore", $"repoScore")
+        index.pageProbe(top.map(_._1).toSeq)
           .as[(Long, String, String, String, Double, Double)]
           .collect()
           .map { case (d, repo, path, lang, q, rs) =>

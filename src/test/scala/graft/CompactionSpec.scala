@@ -324,4 +324,33 @@ class CompactionSpec extends AnyFunSuite {
     assert(!graft.io.ParquetTableIO.exists(spark, s"$dir/_compaction_carry"),
       "carry table must be dropped after roll-forward")
   }
+
+  test("every postings file stores nBytes after build, append and compaction") {
+    val dir = "/tmp/graft-test/compaction-nbytes"
+    buildFragmented(dir, 67L)
+    def check(stage: String): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new org.apache.hadoop.fs.Path(s"$dir/postings")
+      val it = root.getFileSystem(conf).listFiles(root, true)
+      var files = 0
+      while (it.hasNext) {
+        val f = it.next().getPath
+        if (f.getName.endsWith(".parquet")) {
+          files += 1
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+          try assert(r.getFooter.getFileMetaData.getSchema.containsField("nBytes"),
+            s"$stage: $f has no nBytes column")
+          finally r.close()
+        }
+      }
+      assert(files > 0)
+      assert(spark.read.parquet(s"$dir/postings")
+        .filter(col("nBytes") =!= length(col("bytes"))).isEmpty,
+        s"$stage: nBytes differs from the stored block length")
+    }
+    check("build + append")
+    assert(Compaction.compact(spark, dir, blockSize = 32).nonEmpty)
+    check("compaction")
+  }
 }

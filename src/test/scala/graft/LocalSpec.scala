@@ -4,7 +4,13 @@ import graft.core.CorpusGen
 import graft.index.IndexBuilder
 import graft.query.{LocalSearcher, QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
+import java.io.File
+import org.apache.commons.io.FileUtils
+import org.apache.spark.graft.JobRecorder
 import org.scalatest.funsuite.AnyFunSuite
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Serving mode must be rank- AND score-identical to the distributed
   * engine — same index tables, same scoring code, no Spark jobs per query. */
@@ -175,5 +181,119 @@ class LocalSpec extends AnyFunSuite {
   test("empty/unknown queries return empty") {
     assert(LocalSearcher.search(local, "", SearchOpts()).isEmpty)
     assert(LocalSearcher.search(local, "zzzznotaword", SearchOpts()).isEmpty)
+  }
+
+  private def bits(hits: Seq[LocalSearcher.Hit]): Seq[(Int, Long, Long)] =
+    hits.map(h => (h.rank, h.docId, java.lang.Double.doubleToRawLongBits(h.score)))
+
+  test("cold reader: the first search == a warmed reader == the exhaustive plan, bitwise") {
+    val phrase = SearchOpts(k = 10, fields = Seq("content" -> 1.5, "path" -> 2.5),
+      phraseBoost = 2.0)
+    Seq(
+      "python tutorial" -> SearchOpts(k = 10),
+      "machine learning" -> phrase,
+      "python zzqxabsent tutorial" -> SearchOpts(k = 10), // one term the dictionary lacks
+      "zzqxabsent qqvvnothere" -> SearchOpts(k = 10) // every term absent
+    ).foreach { case (q, opts) =>
+      LocalSearcher.search(local, q, opts) // warms the shared reader
+      val cold = LocalSearcher.load(index)
+      val first = LocalSearcher.search(cold, q, opts)
+      assert(cold.sideProbes.get == 1, s"'$q': the cold search ran no side block probe")
+      val warm = LocalSearcher.search(local, q, opts)
+      val exhaustive = QueryEngine.search(index, q, opts.copy(wand = false)).collect()
+        .map(r => (r.getInt(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+      assert(first == warm, s"'$q': cold reader != warmed reader")
+      assert(bits(first) == bits(warm) && bits(first) == exhaustive,
+        s"'$q': cold reader != exhaustive plan")
+      assert(first.isEmpty == q.startsWith("zzqx"), s"'$q': ${first.size} hits")
+    }
+  }
+
+  test("cold sharded readers: 2 x max(4, nproc) shards finish (no nested-pool deadlock), == unsharded") {
+    val n = 2 * math.max(4, Runtime.getRuntime.availableProcessors())
+    val sharded = LocalSearcher.loadSharded(index, n)
+    val opts = SearchOpts(k = 10)
+    val got = Await.result(Future(queries.map(q => LocalSearcher.searchSharded(sharded, q, opts)))(
+      ExecutionContext.global), 5.minutes)
+    assert(got == queries.map(q => LocalSearcher.search(local, q, opts)))
+    assert(sharded.shards.forall(_.sideProbes.get > 0), "a shard's cold query ran no side probe")
+  }
+
+  test("cold search failure: the original exception, thrown only after the side probe finished") {
+    /** A copy of the fixture index with every table open, then `table` removed. */
+    def without(table: String): SearchIndex = {
+      val d = new File(s"/tmp/graft-test/local-index-no-$table")
+      FileUtils.deleteDirectory(d)
+      FileUtils.copyDirectory(new File(index.dir), d)
+      val idx = new SearchIndex(spark, d.getPath)
+      idx.postings; idx.dictionary; idx.docs; idx.dictBuckets
+      FileUtils.deleteDirectory(new File(d, table))
+      idx
+    }
+    def probeAlive = Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "graft-block-probe" && t.isAlive)
+    def thrownIn(e: Throwable, method: String) =
+      e.getStackTrace.exists(_.getMethodName.endsWith(method))
+    val q = "python tutorial"
+    val keys = Seq("python", "tutorial").map(t => ("content", t))
+
+    // the block probe fails: its own exception (not a wrapper), nothing cached
+    val noPostings = without("postings")
+    val li = LocalSearcher.load(noPostings)
+    val e = intercept[Throwable](LocalSearcher.search(li, q))
+    assert(li.sideProbes.get == 1 && !probeAlive)
+    assert(thrownIn(e, "fetchBlocks"), s"not the block probe's exception: $e")
+    val direct = intercept[Throwable](LocalSearcher.load(noPostings).blocksOf(keys))
+    assert(e.getClass == direct.getClass, s"rethrown $e, the probe itself throws $direct")
+    assert(li.residentBlockTerms == 0, "a failed block probe left cache entries")
+    assert(li.residentDictTerms == keys.size, "the dictionary probe did not complete")
+
+    // the dictionary probe fails: its exception, after the side probe
+    // finished (its blocks are cached by the time the search throws)
+    val li2 = LocalSearcher.load(without("dictionary"))
+    val e2 = intercept[Throwable](LocalSearcher.search(li2, q))
+    assert(li2.sideProbes.get == 1 && !probeAlive)
+    assert(thrownIn(e2, "lookup"), s"not the dictionary probe's exception: $e2")
+    assert(li2.residentBlockTerms == keys.size,
+      "the search threw before its side block probe finished")
+    assert(li2.residentDictTerms == 0)
+  }
+
+  test("job shape: a cold query runs two overlapping probe jobs, then the page probe; " +
+      "a warm repeat runs none; every job carries the caller's job group") {
+    val sc = spark.sparkContext
+    val opts = SearchOpts(k = 10)
+    val q = "database performance tuning"
+    // a handle whose tables are already open: opening runs schema jobs,
+    // which are not part of a query
+    val idx = new SearchIndex(spark, index.dir)
+    LocalSearcher.search(LocalSearcher.load(idx), "python tutorial", opts)
+    val terms = Seq("database", "performance", "tuning")
+    assert(idx.lookup(Seq("content"), terms).size == terms.size,
+      "fixture: every query term must be in the dictionary (an absent one adds a banded probe)")
+    // two probes racing can still land one after the other on a loaded
+    // host; a sequential reader never overlaps them
+    val overlapped = (1 to 3).map { _ =>
+      val li = LocalSearcher.load(idx)
+      sc.setJobGroup("g", "cold search", interruptOnCancel = false)
+      val (hits, jobs) =
+        try JobRecorder.record(sc)(LocalSearcher.search(li, q, opts))
+        finally sc.clearJobGroup()
+      assert(hits.nonEmpty)
+      assert(jobs.size == 3, s"cold query jobs: $jobs")
+      assert(jobs.forall(_.group.contains("g")), s"a job lost the caller's group: $jobs")
+      val Seq(a, b, page) = jobs
+      assert(page.startMs >= math.max(a.endMs, b.endMs),
+        s"more than two jobs before scoring: $jobs")
+      assert(li.sideProbes.get == 1)
+
+      val (again, warmJobs) = JobRecorder.record(sc)(LocalSearcher.search(li, q, opts))
+      assert(again == hits)
+      assert(warmJobs.isEmpty, s"warm repeat ran jobs: $warmJobs")
+      assert(li.sideProbes.get == 1, "warm repeat started a side probe")
+      a.overlaps(b)
+    }
+    assert(overlapped.contains(true), "the dictionary and block probes never overlapped")
   }
 }

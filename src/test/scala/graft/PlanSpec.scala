@@ -51,14 +51,14 @@ class PlanSpec extends AnyFunSuite {
 
   test("block-metadata aggregates never read the compressed bytes column") {
     import org.apache.spark.sql.functions._
-    // the derived-refresh / lineage aggregates sum blockLen — with the
-    // stored nBytes column that scan must be METADATA-only: `bytes` (the
+    // the derived-refresh / lineage aggregates sum the stored nBytes
+    // column — that scan must be METADATA-only: `bytes` (the
     // ~95%-of-table payload column) must not appear in the scan schema
     val postings = index.postings
     assert(postings.columns.contains("nBytes"), "fresh build must write nBytes")
     val agg = postings.groupBy(col("field"), col("term"))
       .agg(sum(col("n")).as("df"),
-        sum(graft.index.IndexBuilder.blockLen(postings)).as("bc"))
+        sum(col("nBytes")).as("bc"))
     val scans = planOf(agg).linesIterator
       .filter(_.contains("ReadSchema")).mkString("\n")
     assert(!scans.contains("bytes:binary"),
@@ -230,5 +230,29 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters:") && plan.contains("In(term"))
     assert(plan.contains("ReadSchema") && !plan.contains("totalTf"),
       "column pruning failed — totalTf should not be read")
+  }
+
+  test("page probes at k·overfetch = 30 ids push docId IN into the docs scan") {
+    import graft.query.LocalSearcher
+    val m = SearchOpts().k * SearchOpts().overfetch
+    assert(m == 30)
+    val ids = (0L until 400L by 13L).take(m)
+    // above spark.sql.parquet.pushdown.inFilterThreshold (10) parquet
+    // evaluates the set as a min/max range, but it must still be pushed
+    def pushedIds(df: org.apache.spark.sql.DataFrame): Set[Long] = {
+      val pushed = df.queryExecution.executedPlan.collectLeaves()
+        .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metadata.getOrElse("PushedFilters", "") }.mkString
+      """In\(docId, \[([^\]]*)\]""".r.findFirstMatchIn(pushed)
+        .map(_.group(1).split(",").map(_.trim.toLong).toSet)
+        .getOrElse(fail(s"docId IN not pushed to the docs scan: $pushed"))
+    }
+    Seq(
+      "engine" -> index.pageProbe(ids),
+      "serving" -> LocalSearcher.load(index).docsProbe(ids),
+      "serving shard" -> LocalSearcher.loadSharded(index, 2).shards(1).docsProbe(ids)
+    ).foreach { case (name, probe) =>
+      assert(pushedIds(probe) == ids.toSet, s"$name probe pushed a different id set")
+    }
   }
 }
