@@ -448,25 +448,17 @@ object Bench {
       val p50Compact = hotP50()
 
       // derived-maintenance cost at the streaming cadence: a standalone
-      // full re-derivation of this index's dictionary/stats/metrics, then
-      // two EQUAL-SIZE micro-batches — one with the incremental merge
-      // (default), one forced down the full-re-derivation path — so the
-      // artifact records what each appended batch actually pays
+      // re-derivation of this index's dictionary/stats/metrics, then one
+      // micro-batch resume, so the artifact records what each appended
+      // batch actually pays
       val tf = System.nanoTime()
       IndexBuilder.refreshDerived(spark, dir)
       val fullRefreshSec = (System.nanoTime() - tf) / 1e9
-      val extra = CorpusGen.generateDF(spark, nDocs + 2 * step, seed,
+      val batch = CorpusGen.generateDF(spark, nDocs + step, seed,
         partitions = cpus * 4).filter(col("docId") >= nDocs)
-      def timedResume(lo: Long, hi: Long, snap: String, inc: Boolean): Double = {
-        val b = extra.filter(col("docId") >= lo && col("docId") < hi)
-        val t = System.nanoTime()
-        IndexBuilder.resume(spark, b, dir,
-          params.copy(inputSnapshot = snap, incrementalDerived = inc))
-        (System.nanoTime() - t) / 1e9
-      }
-      val incBatchSec = timedResume(nDocs, nDocs + step, "probe-inc", inc = true)
-      val fullBatchSec =
-        timedResume(nDocs + step, nDocs + 2 * step, "probe-full", inc = false)
+      val tb = System.nanoTime()
+      IndexBuilder.resume(spark, batch, dir, params.copy(inputSnapshot = "probe-batch"))
+      val batchSec = (System.nanoTime() - tb) / 1e9
 
       // delete lifecycle (graft.index.Deletes): tombstone ~9% of the corpus,
       // measure the hot p50 with LIVE tombstones (scoring-time skip, no plan
@@ -493,8 +485,7 @@ object Bench {
         "expunge_deletes_sec" -> expungeSec,
         "query_p50_sec_purged_c32" -> p50Purged,
         "derived_refresh_full_sec" -> fullRefreshSec,
-        "microbatch_sec_incremental_refresh" -> incBatchSec,
-        "microbatch_sec_full_refresh" -> fullBatchSec,
+        "microbatch_sec_full_refresh" -> batchSec,
         "compaction_docs" -> nDocs.toDouble,
         "compaction_segments_before" -> nBatches.toDouble,
         "compaction_sec" -> compactSec,
@@ -623,22 +614,16 @@ object Bench {
     *
     * The corpus gets 3 per-doc unique identifiers appended (real code files
     * carry unique symbol names — Heaps'-law vocabulary growth; CorpusGen's
-    * base vocabulary is fixed-size and would hide the full-rewrite growth),
-    * and the probe provisions small pairs (dictTargetBucketRows = 64 —
-    * the target is per PHYSICAL (tlen, termBucket) partition) so the
-    * touched-pair set is a strict subset at bench vocabulary — at a
-    * 10^9-term vocabulary the default 64Ki target gives the same subset
-    * property against 10^4-10^5-distinct-term micro-batches.
+    * base vocabulary is fixed-size and would hide the rewrite growth), and
+    * the probe provisions small pairs (dictTargetBucketRows = 64 — the
+    * target is per PHYSICAL (tlen, termBucket) partition) as a bucketed
+    * 10^9-term vocabulary would be at the default 64Ki target.
     *
-    * Measured per size: bytes written to dictionary/ by one EQUAL-SIZE
+    * Measured per size: bytes written to dictionary/ and wall time of one
     * small appended batch (100 docs — a micro-batch whose vocabulary is a
-    * strict subset of the corpus') through (a) the bucketed incremental
-    * path and (b) the forced full re-derivation. The claim in numbers:
-    * full-path bytes grow with the vocabulary (~linear in corpus here),
-    * incremental bytes track batch-vocab touched pairs × pair size —
-    * sub-linear here, asymptotically flat as vocab/batch-vocab widens
-    * toward the deployment ratio (a batch's irreducible floor is the pairs
-    * holding the Zipf-head terms every document shares). */
+    * strict subset of the corpus'). Every append re-derives the whole
+    * dictionary, so the bytes grow with the vocabulary (~linear in corpus
+    * here); the growth ratio records that cost trajectory. */
   def dictProbe(cpus: Int, baseDocs: Long, seed: Long): Seq[(String, Double)] = {
     val spark = session(cpus)
     try {
@@ -665,51 +650,32 @@ object Bench {
         }
         out.toMap
       }
-      // (vocab, incMb, incSec, fullMb, fullSec)
-      def at(n: Long, tag: String): (Double, Double, Double, Double, Double) = {
+      // (vocab, batchMb, batchSec)
+      def at(n: Long, tag: String): (Double, Double, Double) = {
         val dir = s"/tmp/graft-bench/dict-$tag"
         IndexBuilder.deleteDir(spark, dir)
-        val all = corpusTo(n + 2 * batchN)
+        val all = corpusTo(n + batchN)
         IndexBuilder.build(spark, all.filter(col("docId") < n), dir, params)
         val vocab = spark.read.parquet(s"$dir/dictionary").count().toDouble
-        def oneBatch(lo: Long, snap: String, inc: Boolean): (Double, Double) = {
-          val before = dictFiles(dir)
-          val t0 = System.nanoTime()
-          IndexBuilder.resume(spark,
-            all.filter(col("docId") >= lo && col("docId") < lo + batchN), dir,
-            params.copy(inputSnapshot = snap, incrementalDerived = inc))
-          val sec = (System.nanoTime() - t0) / 1e9
-          (dictFiles(dir).collect {
-            case (f, len) if !before.contains(f) => len }.sum / 1e6, sec)
-        }
-        val (incMb, incSec) = oneBatch(n, "dict-probe-inc", inc = true)
-        val (fullMb, fullSec) = oneBatch(n + batchN, "dict-probe-full", inc = false)
-        (vocab, incMb, incSec, fullMb, fullSec)
+        val before = dictFiles(dir)
+        val t0 = System.nanoTime()
+        IndexBuilder.resume(spark, all.filter(col("docId") >= n), dir,
+          params.copy(inputSnapshot = "dict-probe-batch"))
+        val sec = (System.nanoTime() - t0) / 1e9
+        (vocab, dictFiles(dir).collect {
+          case (f, len) if !before.contains(f) => len }.sum / 1e6, sec)
       }
-      val (v1, i1, is1, f1, fs1) = at(baseDocs, "1x")
-      val (v4, i4, is4, f4, fs4) = at(baseDocs * 4, "4x")
+      val (v1, f1, fs1) = at(baseDocs, "1x")
+      val (v4, f4, fs4) = at(baseDocs * 4, "4x")
       Seq(
         "dict_probe_docs_1x" -> baseDocs.toDouble,
         "dict_probe_batch_docs" -> batchN.toDouble,
         "dict_probe_vocab_1x" -> v1,
         "dict_probe_vocab_4x" -> v4,
-        "dict_write_mb_incremental_1x" -> i1,
-        "dict_write_mb_incremental_4x" -> i4,
         "dict_write_mb_full_1x" -> f1,
         "dict_write_mb_full_4x" -> f4,
-        "dict_write_growth_incremental" -> (if (i1 > 0) i4 / i1 else 0.0),
         "dict_write_growth_full" -> (if (f1 > 0) f4 / f1 else 0.0),
-        "dict_write_reduction_4x" -> (if (i4 > 0) f4 / i4 else 0.0),
-        // the scale trajectory in one number per size: what fraction of a
-        // full rewrite the incremental batch pays — FALLS as the corpus
-        // grows (the batch's touched pairs are pinned by ITS vocabulary
-        // while total pairs grow with the corpus'), toward ~0 at the
-        // deployment vocab/batch ratio
-        "dict_write_frac_of_full_1x" -> (if (f1 > 0) i1 / f1 else 0.0),
-        "dict_write_frac_of_full_4x" -> (if (f4 > 0) i4 / f4 else 0.0),
-        "dict_microbatch_sec_incremental_4x" -> is4,
         "dict_microbatch_sec_full_4x" -> fs4,
-        "dict_microbatch_sec_incremental_1x" -> is1,
         "dict_microbatch_sec_full_1x" -> fs1)
     } finally spark.stop()
   }
@@ -994,8 +960,7 @@ object Bench {
     "scaling_membw_eff_8to32", "scaling_eff_build_8to32_normalized",
     "scaling_eff_build_8to32_membw_normalized",
     "scaling_eff_query_8to32", "scaling_eff_query_8to32_normalized",
-    "derived_refresh_full_sec", "microbatch_sec_incremental_refresh",
-    "microbatch_sec_full_refresh",
+    "derived_refresh_full_sec", "microbatch_sec_full_refresh",
     "compaction_sec", "compaction_blocks_before", "compaction_blocks_after",
     "query_p50_sec_fragmented_c32", "query_p50_sec_compacted_c32",
     "deletes_tombstoned", "delete_apply_sec", "query_p50_sec_live_deletes_c32",
@@ -1219,7 +1184,7 @@ object Bench {
       }
     val snapshotEntries = probeChild("snapshot", "BENCHSNAPSHOT ",
       () => snapshotProbe(32, math.max(nDocs / 4, 2500L), seed))
-    // per-batch dictionary maintenance growth (bucketed incremental vs full)
+    // per-batch dictionary maintenance growth with the corpus
     val dictEntries = probeChild("dict", "BENCHDICT ",
       () => dictProbe(32, math.max(nDocs / 8, 2500L), seed))
     val effQuery =

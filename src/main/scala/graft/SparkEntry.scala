@@ -137,16 +137,14 @@ object SparkEntry {
       new SearchIndex(spark, dir)
     })
 
-  /** Index whose derived tables were maintained INCREMENTALLY (q72 gate):
-    * three straddled resume batches with `incrementalDerived = true` (the
-    * default), NO compaction — so the final dictionary is the product of
-    * two bucket-grain incremental merges ((tlen, termBucket) dynamic
-    * overwrites of touched buckets only), never a full re-derivation. The
-    * gate compares the COMPLETE dictionary against DuckDB's from-scratch
-    * term aggregate over the raw text — the end-to-end external check on
-    * the bucketed maintenance path (ResumeSpec proves it bitwise-equal to
-    * the full path and that it does not silently fall back; this gate
-    * proves the result against an independent engine). */
+  /** Index grown by three straddled resumes (q72 gate): one build and two
+    * resume batches that cut inside docGroups, NO compaction — so the final
+    * dictionary is the refresh of a three-segment index whose groups hold
+    * more than one segment. The gate compares the COMPLETE bucketed
+    * dictionary against DuckDB's from-scratch term aggregate over the raw
+    * text — the end-to-end external check on append maintenance
+    * (ResumeSpec proves it equal to a monolithic build; this gate proves
+    * the result against an independent engine). */
   def docsIndexIncremental(spark: SparkSession, sfDir: String): SearchIndex =
     indexCache.computeIfAbsent(s"$sfDir#incr", { _ =>
       val dir = s"/tmp/graft-entry-index/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}-incr"
@@ -159,11 +157,6 @@ object SparkEntry {
       IndexBuilder.resume(spark, corpus.filter(col("docId") <= 2 * maxId / 3),
         dir, p.copy(inputSnapshot = "batch-1"))
       IndexBuilder.resume(spark, corpus, dir, p.copy(inputSnapshot = "batch-2"))
-      // falsifiability: the LAST resume must actually have taken the
-      // incremental path — a silent fallback to the full re-derivation
-      // would validate the wrong code against the oracle
-      require(IndexBuilder.lastDerivedIncremental,
-        "incremental gate fixture: the resume fell back to the full refresh")
       val segs = spark.read.parquet(s"$dir/lineage")
         .select("inputSnapshot").distinct().count()
       require(segs == 3, s"incremental gate fixture: expected 3 segments, got $segs")
@@ -439,8 +432,8 @@ object SparkEntry {
           col("sha256").as("sha"))
     }),
     "q72_incremental_dict" -> ((s, d) => {
-      // COMPLETE dictionary after two bucket-grain incremental merges —
-      // every term's (df, totalTf) vs DuckDB's from-scratch aggregate
+      // COMPLETE dictionary after three straddled resumes — every term's
+      // (df, totalTf) vs DuckDB's from-scratch aggregate
       docsIndexIncremental(s, d).dictionary
         .select(col("term"), col("df"), col("totalTf").as("total_tf"))
     }),

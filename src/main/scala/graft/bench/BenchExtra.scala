@@ -86,7 +86,7 @@ object BenchExtra {
           }
           val extra = CorpusGen.generateDF(spark, nDocs + 2000L, seed,
             partitions = cpus * 4).filter(col("docId") >= nDocs)
-          timed(spark, "resume micro-batch 2000 docs (incremental)") {
+          timed(spark, "resume micro-batch 2000 docs") {
             IndexBuilder.resume(spark, extra, dir,
               params.copy(inputSnapshot = "extra-probe"))
           }

@@ -133,21 +133,6 @@ object ExplainDump {
     // directories out of the whole vocabulary
     val dict2 = index.lookupDf(Seq("content"), Seq("python", "tutorial"))
 
-    // incremental dictionary maintenance's OLD-side read: partition-pruned
-    // to exactly the (tlen, termBucket) pairs the appended segment's terms
-    // hash into — the full_outer merge and the dynamic overwrite then touch
-    // only those buckets (per-batch cost O(batch vocabulary), VERDICT r4
-    // item #2)
-    val nbDict = IndexBuilder.dictBucketCount(spark, dir).get
-    val segTerms = Seq("python", "tutorial", "spark")
-    val touchedPairs = segTerms.map(t =>
-      (t.length, IndexBuilder.termBucketOf(t, nbDict)))
-    val dictPrune = touchedPairs.groupBy(_._1).map { case (tl, ps) =>
-      col("tlen") === tl && col("termBucket").isin(ps.map(_._2).distinct: _*)
-    }.reduce(_ || _)
-    val dictIncOld = index.dictionary.filter(dictPrune)
-      .select("field", "term", "df", "totalTf", "nBlocks", "maxTf", "minDl")
-
     // serving-tier doc-metadata probe (LocalSearcher.docsOf): one pruned
     // scan per PAGE — docId IN (...) pushed to parquet (docs files sorted
     // by docId within partitions, row-group stats skip), ReadSchema pruned
@@ -228,14 +213,7 @@ object ExplainDump {
        |   prunes on BOTH keys (the terms' buckets are computed driver-side,
        |   no job) and reads O(query terms) directories of a 10^9-term
        |   vocabulary;
-       |15. incremental dictionary maintenance reads the OLD side pruned to
-       |   exactly the (tlen, termBucket) pairs the appended segment's terms
-       |   hash into (`PartitionFilters` below), merges with the segment
-       |   aggregate, and dynamically overwrites only those buckets —
-       |   per-micro-batch dictionary cost is O(batch vocabulary), never a
-       |   full-vocabulary rewrite (and the commit goes through the TableIO,
-       |   so under snapshot storage it is atomic and reader-isolated);
-       |16. serving-tier doc metadata is probed per PAGE, not loaded at
+       |15. serving-tier doc metadata is probed per PAGE, not loaded at
        |   open: `docId IN (...)` reaches the parquet scan (docs files are
        |   sorted by docId within partitions — row-group stats skip),
        |   ReadSchema carries only the six pagination columns, and an LRU
@@ -340,14 +318,7 @@ object ExplainDump {
        |${fmt(dict2)}
        |```
        |
-       |## 15. Incremental dictionary maintenance — old side pruned to the
-       |   segment's touched (tlen, termBucket) pairs
-       |
-       |```
-       |${fmt(dictIncOld)}
-       |```
-       |
-       |## 16. Serving doc-metadata page probe — docId IN pushed, six columns,
+       |## 15. Serving doc-metadata page probe — docId IN pushed, six columns,
        |   LRU-bounded residency
        |
        |```

@@ -126,7 +126,9 @@ final class PostingBlockIterator(
   *     A micro-batch that straddles a docGroup boundary therefore APPENDS a
   *     new segment to the partially-filled group instead of silently
   *     dropping rows (lineage records per-group maxDocId; a row is pending
-  *     iff docId > committed max for its group).
+  *     iff docId > committed max for its group). Every write then
+  *     re-derives dictionary/stats/metrics from the committed tables
+  *     ([[refreshDerived]]), so they never depend on the write history.
   *
   * Contract for incremental/streaming builds: docIds are dense and
   * monotone (assigned once at ingest), and each distinct input batch uses a
@@ -153,11 +155,6 @@ object IndexBuilder {
       qualityScoreCol: () => Column = () => IndexBuilder.defaultQuality,
       repoScoreCol: () => Column = () => IndexBuilder.defaultRepoScore,
       io: TableIO = ParquetTableIO,
-      // dense-id resumes maintain dictionary/stats/metrics incrementally
-      // (old state ⊎ new-segment aggregates — bitwise-equal to a full
-      // re-derivation, cost proportional to the BATCH); set false to force
-      // the full re-derivation/audit path on every batch
-      incrementalDerived: Boolean = true,
       // KeyMap bucket count used when an upsert (re)builds the live-key
       // sidecar. 0 (default) = AUTO: every rebuild derives the count from
       // the live key volume (keymapTargetKeys per bucket) and the steady
@@ -167,10 +164,10 @@ object IndexBuilder {
       keymapBuckets: Int = 0,
       // auto-provision target: live keys per keymap bucket
       keymapTargetKeys: Long = KeyMap.TargetBucketKeys,
-      // target rows per dictionary hash bucket: every full refresh derives
-      // nBuckets = ceil(vocabulary / this), so the per-batch incremental
-      // dictionary rewrite stays O(touched buckets × this) no matter how
-      // the vocabulary grows (auto-RE-provisioned at each full/audit pass)
+      // target rows per dictionary hash bucket: every refresh derives
+      // nBuckets = ceil(vocabulary / this), so the exact-term probe reads
+      // O(query terms × this) rows no matter how the vocabulary grows
+      // (re-provisioned at each refresh)
       dictTargetBucketRows: Long = IndexBuilder.DefaultDictTargetBucketRows)
 
   /** Reference-style length step function (rust scorer.rs:138-147 shape). */
@@ -195,29 +192,16 @@ object IndexBuilder {
     def lineage = s"$dir/lineage"
     def metrics = s"$dir/metrics"
     /** One-row table recording the dictionary's termBucket count — written
-      * LAST by every full refresh (dropped first, so any crash window leaves
-      * it ABSENT, which every consumer treats as "no bucket layout": the
-      * incremental refresh falls back to the full re-derivation and the
+      * LAST by every refresh (dropped first, so any crash window leaves it
+      * ABSENT, which every consumer treats as "no bucket layout": the
       * query-side probe falls back to tlen-only pruning — always correct,
-      * merely unpruned). */
+      * merely unpruned — and the next refresh re-provisions from the
+      * default target). */
     def dictionaryMeta = s"$dir/dictionary_meta"
-    /** Manifest of the segments BAKED INTO the current derived tables — the
-      * incremental refresh's idempotence guard (see
-      * refreshDerivedIncremental): a segment already present means the
-      * derived state may already contain its contribution, so only the full
-      * re-derivation is safe. Rewritten by every full refresh. */
-    def derivedSegments = s"$dir/derived_segments"
   }
 
-  /** Diagnostic: whether the LAST build/resume on this JVM maintained the
-    * derived tables incrementally (vs the full re-derivation fallback) —
-    * the falsifiability hook for fixtures that claim to exercise the
-    * incremental path (SparkEntry.docsIndexIncremental, ResumeSpec). Not
-    * part of any engine decision. */
-  @volatile private[graft] var lastDerivedIncremental: Boolean = false
-
-  /** Default [[Params.dictTargetBucketRows]]: 64Ki terms per bucket keeps a
-    * touched-bucket rewrite in the tens-of-MB range while bounding the
+  /** Default [[Params.dictTargetBucketRows]]: 64Ki terms per bucket keeps an
+    * exact-term probe's read in the tens-of-MB range while bounding the
     * bucket count at ~16k even for a 10^9-term vocabulary. */
   val DefaultDictTargetBucketRows: Long = 1L << 16
 
@@ -241,21 +225,14 @@ object IndexBuilder {
   }
 
   /** The dictionary's (termBucket count, provisioning target), or None when
-    * the index predates the bucketed layout / a full-refresh crash window
-    * left the marker absent (see [[Layout.dictionaryMeta]]). Tolerates the
-    * pre-target meta schema (target defaults). */
+    * a refresh crash window left the marker absent (see
+    * [[Layout.dictionaryMeta]]). */
   private[graft] def dictMeta(spark: SparkSession, dir: String,
       io: TableIO = ParquetTableIO): Option[(Int, Long)] = {
     val meta = Layout(dir).dictionaryMeta
     if (!io.exists(spark, meta)) None
-    else {
-      val df = io.read(spark, meta)
-      val hasTarget = df.columns.contains("targetRows")
-      df.collect().headOption.map { r =>
-        (r.getAs[Int]("nBuckets"),
-          if (hasTarget) r.getAs[Long]("targetRows")
-          else DefaultDictTargetBucketRows)
-      }
+    else io.read(spark, meta).collect().headOption.map { r =>
+      (r.getAs[Int]("nBuckets"), r.getAs[Long]("targetRows"))
     }
   }
 
@@ -299,10 +276,6 @@ object IndexBuilder {
     // maintaining the upsert keymap: drop its validity marker FIRST so a
     // later Upsert probes ground truth (KeyMap crash-ordering contract)
     KeyMap.invalidate(spark, dir)
-    // an index written before the int64-partitionId lineage contract must
-    // be migrated BEFORE anything reads lineage — appending long rows
-    // beside int32 files yields mixed-width parquet and flaky reads
-    ensureLineageLongIds(spark, dir, params.io)
     // a crash mid-expiry leaves a _pending_expiry marker: finish the expiry
     // (idempotent re-delete + derived refresh) before appending, or the
     // append's own refresh would bake half-expired segments into the stats;
@@ -310,61 +283,6 @@ object IndexBuilder {
     Retention.recoverPendingExpiry(spark, dir, params.io)
     Compaction.recoverPendingCompaction(spark, dir, params.io)
     buildGroups(spark, corpus, dir, params, resume = true)
-  }
-
-  private def lineageV2Marker(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/_lineage_v2")
-
-  /** One-time lineage width verification/migration (ADVICE r3): lineage
-    * `partitionId` was int32 before the long-by-contract change; resuming
-    * such an index would append int64 files beside int32 ones — mixed-width
-    * parquet that poisons schema merging. Called before every lineage read
-    * entry point (resume, compaction, expiry). Steady state is ONE
-    * fs.exists on the `_lineage_v2` marker; without the marker, each
-    * segment partition dir is probed (each was written by a single commit,
-    * so each dir is internally consistent even when the table as a whole is
-    * mixed), any int32 dirs trigger a full rewrite at int64 through a
-    * staged swap, and the marker is written. Every crash window of the swap
-    * resolves on the next call (see the state checks below). */
-  private[graft] def ensureLineageLongIds(spark: SparkSession, dir: String,
-      io: TableIO = ParquetTableIO): Unit = {
-    val layout = Layout(dir)
-    val marker = lineageV2Marker(dir)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val lineagePath = new org.apache.hadoop.fs.Path(layout.lineage)
-    val stagePath = new org.apache.hadoop.fs.Path(s"${layout.lineage}._v2stage")
-    val oldPath = new org.apache.hadoop.fs.Path(s"${layout.lineage}._v1old")
-    // resolve a previous attempt's crash windows first (swap order below:
-    // stage written fully -> lineage renamed away -> stage renamed in ->
-    // old deleted -> marker)
-    if (fs.exists(stagePath)) {
-      if (fs.exists(lineagePath)) fs.delete(stagePath, true) // stage maybe partial
-      else { // crash mid-swap: the stage was complete before the swap began
-        fs.rename(stagePath, lineagePath); ()
-      }
-    }
-    if (fs.exists(oldPath)) fs.delete(oldPath, true)
-    if (!fs.exists(lineagePath)) return // fresh index: nothing to verify yet
-    val segDirs = fs.listStatus(lineagePath)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("inputSnapshot="))
-    val hasInt32 = segDirs.exists { st =>
-      spark.read.parquet(st.getPath.toString).schema("partitionId").dataType ==
-        org.apache.spark.sql.types.IntegerType
-    }
-    if (hasInt32) {
-      val casted = segDirs.map { st =>
-        spark.read.option("basePath", layout.lineage).parquet(st.getPath.toString)
-          .withColumn("partitionId", col("partitionId").cast("long"))
-      }.reduce(_ unionByName _)
-      io.overwriteTable(casted.repartition(col("inputSnapshot")),
-        stagePath.toString, Seq("inputSnapshot"))
-      fs.rename(lineagePath, oldPath)
-      fs.rename(stagePath, lineagePath)
-      fs.delete(oldPath, true)
-    }
-    val out = fs.create(marker, true)
-    try out.write("v2\n".getBytes("UTF-8")) finally out.close()
   }
 
   /** Rows of `corpus` not yet committed according to `lineage` — a pure
@@ -563,17 +481,9 @@ object IndexBuilder {
     }
     docsFut.foreach(_.get()) // surface docs-write failures before commit
 
-    // ---- dictionary/stats/metrics: dense-id resumes merge the previous
-    // derived state with THIS segment's aggregates (cost proportional to
-    // the batch — the derived maintenance no longer re-reads all block
-    // metadata every micro-batch); everything else takes the full
-    // re-derivation/audit path, which is also the fallback whenever the
-    // incremental preconditions don't hold (first build, crashed swap
-    // residue, snapshot-id reuse, pre-sumDl schema) ----
-    val didIncremental = resume && hadDenseIds && params.incrementalDerived &&
-      refreshDerivedIncremental(spark, dir, segment, io)
-    if (!didIncremental) refreshDerived(spark, dir, io, params.dictTargetBucketRows)
-    lastDerivedIncremental = didIncremental
+    // ---- dictionary/stats/metrics: re-derived from the committed tables,
+    // so a crash-retry of this segment cannot double-count it ----
+    refreshDerived(spark, dir, io, params.dictTargetBucketRows)
 
     // ---- lineage LAST (the commit marker a resume trusts): per-(docGroup,
     // segment) rows, partitioned by snapshot — dynamic overwrite of THIS
@@ -599,68 +509,45 @@ object IndexBuilder {
       .withColumn("bytesCompressed", coalesce($"b_", lit(0L)))
       .withColumn("mergeFanIn", coalesce($"f_", lit(0L)))
       // cast: docGroup is the docs PARTITION column here, path-inferred as
-      // int for small values — lineage partitionId is long by contract.
-      // MIGRATION: an index whose lineage predates this contract stores
-      // int32 partitionId; appending long rows beside it gives mixed-width
-      // parquet files (flaky reads). Rewrite old lineage once
-      // (read.cast.overwrite) before resuming such an index.
+      // int for small values — lineage partitionId is long by contract
+      // (mixed-width files would poison the lineage table's schema merge)
       .select($"docGroup".cast("long").as("partitionId"), lit("done").as("status"),
         $"docs", $"maxDocId", $"postingsEmitted", $"bytesCompressed",
         $"mergeFanIn", $"shaOk", current_timestamp().as("updatedAt"),
         lit(segment).as("inputSnapshot"))
     io.overwritePartitions(newLineage, layout.lineage, Seq("inputSnapshot"))
-    // lineage written by THIS code is int64 by contract: stamp the width
-    // marker so steady-state resumes skip the per-segment schema probe
-    val v2 = lineageV2Marker(dir)
-    val fs = v2.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(v2)) {
-      val out = fs.create(v2, true)
-      try out.write("v2\n".getBytes("UTF-8")) finally out.close()
-    }
     } finally if (opaqueInput) { staged.unpersist(false); () }
   }
 
   /** Re-derive dictionary, stats and metrics from the CURRENT docs/postings
     * tables (fields inferred from the docs schema's dl_ columns) — the
-    * derived tables are always a pure function of the surviving segments.
-    * Called after every build/resume and after Retention expiry. Audits
-    * docId uniqueness (count vs countDistinct) and throws on collision
-    * before writing stats.
+    * derived tables are always a pure function of the surviving segments,
+    * so a crash-retry of the same `inputSnapshot` cannot double-count and
+    * needs no manifest. The one maintenance path for these tables: called
+    * after every build/resume (appends and upserts included), compaction
+    * and Retention expiry. Audits docId uniqueness (count vs
+    * countDistinct) and throws on collision before writing stats.
     *
     * Cost note (scale): this is O(index METADATA) per call — the scans are
-    * column-pruned to block metadata (n/sumTf/maxTf/minDl, never `bytes`)
-    * and doc metadata (docId/shaOk/dl), so it pays metadata-proportional,
-    * not data-proportional, work. It remains the REPAIR/AUDIT path (docId
-    * uniqueness audit, fan-in metrics, crash-residue sweep) and the only
-    * valid refresh after non-append mutations (expiry, compaction);
-    * dense-id APPENDS take [[refreshDerivedIncremental]] instead, whose
-    * per-batch cost is proportional to the batch — with this full
-    * re-derivation as its fallback whenever the merge preconditions don't
-    * hold. */
+    * column-pruned to block metadata (n/sumTf/maxTf/minDl/nBytes, never
+    * `bytes`) and doc metadata (docId/shaOk/dl), so it pays
+    * metadata-proportional, not data-proportional, work. */
   private[graft] def refreshDerived(spark: SparkSession, dir: String,
       io: TableIO = ParquetTableIO,
       dictTargetBucketRows: Long = DefaultDictTargetBucketRows): Unit = {
     import spark.implicits._
     val layout = Layout(dir)
-    // sweep residue of an incremental dictionary swap that crashed mid-way
-    // (stage written / renames half-done) — this full rebuild supersedes it
-    io.drop(spark, s"${layout.dictionary}._stage")
-    io.drop(spark, s"${layout.dictionary}._old")
     val allBlocks = io.read(spark, layout.postings)
     val allDocs = io.read(spark, layout.docs)
     val fields = allDocs.columns.filter(_.startsWith("dl_"))
       .map(_.stripPrefix("dl_")).toSeq.sorted
 
-    // one job: N, per-field Σdl, sha violations, docId collision audit,
-    // and the distinct segment list for the derived-segments manifest (one
-    // docs scan total — the manifest used to pay its own full scan).
-    // Σdl is kept as a LONG (stats.sumDl) so the incremental refresh can
-    // merge it exactly; avgdl = sumDl.toDouble / n in BOTH paths — the
-    // identical double op is what makes incremental == full BITWISE.
+    // one job: N, per-field Σdl, sha violations, docId collision audit.
+    // Σdl is stored exactly as a LONG (stats.sumDl); avgdl = sumDl.toDouble
+    // / n, so any segmentation of the same docs yields bitwise-equal stats.
     val docAggCols = count(lit(1)).as("n") +:
       countDistinct($"docId").as("nDistinct") +:
       sum(when(!$"shaOk", 1L).otherwise(0L)).as("shaViol") +:
-      collect_set($"segment".cast("string")).as("segs") +:
       fields.map(f => sum(col(s"dl_$f").cast("long")).as(s"sumdl_$f"))
     val docAgg = allDocs.agg(docAggCols.head, docAggCols.tail: _*).collect()(0)
     val nDocs = docAgg.getAs[Long]("n")
@@ -679,10 +566,9 @@ object IndexBuilder {
     // Two-level (tlen, termBucket) partitioning: tlen makes fuzzy expansion
     // a partition-pruned probe (QueryEngine.fuzzyExpand) instead of a
     // full-dictionary scan; termBucket = pmod(xxhash64(term), nBuckets)
-    // bounds the INCREMENTAL maintenance rewrite (and the exact-term query
-    // probe) to the touched buckets — nBuckets is re-derived from the live
-    // vocabulary here, so every full/audit pass auto-RE-provisions the
-    // layout as the corpus grows.
+    // bounds the exact-term query probe to the query terms' buckets —
+    // nBuckets is re-derived from the live vocabulary here, so every
+    // refresh re-provisions the layout as the corpus grows.
     // FULL overwrite (not dynamic): the dictionary is purely derived, and a
     // partition whose terms all disappeared (Retention expiry) must not
     // survive as stale rows.
@@ -731,8 +617,8 @@ object IndexBuilder {
     io.drop(spark, layout.dictionaryMeta)
     // the dictionary overwrite is the expensive derived write; under plain
     // parquet it runs on a side thread while the tiny independent tables
-    // (stats, derived-segments manifest, metrics) commit — the meta marker
-    // still waits for it below, preserving the crash-window ordering.
+    // (stats, metrics) commit — the meta marker still waits for it below,
+    // preserving the crash-window ordering.
     // Sequential under a snapshot TableIO (single-writer manifest commits).
     def writeDictionary(): Unit = io.overwriteTable(
       dictAgg
@@ -762,15 +648,6 @@ object IndexBuilder {
         (f, nDocs, if (nDocs > 0) sumDl.toDouble / nDocs else 0.0, sumDl)
       }.toDF("field", "n", "avgdl", "sumDl").coalesce(1),
       layout.stats, Nil)
-
-    // manifest: the derived tables now reflect exactly the segments present
-    // (the incremental path consults this to detect snapshot-id reuse) —
-    // the segment list rode the docAgg scan above
-    io.overwriteTable(
-      docAgg.getSeq[String](docAgg.fieldIndex("segs")).distinct.sorted
-        .toDF("inputSnapshot")
-        .withColumn("bakedAt", current_timestamp()),
-      layout.derivedSegments, Seq("inputSnapshot"))
 
     // metrics: rolled up from the same rollup job as the provisioning (raw-
     // size estimate derived exactly from block metadata: every occurrence
@@ -805,196 +682,6 @@ object IndexBuilder {
     io.overwritePartitions(
       Seq((nBuckets, target)).toDF("nBuckets", "targetRows").coalesce(1),
       layout.dictionaryMeta, Nil)
-  }
-
-  /** Incremental derived maintenance for a pure APPEND of `segment` (the
-    * streaming cadence path — VERDICT r3 "what's missing" #1): merge the
-    * PREVIOUS derived state with this segment's aggregates instead of
-    * re-deriving everything from all block metadata. Returns false — caller
-    * must run the full [[refreshDerived]] — when any precondition fails.
-    *
-    * Exactness: every merged quantity combines exactly —
-    * dictionary df/totalTf/nBlocks are long sums, maxTf/minDl max/min,
-    * stats n/sumDl long sums with avgdl recomputed by the SAME double op as
-    * the full path, metrics postings/blocks/bytes/raw/sha long sums — so an
-    * incrementally-maintained index is BITWISE equal to a fully re-derived
-    * one (ResumeSpec differential). The two exceptions, by design:
-    *   - metrics max/avgMergeFanIn are CARRIED from the previous metrics
-    *     (per-term countDistinct(docGroup) is not combinable from
-    *     aggregates — a straddled append touches groups a term already
-    *     spans); they refresh on the next full/audit pass. Observability
-    *     only — nothing in scoring reads them.
-    *   - the full-table docId-uniqueness audit runs only on the full path;
-    *     dense-id appends cannot collide with committed rows by
-    *     construction (pendingRows admits only docId > committed max per
-    *     group) and batch-internal uniqueness is asserted in buildGroups.
-    *
-    * Cost: the segment scans are partition-pruned (segment is a partition
-    * key of postings/docs), so aggregate work is O(batch); the dictionary
-    * merge reads and rewrites ONLY the (tlen, termBucket) partitions that
-    * contain the segment's terms — O(touched buckets × bucket size) ≈
-    * O(batch vocabulary × dictTargetBucketRows amortized), never the global
-    * vocabulary (VERDICT r4 item #2: at a 10^9-term vocabulary and minute
-    * cadence, a full-dictionary rewrite per micro-batch would be the
-    * dominant term). The full refresh remains the repair/audit path and
-    * re-provisions the bucket count as the vocabulary grows.
-    *
-    * Crash safety: the manifest row for `segment` is written FIRST, so any
-    * crash inside this method makes the next attempt's manifest check fail
-    * and fall back to the full re-derivation (which rewrites the whole
-    * dictionary and the manifest). The touched-bucket rewrite goes through
-    * `io.overwritePartitions` — an atomic, reader-isolated snapshot commit
-    * under SnapshotTableIO (no raw renames: pinned readers' manifests keep
-    * their files — ADVICE r4 item #2), Spark dynamic partition overwrite
-    * under plain parquet (single-writer contract as documented on
-    * [[graft.index.Compaction]]; concurrent readers during a rewrite need
-    * the snapshot TableIO's isolation). */
-  private[graft] def refreshDerivedIncremental(spark: SparkSession, dir: String,
-      segment: String, io: TableIO = ParquetTableIO): Boolean = {
-    import spark.implicits._
-    val layout = Layout(dir)
-    val stage = s"${layout.dictionary}._stage"
-    if (!io.exists(spark, layout.dictionary) || !io.exists(spark, layout.stats) ||
-        !io.exists(spark, layout.metrics) ||
-        !io.exists(spark, layout.derivedSegments) ||
-        io.exists(spark, stage) || io.exists(spark, s"${layout.dictionary}._old"))
-      return false
-    // bucketed-layout marker: absent on a pre-bucket index or after a
-    // full-refresh crash window — one full refresh migrates/repairs
-    val nBuckets = dictBucketCount(spark, dir, io).getOrElse(return false)
-    val oldStatRows = io.read(spark, layout.stats).collect()
-    if (oldStatRows.isEmpty || !oldStatRows.head.schema.fieldNames.contains("sumDl"))
-      return false // pre-sumDl stats schema: one full refresh migrates it
-    // snapshot-id reuse / post-crash retry: contribution may already be in
-    if (io.read(spark, layout.derivedSegments)
-        .filter($"inputSnapshot" === segment).limit(1).count() > 0) return false
-
-    // manifest FIRST (see crash-safety note above)
-    io.overwritePartitions(
-      Seq(segment).toDF("inputSnapshot")
-        .withColumn("bakedAt", current_timestamp()),
-      layout.derivedSegments, Seq("inputSnapshot"))
-
-    // ---- segment aggregates (partition-pruned scans) ----
-    val segBlocks = io.read(spark, layout.postings)
-      .filter($"segment" === segment)
-    val segDocs = io.read(spark, layout.docs).filter($"segment" === segment)
-    val fields = segDocs.columns.filter(_.startsWith("dl_"))
-      .map(_.stripPrefix("dl_")).toSeq.sorted
-
-    // ---- dictionary: touched buckets only — (old ⊎ segment) per bucket,
-    // committed via dynamic partition overwrite (no staged swap, no rename:
-    // untouched partitions are never read OR rewritten) ----
-    // persisted: the aggregate feeds two actions (the touched-pair collect
-    // and the merge-join write) — without the persist the segment scan +
-    // aggregation runs twice per micro-batch
-    val segDict = segBlocks.groupBy($"field", $"term")
-      .agg(sum($"n").as("df2"), sum($"sumTf").as("totalTf2"),
-        count(lit(1)).as("nBlocks2"), max($"maxTf").as("maxTf2"),
-        min($"minDl").as("minDl2"),
-        // metrics contributions ride the same scan (bc2/raw2 roll up below
-        // instead of a second segment aggregation)
-        sum($"nBytes").as("bc2"),
-        sum(lit(16L) * $"n" + lit(4L) * $"sumTf").as("raw2"))
-      .withColumn("tlen", length($"term"))
-      .withColumn("termBucket", termBucketCol(nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val segMet = try {
-    // ONE rollup job yields the touched (tlen, termBucket) pairs AND the
-    // per-field metrics contributions (previously two driver actions over
-    // the same persisted aggregate). Rows collected stay bounded by the
-    // batch's distinct (field, tlen, termBucket) triples + rollup levels —
-    // a driver list by construction, same shape as KeyMap's touched-bucket
-    // collect. grouping_id bits for rollup(field, tlen, termBucket):
-    // 0 = detail triples (the touched pairs, deduped across fields),
-    // 3 = field present / pair rolled up (the per-field metric sums).
-    val segRolled = segDict.rollup($"field", $"tlen", $"termBucket")
-      .agg(grouping_id().cast("long").as("gid"), sum($"df2").as("p"),
-        sum($"nBlocks2").as("bl"), sum($"bc2").as("bc"), sum($"raw2").as("raw"))
-      .collect()
-    val touched = segRolled.filter(_.getAs[Long]("gid") == 0L)
-      .map(r => r.getAs[Int]("tlen") -> r.getAs[Int]("termBucket")).distinct
-    if (touched.isEmpty) {
-      // a zero-posting segment contributes nothing to the dictionary
-    } else {
-      // partition-pruning predicate, grouped by tlen (≤ max term length
-      // OR-arms). Predicate hygiene (VERDICT r5 item #7): a band where the
-      // batch touches most buckets would mint a near-nBuckets-arm isin —
-      // reading the WHOLE band instead costs at most ~2× the touched
-      // volume (untouched rows merge unchanged and are rewritten
-      // byte-identical) and keeps the plan O(bands), never O(batch vocab).
-      val prune = touched.groupBy(_._1).map { case (tl, bs) =>
-        val buckets = bs.map(_._2).distinct.toIndexedSeq
-        if (buckets.size * 2L >= nBuckets) col("tlen") === tl
-        else col("tlen") === tl && col("termBucket").isin(buckets: _*)
-      }.reduce(_ || _)
-      val oldDict = io.read(spark, layout.dictionary).filter(prune)
-        .select($"field", $"term", $"df", $"totalTf", $"nBlocks", $"maxTf", $"minDl")
-      val merged = oldDict
-        .join(segDict.drop("tlen", "termBucket"), Seq("field", "term"), "full_outer")
-        .select($"field", $"term",
-          (coalesce($"df", lit(0L)) + coalesce($"df2", lit(0L))).as("df"),
-          (coalesce($"totalTf", lit(0L)) + coalesce($"totalTf2", lit(0L))).as("totalTf"),
-          (coalesce($"nBlocks", lit(0L)) + coalesce($"nBlocks2", lit(0L))).as("nBlocks"),
-          greatest($"maxTf", $"maxTf2").as("maxTf"),
-          least($"minDl", $"minDl2").as("minDl"))
-        .withColumn("tlen", length($"term"))
-        .withColumn("termBucket", termBucketCol(nBuckets))
-        .repartition($"tlen", $"termBucket").sortWithinPartitions("field", "term")
-      io.overwritePartitions(merged, layout.dictionary, Seq("tlen", "termBucket"))
-    }
-
-    // segment metrics contributions: the field-level rows of the same
-    // rollup (gid = 3: field present, tlen/termBucket rolled up)
-    segRolled.filter(_.getAs[Long]("gid") == 3L)
-      .map(r => r.getString(0) -> r).toMap
-    } finally segDict.unpersist(false)
-
-    // ---- stats: tiny (one row per field) — merge on the driver ----
-    val segAggCols = count(lit(1)).as("n") +:
-      sum(when(!$"shaOk", 1L).otherwise(0L)).as("shaViol") +:
-      fields.map(f => sum(col(s"dl_$f").cast("long")).as(s"sumdl_$f"))
-    val segAgg = segDocs.agg(segAggCols.head, segAggCols.tail: _*).collect()(0)
-    def nn(l: java.lang.Long): Long = Option(l).map(_.longValue).getOrElse(0L)
-    val segN = segAgg.getAs[Long]("n")
-    val segShaViol = nn(segAgg.getAs[java.lang.Long]("shaViol"))
-    val oldByField = oldStatRows.map(r => r.getString(0) -> r).toMap
-    val statRows = fields.map { f =>
-      val old = oldByField.get(f)
-      val n = old.map(_.getLong(1)).getOrElse(0L) + segN
-      val sumDl = old.map(_.getAs[Long]("sumDl")).getOrElse(0L) +
-        nn(segAgg.getAs[java.lang.Long](s"sumdl_$f"))
-      (f, n, if (n > 0) sumDl.toDouble / n else 0.0, sumDl)
-    }
-    io.overwritePartitions(
-      statRows.toDF("field", "n", "avgdl", "sumDl").coalesce(1),
-      layout.stats, Nil)
-
-    // ---- metrics: combinable columns merged, fan-in carried ----
-    val oldMet = io.read(spark, layout.metrics).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val nDocsTotal = statRows.headOption.map(_._2).getOrElse(0L)
-    val metRows = fields.map { f =>
-      val o = oldMet.get(f)
-      val s = segMet.get(f)
-      def oL(name: String) = o.map(_.getAs[Long](name)).getOrElse(0L)
-      def sL(name: String) = s.map(r => nn(r.getAs[java.lang.Long](name))).getOrElse(0L)
-      (f, nDocsTotal,
-        oL("postingsEmitted") + sL("p"),
-        oL("blocks") + sL("bl"),
-        oL("bytesCompressed") + sL("bc"),
-        oL("bytesRawEstimate") + sL("raw"),
-        oL("maxMergeFanIn"), // carried — see scaladoc
-        o.map(_.getAs[Double]("avgMergeFanIn")).getOrElse(0.0), // carried
-        oL("shaViolations") + segShaViol,
-        0L)
-    }
-    io.overwritePartitions(
-      metRows.toDF("field", "docs", "postingsEmitted", "blocks",
-        "bytesCompressed", "bytesRawEstimate", "maxMergeFanIn",
-        "avgMergeFanIn", "shaViolations", "docIdCollisions").coalesce(1),
-      layout.metrics, Nil)
-    true
   }
 
   def fileExists(spark: SparkSession, path: String): Boolean =

@@ -28,7 +28,7 @@ object Vacuum {
     val layout = IndexBuilder.Layout(dir)
     Seq(layout.docs, layout.postings, layout.dictionary,
       layout.dictionaryMeta, layout.stats, layout.lineage, layout.metrics,
-      layout.derivedSegments, Deletes.tombstones(dir), KeyMap.table(dir))
+      Deletes.tombstones(dir), KeyMap.table(dir))
   }
 
   /** Reclaim files unreachable from the newest `retain` snapshots of every

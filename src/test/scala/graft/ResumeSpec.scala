@@ -67,174 +67,78 @@ class ResumeSpec extends AnyFunSuite {
 
   test("incremental derived maintenance == full re-derivation, bitwise") {
     import spark.implicits._
-    // three straddled batches (cuts inside docGroups of 128) ingested three
-    // ways: derived tables maintained incrementally, re-derived fully every
-    // batch, and a monolithic fresh build
+    // derived tables maintained across incremental appends: three straddled
+    // batches (cuts inside docGroups of 128) ingested as a build and two
+    // resumes, against a monolithic fresh build; a tiny bucket target so
+    // the vocabulary spans many (tlen, termBucket) pairs
     val all = CorpusGen.generateDF(spark, 600L, seed = 53L, partitions = 4)
-    val inc = "/tmp/graft-test/incderived-inc"
-    val fullRe = "/tmp/graft-test/incderived-fullre"
-    val mono = "/tmp/graft-test/incderived-mono"
+    val res = "/tmp/graft-test/straddled-resumes"
+    val mono = "/tmp/graft-test/straddled-mono"
+    val p = params.copy(dictTargetBucketRows = 32L)
     val cuts = Seq(0L -> 150L, 150L -> 400L, 400L -> Long.MaxValue)
-    def ingest(dir: String, incremental: Boolean): Unit =
-      cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
-        val batch = all.filter($"docId" >= lo && $"docId" < hi)
-        val p = params.copy(inputSnapshot = s"s$i",
-          incrementalDerived = incremental)
-        if (i == 0) IndexBuilder.build(spark, batch, dir, p)
-        else IndexBuilder.resume(spark, batch, dir, p)
-      }
-    ingest(inc, incremental = true)
-    ingest(fullRe, incremental = false)
-    IndexBuilder.build(spark, all, mono, params)
+    cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
+      val batch = all.filter($"docId" >= lo && $"docId" < hi)
+      val pi = p.copy(inputSnapshot = s"s$i")
+      if (i == 0) IndexBuilder.build(spark, batch, res, pi)
+      else IndexBuilder.resume(spark, batch, res, pi)
+    }
+    IndexBuilder.build(spark, all, mono, p)
 
     def rows(d: String, t: String, cols: Seq[String]) =
       spark.read.parquet(s"$d/$t").select(cols.map(col): _*)
         .collect().map(_.toSeq).toSet
-    // vs the SAME-segmentation twin (fullRe): everything must be bitwise
-    // equal, including block-packing-dependent columns (nBlocks, bytes)
-    val dictCols = Seq("field", "term", "df", "totalTf", "nBlocks",
-      "maxTf", "minDl", "tlen")
-    assert(rows(inc, "dictionary", dictCols) == rows(fullRe, "dictionary", dictCols),
-      "incremental dictionary != full re-derivation")
-    // vs the MONOLITHIC build: packing-independent columns must agree (a
-    // 3-segment index legitimately has more, partial, blocks)
-    val dictStable = Seq("field", "term", "df", "totalTf", "maxTf", "minDl", "tlen")
-    assert(rows(inc, "dictionary", dictStable) == rows(mono, "dictionary", dictStable),
-      "incremental dictionary != monolithic build on packing-independent columns")
+    // packing-independent dictionary columns, the bucket assignment included
+    // (a 3-segment index legitimately has more, partial, blocks)
+    val nb = IndexBuilder.dictBucketCount(spark, mono).get
+    assert(nb >= 8, s"fixture too small to exercise bucketing (nBuckets=$nb)")
+    assert(IndexBuilder.dictBucketCount(spark, res).contains(nb))
+    val dictStable = Seq("field", "term", "df", "totalTf", "maxTf", "minDl",
+      "tlen", "termBucket")
+    assert(rows(res, "dictionary", dictStable) == rows(mono, "dictionary", dictStable),
+      "resumed dictionary != monolithic build on packing-independent columns")
     val statCols = Seq("field", "n", "avgdl", "sumDl")
-    assert(rows(inc, "stats", statCols) == rows(mono, "stats", statCols),
-      "incremental stats != monolithic build (avgdl must be BITWISE equal)")
-    val combinable = Seq("field", "docs", "postingsEmitted", "blocks",
-      "bytesCompressed", "bytesRawEstimate", "shaViolations", "docIdCollisions")
-    assert(rows(inc, "metrics", combinable) == rows(fullRe, "metrics", combinable),
-      "incremental metrics (combinable columns) != full re-derivation")
-
-    // fan-in is CARRIED by the incremental path (not combinable from
-    // aggregates): after batch 0 the corpus spanned 2 groups, the straddled
-    // appends grew common terms to 5 — the stale carried value is also the
-    // sentinel proving the incremental path actually ran (no silent
-    // fallback to the full refresh)
+    assert(rows(res, "stats", statCols) == rows(mono, "stats", statCols),
+      "resumed stats != monolithic build (avgdl must be BITWISE equal)")
+    // combinable metrics and fan-in are packing-independent: after batch 0
+    // the corpus spanned 2 groups, the straddled appends grew common terms
+    // to 5 — exact right after the last resume
+    val metricCols = Seq("field", "docs", "postingsEmitted", "bytesRawEstimate",
+      "maxMergeFanIn", "avgMergeFanIn", "shaViolations", "docIdCollisions")
+    assert(rows(res, "metrics", metricCols) == rows(mono, "metrics", metricCols),
+      "resumed metrics != monolithic build")
     def maxFan(d: String) = spark.read.parquet(s"$d/metrics")
       .select("maxMergeFanIn").as[Long].collect().head
     assert(maxFan(mono) == 5L, s"corpus shape drifted: maxFan=${maxFan(mono)}")
-    assert(maxFan(inc) == 2L,
-      "expected the carried (stale) fan-in — did the incremental path silently fall back?")
-    // ... and the full/audit refresh brings fan-in up to date (compare to
-    // the same-segmentation twin — fan-in itself is packing-independent,
-    // bytes/blocks are not)
-    IndexBuilder.refreshDerived(spark, inc)
-    val metricAll = combinable ++ Seq("maxMergeFanIn", "avgMergeFanIn")
-    assert(rows(inc, "metrics", metricAll) == rows(fullRe, "metrics", metricAll),
-      "audit refresh did not reconcile the carried fan-in")
+    assert(maxFan(res) == 5L, s"fan-in not current after the resume: ${maxFan(res)}")
+    // packing-dependent metrics match the resumed index's own postings
+    val blocks = spark.read.parquet(s"$res/postings")
+      .agg(count(lit(1)), sum(length($"bytes"))).collect()(0)
+    assert(rows(res, "metrics", Seq("blocks", "bytesCompressed")) ==
+      Set(Seq(blocks.getLong(0), blocks.getLong(1))),
+      "metrics blocks/bytes do not describe the committed postings")
 
     // query-level differential on top of the table-level one
-    val iInc = new SearchIndex(spark, inc)
+    val iRes = new SearchIndex(spark, res)
     val iMono = new SearchIndex(spark, mono)
     Seq("python tutorial", "machine learning", "the if return").foreach { q =>
-      val a = QueryEngine.search(iInc, q, SearchOpts()).collect().map(_.toSeq).toSeq
+      val a = QueryEngine.search(iRes, q, SearchOpts()).collect().map(_.toSeq).toSeq
       val b = QueryEngine.search(iMono, q, SearchOpts()).collect().map(_.toSeq).toSeq
-      assert(a == b, s"incrementally-maintained index answers differently on '$q'")
+      assert(a == b, s"resumed index answers differently on '$q'")
     }
   }
 
-  test("incremental dictionary maintenance rewrites ONLY the touched " +
-      "(tlen, termBucket) partitions; untouched files are bit-identical") {
-    import spark.implicits._
-    val all = CorpusGen.generateDF(spark, 600L, seed = 67L, partitions = 4)
-    val dir = "/tmp/graft-test/dict-buckets"
-    // tiny target so the vocabulary spans many buckets at test scale
-    val p = params.copy(dictTargetBucketRows = 32L)
-    IndexBuilder.build(spark, all.filter($"docId" < 590), dir, p)
-    val nb = IndexBuilder.dictBucketCount(spark, dir).get
-    assert(nb >= 8, s"fixture too small to exercise bucketing (nBuckets=$nb)")
-
-    // dictionary file inventory: (tlen, termBucket, fileName) -> length
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dictPath = new org.apache.hadoop.fs.Path(s"$dir/dictionary")
-    val fs = dictPath.getFileSystem(hconf)
-    def inventory(): Map[String, Long] = {
-      val out = scala.collection.mutable.Map[String, Long]()
-      val it = fs.listFiles(dictPath, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out(st.getPath.toString.stripPrefix(dictPath.toString)) = st.getLen
-      }
-      out.toMap
-    }
-    val before = inventory()
-
-    // a SMALL batch: its vocabulary touches a strict subset of buckets
-    IndexBuilder.resume(spark, all.filter($"docId" >= 590), dir,
-      p.copy(inputSnapshot = "s1"))
-    val after = inventory()
-
-    // touched pairs, recomputed from the committed segment's own terms
-    val touched = spark.read.parquet(s"$dir/postings")
-      .filter($"segment" === "s1").select($"term").distinct()
-      .as[String].collect()
-      .map(t => (t.length, IndexBuilder.termBucketOf(t, nb))).toSet
-    def pair(f: String): (Int, Int) = {
-      val m = "tlen=(\\d+)/termBucket=(\\d+)".r.findFirstMatchIn(f).get
-      (m.group(1).toInt, m.group(2).toInt)
-    }
-    val allPairs = before.keySet.map(pair)
-    assert(touched.nonEmpty && (allPairs -- touched).nonEmpty,
-      s"fixture must leave some partitions untouched " +
-        s"(touched=${touched.size}, existing=${allPairs.size})")
-    // every file in an UNTOUCHED partition survives byte-for-byte (same
-    // path, same length) — the incremental path never rewrote it
-    before.foreach { case (f, len) =>
-      if (!touched.contains(pair(f)))
-        assert(after.get(f).contains(len),
-          s"untouched partition rewritten by the incremental path: $f")
-    }
-    // ... and some touched partition actually changed
-    assert(before.keySet != after.keySet, "the incremental rewrite wrote nothing")
-    // table-level result identical to a monolithic build (values, not files)
-    val full = "/tmp/graft-test/dict-buckets-full"
-    IndexBuilder.build(spark, all, full, p)
-    def dict(d: String) = spark.read.parquet(s"$d/dictionary")
-      .select("field", "term", "df", "totalTf", "maxTf", "minDl", "termBucket")
-      .collect().map(_.toSeq).toSet
-    assert(dict(dir) == dict(full), "bucketed incremental != monolithic")
-  }
-
-  test("dictionary_meta absent (crash window / pre-bucket index) -> " +
-      "incremental refuses; the full refresh restores the marker") {
+  test("dictionary_meta absent (crash window) -> a resume restores it") {
     import spark.implicits._
     val all = CorpusGen.generateDF(spark, 300L, seed = 71L, partitions = 2)
     val dir = "/tmp/graft-test/dict-meta-crash"
     IndexBuilder.build(spark, all.filter($"docId" < 150), dir, params)
     assert(IndexBuilder.dictBucketCount(spark, dir).isDefined)
     graft.io.ParquetTableIO.drop(spark, s"$dir/dictionary_meta")
-    assert(!IndexBuilder.refreshDerivedIncremental(spark, dir, "sX"),
-      "no bucket marker -> the incremental path cannot address buckets")
-    // an ordinary resume falls back to the full refresh and heals the marker
+    assert(IndexBuilder.dictBucketCount(spark, dir).isEmpty)
     IndexBuilder.resume(spark, all.filter($"docId" >= 150), dir,
       params.copy(inputSnapshot = "s1"))
     assert(IndexBuilder.dictBucketCount(spark, dir).isDefined,
-      "full refresh must restore dictionary_meta")
-  }
-
-  test("incremental refresh refuses a snapshot already baked in (crash-retry falls back to full)") {
-    import spark.implicits._
-    val all = CorpusGen.generateDF(spark, 300L, seed = 59L, partitions = 2)
-    val dir = "/tmp/graft-test/incderived-retry"
-    IndexBuilder.build(spark, all.filter($"docId" < 150), dir, params)
-    IndexBuilder.resume(spark, all.filter($"docId" >= 150), dir,
-      params.copy(inputSnapshot = "s1"))
-    // s1 is in the manifest now: a direct incremental call for it must
-    // refuse (its contribution may already be merged) ...
-    assert(!IndexBuilder.refreshDerivedIncremental(spark, dir, "s1"),
-      "re-merging an already-baked segment would double-count postings")
-    // ... and so must one for a crashed-swap residue state
-    val stage = s"$dir/dictionary._stage"
-    graft.io.ParquetTableIO.overwritePartitions(
-      spark.read.parquet(s"$dir/dictionary"), stage, Nil)
-    assert(!IndexBuilder.refreshDerivedIncremental(spark, dir, "s2"),
-      "stage residue must force the full (sweeping) refresh")
-    graft.io.ParquetTableIO.drop(spark, stage)
+      "the refresh must restore dictionary_meta")
   }
 
   test("resume on a complete index is a no-op for postings counts") {
@@ -347,52 +251,6 @@ class ResumeSpec extends AnyFunSuite {
     // and later appends neither re-ingest it nor trip the collision audit
     IndexBuilder.resume(spark, b3, dir, params.copy(inputSnapshot = "s2"))
     assert(spark.read.parquet(s"$dir/docs").count() == 140L)
-  }
-
-  test("lineage int32 partitionId (pre-contract index) is migrated once at resume") {
-    import spark.implicits._
-    val all = CorpusGen.generateDF(spark, 300L, seed = 61L, partitions = 2)
-    val dir = "/tmp/graft-test/lineage-v1"
-    val full = "/tmp/graft-test/lineage-v1-full"
-    IndexBuilder.build(spark, all.filter($"docId" < 150), dir, params)
-
-    // fabricate the pre-contract state: lineage partitionId downcast to
-    // int32, width marker absent
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val linPath = new org.apache.hadoop.fs.Path(s"$dir/lineage")
-    val fs = linPath.getFileSystem(hconf)
-    val casted = spark.read.parquet(s"$dir/lineage")
-      .withColumn("partitionId", col("partitionId").cast("int"))
-    graft.io.ParquetTableIO.overwriteTable(casted, s"$dir/lineage_tmp",
-      Seq("inputSnapshot"))
-    fs.delete(linPath, true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/lineage_tmp"), linPath)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_lineage_v2"), false)
-    assert(spark.read.parquet(s"$dir/lineage").schema("partitionId").dataType ==
-      org.apache.spark.sql.types.IntegerType, "fixture failed to downcast")
-
-    // resume must detect the int32 width and rewrite BEFORE appending long
-    // rows beside it (mixed-width parquet poisons schema merging)
-    IndexBuilder.resume(spark, all.filter($"docId" >= 150), dir,
-      params.copy(inputSnapshot = "snapshot-1"))
-
-    // every lineage partition file is int64 now (probe per segment dir —
-    // a merged-schema read can mask a single stale int32 file)
-    fs.listStatus(linPath).filter(_.isDirectory).foreach { st =>
-      assert(spark.read.parquet(st.getPath.toString)
-        .schema("partitionId").dataType ==
-        org.apache.spark.sql.types.LongType,
-        s"${st.getPath.getName} still int32 after migration")
-    }
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_lineage_v2")),
-      "migration must stamp the width marker")
-    // and the migrated index behaves exactly like a monolithic build
-    IndexBuilder.build(spark, all, full, params)
-    assert(spark.read.parquet(s"$dir/docs").count() == 300L)
-    def dict(d: String) = spark.read.parquet(s"$d/dictionary")
-      .select("field", "term", "df", "totalTf").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    assert(dict(dir) == dict(full), "migration changed index contents")
   }
 
   test("hash-id corpora (no docId column): resume skips whole done groups") {
