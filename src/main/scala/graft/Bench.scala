@@ -361,7 +361,7 @@ object Bench {
 
       // north-rule build metrics (postings emitted, bytes compressed,
       // merge fan-in) from the metrics table
-      val met = spark.read.parquet(s"$dir/metrics").collect()(0)
+      val met = graft.io.ParquetTableIO.read(spark, s"$dir/metrics").collect()(0)
       val ls = lats.values.toSeq
       RunResult(buildSec, nDocs / buildSec, lats, pct(ls, 0.50), pct(ls, 0.95),
         batch.size / concurrentSec,
@@ -426,7 +426,7 @@ object Bench {
         if (i == 0) IndexBuilder.build(spark, corpus.filter(col("docId") < upTo), dir, p)
         else IndexBuilder.resume(spark, corpus.filter(col("docId") < upTo), dir, p)
       }
-      val blocksBefore = spark.read.parquet(s"$dir/postings").count().toDouble
+      val blocksBefore = graft.io.ParquetTableIO.read(spark, s"$dir/postings").count().toDouble
 
       def hotP50(): Double = {
         val idx = new SearchIndex(spark, dir).warm()
@@ -444,7 +444,7 @@ object Bench {
       val merged = Compaction.compact(spark, dir, blockSize = params.blockSize)
       val compactSec = (System.nanoTime() - t0) / 1e9
       require(merged.nonEmpty, "compaction probe: compact was a no-op")
-      val blocksAfter = spark.read.parquet(s"$dir/postings").count().toDouble
+      val blocksAfter = graft.io.ParquetTableIO.read(spark, s"$dir/postings").count().toDouble
       val p50Compact = hotP50()
 
       // derived-maintenance cost at the streaming cadence: a standalone
@@ -656,7 +656,7 @@ object Bench {
         IndexBuilder.deleteDir(spark, dir)
         val all = corpusTo(n + batchN)
         IndexBuilder.build(spark, all.filter(col("docId") < n), dir, params)
-        val vocab = spark.read.parquet(s"$dir/dictionary").count().toDouble
+        val vocab = graft.io.ParquetTableIO.read(spark, s"$dir/dictionary").count().toDouble
         val before = dictFiles(dir)
         val t0 = System.nanoTime()
         IndexBuilder.resume(spark, all.filter(col("docId") >= n), dir,

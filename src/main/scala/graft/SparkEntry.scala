@@ -1,6 +1,7 @@
 package graft
 
 import graft.index.{BlockRow, Codec, Compaction, Deletes, IndexBuilder, Upsert}
+import graft.io.ParquetTableIO
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.query.{QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
@@ -129,7 +130,7 @@ object SparkEntry {
         dir, p.copy(inputSnapshot = "batch-1"))
       IndexBuilder.resume(spark, corpus, dir, p.copy(inputSnapshot = "batch-2"))
       // falsifiability: the fixture must really fragment, and really merge
-      val segs = spark.read.parquet(s"$dir/lineage")
+      val segs = ParquetTableIO.read(spark, s"$dir/lineage")
         .select("inputSnapshot").distinct().count()
       require(segs == 3, s"compaction gate fixture: expected 3 segments, got $segs")
       require(Compaction.compact(spark, dir, blockSize = 128).nonEmpty,
@@ -157,7 +158,7 @@ object SparkEntry {
       IndexBuilder.resume(spark, corpus.filter(col("docId") <= 2 * maxId / 3),
         dir, p.copy(inputSnapshot = "batch-1"))
       IndexBuilder.resume(spark, corpus, dir, p.copy(inputSnapshot = "batch-2"))
-      val segs = spark.read.parquet(s"$dir/lineage")
+      val segs = ParquetTableIO.read(spark, s"$dir/lineage")
         .select("inputSnapshot").distinct().count()
       require(segs == 3, s"incremental gate fixture: expected 3 segments, got $segs")
       require(IndexBuilder.dictBucketCount(spark, dir).isDefined,
@@ -427,7 +428,7 @@ object SparkEntry {
       val idx = docsIndexUpserted(s, d)
       require(graft.index.KeyMap.validBuckets(s, idx.dir, Seq("repo", "path"))
         .nonEmpty, "q70 fixture: keymap marker must be valid after the upsert")
-      s.read.parquet(graft.index.KeyMap.table(idx.dir))
+      ParquetTableIO.read(s, graft.index.KeyMap.table(idx.dir))
         .select(col("repo"), col("path"), col("docId").cast("long").as("doc_id"),
           col("sha256").as("sha"))
     }),

@@ -88,7 +88,7 @@ object ExplainDump {
     // extra shuffle); the visible plan pieces are the shard-pruned tombstone
     // load and the fallback wildcard arm's anti-join
     graft.index.Deletes.deleteWhere(spark, dir, pmod(col("docId"), lit(97)) === 5)
-    val shardTombs = spark.read.parquet(graft.index.Deletes.tombstones(dir))
+    val shardTombs = graft.io.ParquetTableIO.read(spark, graft.index.Deletes.tombstones(dir))
       .filter(pmod(col("docGroup"), lit(4L)) === 1L).select("docId")
     val delIndex = new SearchIndex(spark, dir)
     val delCand = QueryEngine.candidates(delIndex, "python tutorial",
@@ -121,7 +121,7 @@ object ExplainDump {
     val snapDir = "/tmp/graft-explain/snap"
     graft.io.SnapshotTableIO.drop(spark, snapDir)
     graft.io.SnapshotTableIO.overwritePartitions(
-      spark.read.parquet(s"$dir/postings"), snapDir, Seq("docGroup", "segment"))
+      graft.io.ParquetTableIO.read(spark, s"$dir/postings"), snapDir, Seq("docGroup", "segment"))
     val snapScan = graft.io.SnapshotTableIO.read(spark, snapDir)
       .filter(col("field") === "content" && col("term") === "python")
       .filter(col("docGroup") === 0L)

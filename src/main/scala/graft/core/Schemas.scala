@@ -1,10 +1,9 @@
 package graft.core
 
-/** Core row types of the engine (FIXTURES.md §1-2).
-  *
-  * All tables are written as parquet in this sandbox with the exact schemas
-  * the Iceberg deployment would use; the catalog binding is config-only
-  * (see graft.io.TableIO).
+/** Core row types of the engine (FIXTURES.md §1-2): the input row and the
+  * codec's posting. The index tables' columns are written by
+  * graft.index.IndexBuilder (see `IndexBuilder.Layout`); their storage is
+  * graft.io.TableIO.
   */
 
 /** Engine input row, per BASELINE.json input_hint:
@@ -21,87 +20,5 @@ case class SourceFile(
     content: String,
     sha256: String)
 
-/** Per-document metadata + BM25 norms, one row per indexed doc. */
-case class DocRow(
-    docId: Long,
-    repo: String,
-    path: String,
-    lang: String,
-    dl: Int,            // tokens in `content` (all tokens, Analyzer contract)
-    sha256: String,
-    qualityScore: Double,
-    repoScore: Double)
-
 /** One posting before block encoding. */
 case class Posting(docId: Long, tf: Int, dl: Int, positions: Array[Int])
-
-/** A compressed posting block: <= blockSize postings of one (field, term),
-  * restricted to one docGroup (docId range segment). Blocks of a term are
-  * globally ordered by (docGroup, blockIdx); docIds are strictly increasing
-  * within and across a term's blocks.
-  *
-  * `bytes` layout (varint = unsigned LEB128):
-  *   varint(n), then n x [ varint(docIdDelta) varint(tf) varint(dl)
-  *                         varint(nPos) nPos x varint(posDelta) ]
-  * First docIdDelta is relative to `firstDocId`.
-  *
-  * maxTfNorm/minTfNorm are block-max metadata for WAND pruning
-  * (tfNorm = tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)), computed at build time
-  * with the final corpus avgdl; the query side multiplies by idf, which may
-  * be negative under the documented idf — hence both max and min are kept so
-  * the upper bound is idf>=0 ? idf*max : idf*min).
-  */
-case class PostingBlock(
-    field: String,
-    term: String,
-    docGroup: Long,
-    blockIdx: Int,
-    firstDocId: Long,
-    lastDocId: Long,
-    n: Int,
-    maxTfNorm: Double,
-    minTfNorm: Double,
-    bytes: Array[Byte])
-
-/** Dictionary entry: one row per (field, term). nBlocks/maxTf/minDl are the
-  * term-level seek/upper-bound metadata (skip-list role); the stored table
-  * is partitioned by tlen = length(term) so fuzzy expansion prunes to the
-  * matching length bands. */
-case class DictEntry(field: String, term: String, df: Long, totalTf: Long,
-    nBlocks: Long, maxTf: Int, minDl: Int)
-
-/** Corpus-level BM25 stats, one row per indexed field. */
-case class FieldStats(field: String, n: Long, avgdl: Double)
-
-/** Per-(docGroup, segment) build lineage for checkpoint-resume
-  * (north_rule). One row per docGroup per input snapshot; the table is
-  * partitioned by inputSnapshot so a batch's commit (and its crash-retry)
-  * overwrites exactly its own partition. Committed state per group =
-  * max(maxDocId) over done rows — always an aggregation over the table,
-  * never driver memory. */
-case class LineageRow(
-    partitionId: Long,      // the docGroup
-    status: String,         // "done"
-    docs: Long,
-    maxDocId: Long,         // append frontier: rows above it are pending
-    postingsEmitted: Long,
-    bytesCompressed: Long,
-    mergeFanIn: Long,       // distinct terms in this group (fan-in contribution)
-    shaOk: Boolean,
-    updatedAt: java.sql.Timestamp,
-    inputSnapshot: String)  // partition column
-
-/** Build metrics (north_rule: postings emitted, bytes compressed, merge
-  * fan-in), one row per build. */
-case class BuildMetrics(
-    field: String,
-    docs: Long,
-    postingsEmitted: Long,
-    blocks: Long,
-    bytesCompressed: Long,
-    bytesRawEstimate: Long,
-    maxMergeFanIn: Long,    // max docGroups any single term spans
-    avgMergeFanIn: Double,
-    shaViolations: Long,
-    docIdCollisions: Long)  // 0 in any committed build (the audit throws
-                            // first); the column records the invariant

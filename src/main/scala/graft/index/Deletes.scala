@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.io.{ParquetTableIO, TableIO}
+import graft.io.{ParquetFooters, ParquetTableIO, TableIO}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -201,9 +201,11 @@ object Deletes {
     else None
   }
 
+  /** Live tombstone count, summed from the table files' footers (no job):
+    * every write stores distinct rows, so file rows are tombstones. */
   def count(spark: SparkSession, indexDir: String,
       io: TableIO = ParquetTableIO): Long =
-    df(spark, indexDir, io).map(_.count()).getOrElse(0L)
+    df(spark, indexDir, io).map(ParquetFooters.rowCount).getOrElse(0L)
 
   /** Load the membership view — whole table, or one serving shard's slice
     * (`docGroup % n == i`, partition-pruned on the docGroup key so a shard
@@ -216,7 +218,10 @@ object Deletes {
     * anti-join path instead. Default unbounded — existing call sites whose
     * correctness REQUIRES every tombstone (compaction's physical purge,
     * the serving shard slice whose residency is bounded by shard sizing)
-    * keep the old behavior; SearchIndex opts into its broadcast budget. */
+    * keep the old behavior; SearchIndex opts into its broadcast budget.
+    * The budget is checked against the whole table's [[count]] (file
+    * footers, no job), so the view's aggregation is the load's only scan;
+    * a shard slice is over budget when the whole table is. */
   def loadSet(spark: SparkSession, indexDir: String,
       shard: Option[(Int, Int)] = None,
       io: TableIO = ParquetTableIO,
@@ -225,12 +230,12 @@ object Deletes {
     df(spark, indexDir, io) match {
       case None => DeleteSet.empty
       case Some(t) =>
+        if (maxEntries != Long.MaxValue && ParquetFooters.rowCount(t) > maxEntries)
+          return DeleteSet.overBudgetMarker
         val filtered = shard match {
           case Some((i, n)) => t.filter(pmod(col("docGroup"), lit(n.toLong)) === i.toLong)
           case None => t
         }
-        if (maxEntries != Long.MaxValue && filtered.count() > maxEntries)
-          return DeleteSet.overBudgetMarker
         val grouped = filtered
           .groupBy(col("docGroup"))
           .agg(sort_array(collect_list(col("docId"))).as("ids"))

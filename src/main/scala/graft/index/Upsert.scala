@@ -163,13 +163,15 @@ object Upsert {
     // over the input) — persist it so the two stage writes and the final
     // unchanged-count evaluate that chain once
     incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // stage re-reads take the schema just written: no inference job
     tombs0.write.parquet(s"$stageP/tombs")
-    val tombs = spark.read.parquet(s"$stageP/tombs")
+    val tombs = spark.read.schema(tombs0.schema).parquet(s"$stageP/tombs")
     // the adds side stages PRE-id: this is the single evaluation of the
     // probe-join/window chain — the count, the id-assignment jobs and the
     // resume all read the staged parquet, never the live plan again
-    adds.drop("_sha").write.parquet(s"$stageP/adds0")
-    val stagedAdds = spark.read.parquet(s"$stageP/adds0")
+    val adds0 = adds.drop("_sha")
+    adds0.write.parquet(s"$stageP/adds0")
+    val stagedAdds = spark.read.schema(adds0.schema).parquet(s"$stageP/adds0")
 
     // marker OFF before the first index mutation (the keymap TABLE stays
     // readable for this batch's lazy plans): a crash anywhere below leaves
@@ -198,7 +200,8 @@ object Upsert {
         // pin the id-assigned adds (see stage comment above): resume's
         // actions must not re-scan pre-mutation docs files through this plan
         withIds.write.parquet(s"$stageP/adds")
-        IndexBuilder.resume(spark, spark.read.parquet(s"$stageP/adds"), dir, params)
+        IndexBuilder.resume(spark,
+          spark.read.schema(withIds.schema).parquet(s"$stageP/adds"), dir, params)
         nAdds
       }
     // deletes AFTER the append (see class doc: a crash here duplicates

@@ -48,7 +48,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    NO filesystem deletes at all (retention/rollover becomes a pure
   *    metadata operation; physical reclaim is [[vacuum]]);
   *  - `read`: resolves the newest manifest ONCE at call time and plans over
-  *    that immutable file list (`basePath` keeps partition columns and
+  *    that immutable file list with the manifest's stored data schema (no
+  *    schema-inference job; `basePath` keeps partition columns and
   *    partition pruning), so an open scan keeps reading ITS snapshot while
   *    later commits land. A crash between data-file moves and the manifest
   *    rename leaves orphan files that no manifest references — invisible to
@@ -244,18 +245,21 @@ object SnapshotTableIO extends TableIO {
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
     readAt(spark, path, readManifest(spark, path, version))
 
-  private def readAt(spark: SparkSession, path: String, m: Manifest): DataFrame =
+  private def readAt(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    val full = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    val (pc, dc) = full.fields.partition(f => m.partitionCols.contains(f.name))
     if (m.files.isEmpty) {
       // zero-file snapshot: reconstruct the read-back shape (data columns
       // then partition columns) from the stored schema
-      val full = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-      val (pc, dc) = full.fields.partition(f => m.partitionCols.contains(f.name))
       val ordered = StructType(dc ++ m.partitionCols.flatMap(c => pc.find(_.name == c)))
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ordered)
     } else {
+      // the stored data columns stand in for schema inference (no job);
+      // partition columns are still inferred from the paths
       val abs = m.files.map(f => s"$path/$f")
-      spark.read.option("basePath", path).parquet(abs: _*)
+      spark.read.schema(StructType(dc)).option("basePath", path).parquet(abs: _*)
     }
+  }
 
   override def exists(spark: SparkSession, path: String): Boolean =
     currentVersion(spark, path).isDefined

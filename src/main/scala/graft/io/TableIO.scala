@@ -1,15 +1,35 @@
 package graft.io
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Storage abstraction for the engine's tables (docs, postings, dictionary,
-  * stats, lineage, metrics — see graft.core.Schemas).
+  * dictionary_meta, stats, lineage, metrics — see
+  * [[graft.index.IndexBuilder.Layout]] — plus the tombstone and keymap
+  * tables).
   *
   * The sandbox implementation is plain parquet with Spark's dynamic
   * partition overwrite; an Iceberg deployment implements the same four
   * operations with a catalog table (`overwritePartitions` becomes a
   * REPLACE/overwrite-by-filter snapshot commit, `deletePartitions` a
   * metadata delete) — nothing in the builder or query engine changes.
+  *
+  * A read never launches a Spark job. As in a catalog, a table's schema is
+  * metadata: [[ParquetTableIO]] takes the data columns from the footer of
+  * one data file (every file of a table has one schema — the index's
+  * format stamp), [[SnapshotTableIO]] from its committed manifest, and both
+  * hand it to `spark.read.schema`, so Spark skips its schema-inference job.
+  * Partition columns are still inferred from the partition paths (types
+  * and order as a plain `spark.read.parquet`). Only a table with no data
+  * file goes through Spark's inference, which raises its usual error.
   */
 trait TableIO {
   def read(spark: SparkSession, path: String): DataFrame
@@ -43,16 +63,22 @@ trait TableIO {
 
 object ParquetTableIO extends TableIO {
 
-  override def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  override def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    ParquetFooters.firstDataFile(root.getFileSystem(conf), root) match {
+      case Some(f) => spark.read.schema(ParquetFooters.schema(conf, f)).parquet(path)
+      case None => spark.read.parquet(path) // no data file: Spark's own error
+    }
+  }
 
   override def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   override def drop(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
@@ -97,11 +123,54 @@ object ParquetTableIO extends TableIO {
       else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName(v).replaceAll("([\\\\*?\\[\\]{}])", "\\\\$1")
     val glob = partitionSpec.map { case (c, v) => s"$c=${esc(v)}" }.mkString("/")
-    val p = new org.apache.hadoop.fs.Path(s"$path/$glob")
+    val p = new Path(s"$path/$glob")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.globStatus(p) match {
       case null => ()
       case sts => sts.foreach(st => fs.delete(st.getPath, true))
     }
+  }
+}
+
+/** Parquet footers, read in the calling process: the table metadata a
+  * read or a row count needs, without a Spark job. */
+private[graft] object ParquetFooters {
+
+  /** Spark's leaf-file filter: `_`/`.` names are metadata or in-flight
+    * residue (`_SUCCESS`, `_temporary`, `.crc`), except partition dirs. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The first data file under `root` in path order (depth-first over
+    * sorted listings, stopping at the first hit), if any. */
+  def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
+    def first(p: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(p).toSeq
+        .filterNot(st => hidden(st.getPath.getName))
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.map(_.getPath)
+        .orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
+    }
+    if (fs.exists(root)) first(root) else None
+  }
+
+  private def footer(conf: Configuration, file: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** The Spark schema a file was written with (the
+    * `org.apache.spark.sql.parquet.row.metadata` key), or its parquet
+    * schema converted when the key is missing — Spark's own footer rule. */
+  def schema(conf: Configuration, file: Path): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer(conf, file)),
+      new ParquetToSparkSchemaConverter(SQLConf.get))
+
+  /** Rows in the files a DataFrame scans, summed from their footers. */
+  def rowCount(df: DataFrame): Long = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.inputFiles.iterator
+      .flatMap(f => footer(conf, new Path(new java.net.URI(f))).getBlocks.asScala)
+      .map(_.getRowCount).sum
   }
 }

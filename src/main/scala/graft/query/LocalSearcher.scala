@@ -65,9 +65,13 @@ object LocalSearcher {
     /** This shard's tombstones only (the table is docGroup-partitioned, so
       * the load is partition-pruned the same way the blocks/docs scans are)
       * — a node's delete state is proportional to its shard, never the
-      * whole index's delete history (graft.index.Deletes scale posture). */
+      * whole index's delete history (graft.index.Deletes scale posture).
+      * Read through the index's storage, like every other table. The whole
+      * index reuses the set [[SearchIndex]] already loaded, unless that
+      * one is the over-budget marker: serving needs every tombstone. */
     val deletes: graft.index.DeleteSet =
-      graft.index.Deletes.loadSet(index.spark, index.dir, shard)
+      if (shard.isEmpty && !index.deletes.overBudget) index.deletes
+      else graft.index.Deletes.loadSet(index.spark, index.dir, shard, index.io)
 
     /** Query-term df, served from a bounded hot cache backed by the
       * tlen-partitioned dictionary — a serving node holds only the terms

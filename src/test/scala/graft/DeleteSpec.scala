@@ -4,6 +4,7 @@ import graft.core.CorpusGen
 import graft.index.{Compaction, Deletes, IndexBuilder}
 import graft.query.{LocalSearcher, OracleBM25, QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -264,5 +265,29 @@ class DeleteSpec extends AnyFunSuite {
     assert(Deletes.count(spark, dir) == 2L)
     assert(fs.exists(live) && !fs.exists(stage) && !fs.exists(old))
     assert(new SearchIndex(spark, dir).deletes.size == 2L)
+  }
+
+  test("one tombstone load per reader open: the serving tier reuses the set " +
+      "SearchIndex loaded, and loads its own only over the broadcast budget") {
+    val dir = "/tmp/graft-test/del-open"
+    buildAt(dir, 200L, seed = 18L)
+    val total = Deletes.deleteWhere(spark, dir, delPred)
+    assert(total > 1)
+    // 3: the tombstone view's aggregation (its shuffle stage and result
+    // under AQE) and the stats collect. 10 before: a schema-inference job
+    // per table read, a budget count() per SearchIndex open and a second
+    // tombstone load in LocalSearcher.load
+    val ((idx, li), jobs) = JobRecorder.record(spark.sparkContext) {
+      val idx = new SearchIndex(spark, dir)
+      (idx, LocalSearcher.load(idx))
+    }
+    assert(jobs.size == 3, s"reader open jobs: $jobs")
+    assert(li.deletes eq idx.deletes, "the serving tier reloaded the tombstones")
+    assert(li.deletes.size == total)
+    val bounded = new SearchIndex(spark, dir, maxBroadcastTombstones = 1L)
+    assert(bounded.deletes.overBudget)
+    val served = LocalSearcher.load(bounded).deletes
+    assert(!served.overBudget && served.size == total,
+      "over budget, the serving tier must hold every tombstone")
   }
 }

@@ -265,8 +265,8 @@ class LocalSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val opts = SearchOpts(k = 10)
     val q = "database performance tuning"
-    // a handle whose tables are already open: opening runs schema jobs,
-    // which are not part of a query
+    // a handle whose lazy state is already resolved: the first query on a
+    // fresh handle also collects dictionary_meta (next test)
     val idx = new SearchIndex(spark, index.dir)
     LocalSearcher.search(LocalSearcher.load(idx), "python tutorial", opts)
     val terms = Seq("database", "performance", "tuning")
@@ -295,5 +295,24 @@ class LocalSpec extends AnyFunSuite {
       a.overlaps(b)
     }
     assert(overlapped.contains(true), "the dictionary and block probes never overlapped")
+  }
+
+  test("job shape: a fresh reader's load runs one job (the stats collect), " +
+      "its first cold query four (the three probes and the dictionary_meta " +
+      "collect); no table read infers a schema") {
+    val sc = spark.sparkContext
+    val q = "database performance tuning"
+    val terms = Seq("database", "performance", "tuning")
+    assert(index.lookup(Seq("content"), terms).size == terms.size,
+      "fixture: every query term must be in the dictionary (an absent one adds a banded probe)")
+    // before table reads took their schema from metadata: 2 and 8 jobs, one
+    // schema-inference job per table read (stats; dictionary,
+    // dictionary_meta, postings, docs)
+    val (li, loadJobs) =
+      JobRecorder.record(sc)(LocalSearcher.load(new SearchIndex(spark, index.dir)))
+    assert(loadJobs.size == 1, s"fresh reader load jobs: $loadJobs")
+    val (hits, jobs) = JobRecorder.record(sc)(LocalSearcher.search(li, q, SearchOpts(k = 10)))
+    assert(hits.nonEmpty)
+    assert(jobs.size == 4, s"first cold query jobs: $jobs")
   }
 }

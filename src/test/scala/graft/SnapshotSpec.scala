@@ -3,8 +3,10 @@ package graft
 import graft.core.CorpusGen
 import graft.index.{Compaction, Deletes, IndexBuilder, Upsert}
 import graft.io.{ParquetTableIO, SnapshotTableIO, TableIO}
-import graft.query.{QueryEngine, SearchIndex}
+import graft.query.{LocalSearcher, QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +27,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - vacuum: physical reclaim after a metadata-only partition delete, with
   *    the retained snapshots byte-identical before/after;
   *  - time travel: readVersion returns the pre-mutation table;
-  *  - partition pruning survives the manifest read path.
+  *  - partition pruning survives the manifest read path;
+  *  - reads take the schema from table metadata: no job, and the schema
+  *    and rows Spark's inferring read returns, on both TableIOs;
+  *  - the serving tier reads tombstones through the index's storage.
   */
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -400,5 +405,99 @@ class SnapshotSpec extends AnyFunSuite {
     assert(scan.head.selectedPartitions.partitionCount == 1,
       "scan must prune to the one matching partition")
     assert(q.count() == 6)
+  }
+
+  /** The tables of an index dir: its non-hidden subdirectories. */
+  private def tables(d: String): Seq[String] = {
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(d)).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.map(n => s"$d/$n")
+  }
+
+  /** Rows as a multiset; binary cells compared by content. */
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }).groupBy(identity).map { case (r, n) => r -> n.size }
+
+  test("table reads resolve the schema from metadata: no job, and the schema " +
+      "and rows of Spark's inferring read, through build, resume, delete, " +
+      "upsert and compact on both TableIOs") {
+    val sc = spark.sparkContext
+    Seq((SnapshotTableIO: TableIO, "/tmp/graft-test/snap-read-s"),
+        (ParquetTableIO: TableIO, "/tmp/graft-test/snap-read-p")).foreach { case (io, d) =>
+      def check(step: String): Unit = {
+        val ts = tables(d).filter(io.exists(spark, _))
+        assert(ts.nonEmpty)
+        ts.foreach { t =>
+          val (df, jobs) = JobRecorder.record(sc)(io.read(spark, t))
+          assert(jobs.isEmpty, s"$io $step: reading $t ran jobs $jobs")
+          val files = df.inputFiles.toSeq
+          // the read as it was: Spark infers the schema from one footer
+          val inferred =
+            if (io == ParquetTableIO) spark.read.parquet(t)
+            else if (files.isEmpty) df // zero-file snapshot: a stored shape
+            else spark.read.option("basePath", t).parquet(files: _*)
+          assert(df.schema == inferred.schema, s"$io $step: $t schema " +
+            s"${df.schema.simpleString} != inferred ${inferred.schema.simpleString}")
+          assert(bag(df) == bag(inferred), s"$io $step: $t rows differ")
+        }
+      }
+      IndexBuilder.deleteDir(spark, d)
+      val p = params(io)
+      IndexBuilder.build(spark, corpus.filter(col("docId") < 100), d,
+        p.copy(inputSnapshot = "b0"))
+      check("build")
+      IndexBuilder.resume(spark, corpus, d, p.copy(inputSnapshot = "b1"))
+      check("resume")
+      Deletes.deleteWhere(spark, d, pmod(col("docId"), lit(11)) === 4, io)
+      check("delete")
+      val batch = corpus.filter(col("docId") % 6 === 0).drop("docId")
+        .withColumn("content", concat(col("content"), lit(" snapup")))
+      Upsert.upsert(spark, batch, d, p.copy(inputSnapshot = "b2"), key)
+      check("upsert")
+      assert(Compaction.expungeDeletes(spark, d, blockSize = 32, io).nonEmpty)
+      check("compact")
+    }
+  }
+
+  test("the serving tier reads tombstones through the index's storage: an " +
+      "orphan tombstone file naming a live doc hides it from no page") {
+    import spark.implicits._
+    val d = "/tmp/graft-test/snap-orphan-tomb"
+    IndexBuilder.deleteDir(spark, d)
+    IndexBuilder.build(spark, corpus, d, params(SnapshotTableIO))
+    Deletes.deleteWhere(spark, d, pmod(col("docId"), lit(11)) === 4, SnapshotTableIO)
+    val q = "python tutorial"
+    val before = page(new SearchIndex(spark, d, SnapshotTableIO), q)
+    assert(before.nonEmpty)
+    val victim = before.head(1).asInstanceOf[Long]
+    val group = SnapshotTableIO.read(spark, IndexBuilder.Layout(d).docs)
+      .filter(col("docId") === victim).select(col("docGroup").cast("long"))
+      .head().getLong(0)
+
+    // a never-committed data file in the victim's tombstone partition: the
+    // residue of a writer that died before its manifest commit
+    val plant = s"$d/_plant"
+    Seq(victim).toDF("docId").coalesce(1).write.mode("overwrite").parquet(plant)
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(plant)).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head
+    val tombDir = new Path(s"${Deletes.tombstones(d)}/docGroup=$group")
+    fs.mkdirs(tombDir)
+    assert(fs.rename(part, new Path(tombDir, s"orphan-${part.getName}")))
+    fs.delete(new Path(plant), true)
+    assert(Deletes.loadSet(spark, d).contains(group, victim),
+      "fixture: a raw parquet read must see the orphan tombstone")
+
+    val idx = new SearchIndex(spark, d, SnapshotTableIO)
+    assert(page(idx, q) == before, "the distributed plan saw an uncommitted file")
+    def served(hits: Seq[LocalSearcher.Hit]) =
+      hits.map(h => Seq(h.rank, h.docId, h.score, h.repo, h.path))
+    assert(served(LocalSearcher.search(LocalSearcher.load(idx), q, SearchOpts(k = 10))) ==
+      before, "the serving tier dropped a live doc")
+    assert(served(LocalSearcher.searchSharded(LocalSearcher.loadSharded(idx, 2), q,
+      SearchOpts(k = 10))) == before, "a serving shard dropped a live doc")
   }
 }
