@@ -34,9 +34,10 @@ object ExplainDump {
     val cand = QueryEngine.candidates(index, "python tutorial",
       SearchOpts(wand = true))
     val top = cand.orderBy(col("score").desc, col("docId").asc).limit(30)
-    // r6: the page's doc metadata is a PRUNED MEMBERSHIP PROBE (docId IN
-    // the collected top-m ids), not a broadcast join whose probe side
-    // scans the whole docs table per query
+    // the page's doc metadata is a PRUNED MEMBERSHIP READ (docId IN the
+    // collected top-m ids), not a broadcast join whose probe side scans the
+    // whole docs table per query; the engine runs it without Spark
+    // (graft.io.DirectTable), this is the same read as a Spark plan
     val joined = index.docs
       .filter(col("docId").isin(3L, 515L, 1027L))
       .select(col("docId"), col("repo"), col("path"), col("lang"),
@@ -127,21 +128,6 @@ object ExplainDump {
       .filter(col("docGroup") === 0L)
       .select("term", "firstDocId", "maxTf")
 
-    // two-level dictionary probe: the exact-term lookup prunes on BOTH
-    // partition keys — tlen (length bands) and termBucket (the terms' own
-    // hash buckets, computed driver-side) — so it reads O(query terms)
-    // directories out of the whole vocabulary
-    val dict2 = index.lookupDf(Seq("content"), Seq("python", "tutorial"))
-
-    // serving-tier doc-metadata probe (LocalSearcher.docsOf): one pruned
-    // scan per PAGE — docId IN (...) pushed to parquet (docs files sorted
-    // by docId within partitions, row-group stats skip), ReadSchema pruned
-    // to the 6 pagination columns; residency bounded by the LRU cap
-    val pageIds: Seq[Any] = Seq(1L, 2L, 3L, 700L, 1500L)
-    val docMetaProbe = index.docs
-      .filter(col("docId").isin(pageIds: _*))
-      .select("docId", "repo", "path", "lang", "qualityScore", "repoScore")
-
     val md = s"""# EXPLAIN — physical plans of the engine's hot paths
        |
        |Captured by `runMain graft.bench.ExplainDump` (2k-doc index,
@@ -154,11 +140,15 @@ object ExplainDump {
        |2. WAND runs as a `MapPartitions` over an `Exchange
        |   hashpartitioning(docGroup)` — per-segment heaps, no global state;
        |3. the global top-m is `TakeOrderedAndProject` — never a full sort;
-       |4. the doc-metadata attachment is a pruned membership probe: the
-       |   collected page's `docId IN (...)` lands in `PushedFilters` of the
-       |   docs scan (row-group stats skip on the docId-sorted files; cached-
-       |   batch min/max pruning on a warmed index) — never a join whose
-       |   probe side scans the whole docs table per query (changed r6);
+       |4. the doc-metadata attachment is a pruned membership read of the
+       |   collected page's `docId IN (...)` — never a join whose probe side
+       |   scans the whole docs table per query. The engine runs it, and the
+       |   exact-term dictionary lookup, without Spark: `SearchIndex`
+       |   reads the table's own files on the calling thread
+       |   (`graft.io.DirectTable`), with the same predicate pushed to
+       |   parquet's row-group statistics and page index, partitions pruned
+       |   on the driver (tlen + termBucket for the dictionary, docGroup for
+       |   a serving shard). The plan below is that read in Spark's form;
        |5. the dictionary lookup prunes to three columns and pushes both
        |   predicates;
        |6. fuzzy expansion's dictionary probe prunes on the tlen PARTITION
@@ -210,15 +200,9 @@ object ExplainDump {
        |14. the dictionary is partitioned two-level — tlen AND termBucket =
        |   pmod(xxhash64(term), nBuckets), the count auto-provisioned from
        |   the vocabulary at every full refresh — so the exact-term lookup
-       |   prunes on BOTH keys (the terms' buckets are computed driver-side,
-       |   no job) and reads O(query terms) directories of a 10^9-term
-       |   vocabulary;
-       |15. serving-tier doc metadata is probed per PAGE, not loaded at
-       |   open: `docId IN (...)` reaches the parquet scan (docs files are
-       |   sorted by docId within partitions — row-group stats skip),
-       |   ReadSchema carries only the six pagination columns, and an LRU
-       |   cap bounds residency — the last at-open-unbounded structure in
-       |   the serving tier is gone.
+       |   (a direct read, see 4) opens only the files of the query terms'
+       |   (tlen, termBucket) partitions: O(query terms) directories of a
+       |   10^9-term vocabulary.
        |
        |## 1+2. Candidate scoring (block-max WAND path)
        |
@@ -232,7 +216,7 @@ object ExplainDump {
        |${fmt(top)}
        |```
        |
-       |## 4. Doc-metadata page probe (R10, pruned membership — changed r6)
+       |## 4. Doc-metadata page read (R10, pruned membership) in Spark's form
        |
        |```
        |${fmt(joined)}
@@ -309,20 +293,6 @@ object ExplainDump {
        |
        |```
        |${fmt(snapScan)}
-       |```
-       |
-       |## 14. Exact-term dictionary lookup — BOTH partition levels pruned
-       |   (tlen + termBucket, buckets computed driver-side)
-       |
-       |```
-       |${fmt(dict2)}
-       |```
-       |
-       |## 15. Serving doc-metadata page probe — docId IN pushed, six columns,
-       |   LRU-bounded residency
-       |
-       |```
-       |${fmt(docMetaProbe)}
        |```
        |""".stripMargin
     Files.writeString(Paths.get("/root/repo/EXPLAIN.md"), md)

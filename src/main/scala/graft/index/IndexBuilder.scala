@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.core.{Analyzer, Posting}
-import graft.io.{ParquetTableIO, TableIO}
+import graft.io.{DirectTable, ParquetTableIO, TableIO}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,9 +231,8 @@ object IndexBuilder {
       io: TableIO = ParquetTableIO): Option[(Int, Long)] = {
     val meta = Layout(dir).dictionaryMeta
     if (!io.exists(spark, meta)) None
-    else io.read(spark, meta).collect().headOption.map { r =>
-      (r.getAs[Int]("nBuckets"), r.getAs[Long]("targetRows"))
-    }
+    else new DirectTable(io.read(spark, meta)).rows(Seq("nBuckets", "targetRows"))
+      .headOption.map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Long]))
   }
 
   /** The dictionary's termBucket count — see [[dictMeta]]. */

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -154,8 +155,11 @@ private[graft] object ParquetFooters {
     if (fs.exists(root)) first(root) else None
   }
 
+  /** Opened with options built from `conf`: `ParquetReadOptions.builder()`
+    * would build a fresh default configuration per open. */
   private def footer(conf: Configuration, file: Path): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
     try r.getFooter finally r.close()
   }
 

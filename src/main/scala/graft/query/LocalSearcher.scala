@@ -2,6 +2,8 @@ package graft.query
 
 import graft.core.Analyzer
 import graft.index.BlockRow
+import graft.io.DirectTable
+import graft.io.DirectTable.In
 import graft.query.QueryEngine.SearchOpts
 
 /** Serving mode: the reference engine answers queries IN-PROCESS over a
@@ -31,26 +33,22 @@ object LocalSearcher {
       path: String, lang: String, qualityScore: Double, repoScore: Double)
 
   /** In-memory image of an index dir (blocks remain varint-compressed),
-    * filled on demand. A cold query pays two sequential Spark jobs: the
-    * dictionary and block probes side by side ([[termData]]), then the
-    * page-metadata probe ([[docsOf]]); a warm one runs no job and starts
-    * no thread.
+    * filled on demand. A cold query reads the index's parquet files
+    * directly on the calling thread (graft.io.DirectTable) and runs no
+    * Spark job: the dictionary probe, then the block fetch of the terms it
+    * holds ([[termData]]), then the page-metadata probe ([[docsOf]]). A
+    * warm query reads no file.
     *
     * With `shard = Some((i, n))` the image holds only docGroups with
-    * `docGroup % n == i` — the loading scan is partition-pruned on the
-    * docGroup partition key, so a serving node reads ONLY its shard's
-    * bytes. Corpus stats stay resident (a handful of rows, required so
+    * `docGroup % n == i` — every read is pruned on the docGroup partition
+    * values, so a serving node reads ONLY its shard's files. Corpus stats
+    * stay resident (a handful of rows, required so
     * every shard computes bit-identical scores); the DICTIONARY is not
     * loaded at all — query-term dfs are served by [[dfs]]'s bounded hot
     * cache over the tlen-partitioned table. */
   final class LocalIndex(index: SearchIndex, shard: Option[(Int, Int)] = None,
       blockCacheBytes: Long = Long.MaxValue,
       docCacheEntries: Int = Int.MaxValue) {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    private def shardFilter(c: org.apache.spark.sql.Column) = shard match {
-      case Some((i, n)) => pmod(c, lit(n.toLong)) === i.toLong
-      case None => lit(true)
-    }
     /** Blocks decoded by searches on this image (the WAND-pruning probe:
       * the serving path runs ONE heap over all groups sequentially, so
       * whole-group and in-group skips actually bite here — unlike the
@@ -78,8 +76,8 @@ object LocalSearcher {
       * queries actually touch, NEVER the full vocabulary (at 10^9 terms a
       * per-shard dictionary map is tens of GB; the global df a shard needs
       * for bit-identical scores is exactly its queries' terms). Misses are
-      * fetched in one pruned probe (tlen + term predicates reach the scan)
-      * and ABSENT terms are cached too (None), so unknown-term queries
+      * fetched in one pruned probe ([[SearchIndex.lookup]]) and ABSENT
+      * terms are cached too (None), so unknown-term queries
       * don't re-probe. LRU-bounded; `residentDictTerms` reports the
       * footprint (BENCH counter). */
     private val dictCacheMax = 1 << 20
@@ -91,34 +89,21 @@ object LocalSearcher {
       }
     def residentDictTerms: Int = dictCache.synchronized(dictCache.size())
     def dfs(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] = {
-      val (hits, misses) = dictSplit(keysOf(fields, terms))
-      dfsOf(fields, hits, misses)
-    }
-
-    private def keysOf(fields: Seq[String], terms: Seq[String]): Seq[(String, String)] =
-      for (f <- fields; t <- terms) yield (f, t)
-
-    // snapshot hit VALUES in the same critical section that detects the
-    // misses: under concurrent serving at the cache cap, an entry seen by
-    // containsKey can be evicted before a later read, and re-reading would
-    // silently drop that term's df from the query (nondeterministic
-    // scores). Hits come from the snapshot, misses from the probe.
-    private def dictSplit(keys: Seq[(String, String)])
-        : (Seq[((String, String), Option[Long])], Seq[(String, String)]) =
-      dictCache.synchronized {
+      // snapshot hit VALUES in the same critical section that detects the
+      // misses: under concurrent serving at the cache cap, an entry seen by
+      // containsKey can be evicted before a later read, and re-reading would
+      // silently drop that term's df from the query (nondeterministic
+      // scores). Hits come from the snapshot, misses from the probe.
+      val (hits, misses) = dictCache.synchronized {
         val h = Seq.newBuilder[((String, String), Option[Long])]
         val m = Seq.newBuilder[(String, String)]
-        keys.foreach { k =>
+        for (f <- fields; t <- terms) {
+          val k = (f, t)
           if (dictCache.containsKey(k)) h += k -> dictCache.get(k)
           else m += k
         }
         (h.result(), m.result())
       }
-
-    /** The df map from a [[dictSplit]]: hits as snapshotted, misses probed
-      * and cached (absent terms as None). */
-    private def dfsOf(fields: Seq[String], hits: Seq[((String, String), Option[Long])],
-        misses: Seq[(String, String)]): Map[(String, String), Long] = {
       val probed =
         if (misses.isEmpty) Map.empty[(String, String), Long]
         else {
@@ -136,10 +121,11 @@ object LocalSearcher {
       * used to load ALL its blocks at open, so its memory was bounded only
       * by adding shards; now a node holds at most `blockCacheBytes` of
       * compressed postings (LRU, default unbounded = the old resident
-      * posture after warm-up), misses are fetched in one probe (the
+      * posture after warm-up), misses are fetched in one direct read (the
       * postings files are sorted by (field, term) within each partition,
-      * so parquet row-group stats skip non-matching groups), and ABSENT
-      * terms cache as empty arrays so unknown-term queries don't re-probe.
+      * so parquet statistics and the page index skip non-matching row
+      * groups and pages), and ABSENT terms cache as empty arrays so
+      * unknown-term queries don't re-probe.
       * Eviction can never corrupt an in-flight query: the fetched arrays
       * stay referenced by the query's own map; eviction only drops the
       * cache's reference. */
@@ -149,35 +135,20 @@ object LocalSearcher {
     def residentBlockBytes: Long = blockCache.synchronized(blockCacheBytesUsed)
     def residentBlockTerms: Int = blockCache.synchronized(blockCache.size())
 
-    private def fetchBlocks(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] = {
-      val sp = index.spark
-      import sp.implicits._
-      val fields = keys.map(_._1).distinct
-      val terms = keys.map(_._2).distinct
-      index.postings
-        .filter(shardFilter(col("docGroup")) &&
-          col("field").isin(fields: _*) && col("term").isin(terms: _*))
-        .select(col("field"), col("term"), col("docGroup").cast("long").as("docGroup"),
-          col("blockIdx"), col("firstDocId"), col("lastDocId"), col("n"),
-          col("sumTf"), col("maxTf"), col("minTf"), col("minDl"), col("maxDl"),
-          col("bytes"))
-        .as[BlockRow]
-        .collect()
+    private def fetchBlocks(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] =
+      index.postingsTable.rows(
+        Seq("field", "term", "docGroup", "blockIdx", "firstDocId", "lastDocId", "n",
+          "sumTf", "maxTf", "minTf", "minDl", "maxDl", "bytes"),
+        Seq(In("field", keys.map(_._1)), In("term", keys.map(_._2))),
+        DirectTable.inShard(shard))
+        .map(r => BlockRow(r(0).asInstanceOf[String], r(1).asInstanceOf[String],
+          r(2).asInstanceOf[Number].longValue, r(3).asInstanceOf[Int],
+          r(4).asInstanceOf[Long], r(5).asInstanceOf[Long], r(6).asInstanceOf[Int],
+          r(7).asInstanceOf[Long], r(8).asInstanceOf[Int], r(9).asInstanceOf[Int],
+          r(10).asInstanceOf[Int], r(11).asInstanceOf[Int], r(12).asInstanceOf[Array[Byte]]))
+        .toArray
         .groupBy(b => (b.field, b.term))
         .view.mapValues(_.sortBy(b => (b.docGroup, b.firstDocId, b.blockIdx))).toMap
-    }
-
-    private def blockSplit(keys: Seq[(String, String)])
-        : (Seq[((String, String), Array[BlockRow])], Seq[(String, String)]) =
-      blockCache.synchronized {
-        val h = Seq.newBuilder[((String, String), Array[BlockRow])]
-        val m = Seq.newBuilder[(String, String)]
-        keys.foreach { k =>
-          if (blockCache.containsKey(k)) h += k -> blockCache.get(k)
-          else m += k
-        }
-        (h.result(), m.result())
-      }
 
     /** Fetch `misses` (non-empty) in one probe and cache them, absent keys
       * as empty arrays. */
@@ -206,51 +177,25 @@ object LocalSearcher {
     }
 
     def blocksOf(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] = {
-      val (hits, misses) = blockSplit(keys)
-      if (misses.isEmpty) hits.toMap else hits.toMap ++ fetchAndCache(misses)
+      val (hits, misses) = blockCache.synchronized {
+        val h = Map.newBuilder[(String, String), Array[BlockRow]]
+        val m = Seq.newBuilder[(String, String)]
+        keys.foreach { k =>
+          if (blockCache.containsKey(k)) h += k -> blockCache.get(k)
+          else m += k
+        }
+        (h.result(), m.result())
+      }
+      if (misses.isEmpty) hits else hits ++ fetchAndCache(misses)
     }
 
-    /** Cold calls of [[termData]] that ran the block probe on a side
-      * thread (a warm call never does). */
-    val sideProbes = new _root_.java.util.concurrent.atomic.AtomicLong(0L)
-
     /** A query's term data: the df of every (field, term) the dictionary
-      * holds, and the blocks of each of those keys.
-      *
-      * With every dictionary entry cached this is exactly
-      * `blocksOf(dfs(...).keys)`. A cold call (some dictionary miss) runs
-      * the two probes side by side instead of back to back: blocks are
-      * keyed by (field, term), so they need not wait for the df answer.
-      * The block probe for every uncached key of the query runs on a side
-      * thread while the dictionary probe runs on the caller; keys the
-      * dictionary lacks come back with no blocks and cache as empty
-      * arrays. The side thread is joined before anything returns or is
-      * rethrown, and its own failure is rethrown as is. It is a fresh
-      * thread, never a pool task: it inherits the caller's Spark local
-      * properties (job group, scheduler pool), and [[searchSharded]]
-      * already runs this on the scatter pool, where a nested submit could
-      * deadlock. */
+      * holds, and the blocks of each of those keys — the dictionary probe,
+      * then the block fetch of the keys it found. */
     def termData(fields: Seq[String], terms: Seq[String])
         : (Map[(String, String), Long], Map[(String, String), Array[BlockRow]]) = {
-      val keys = keysOf(fields, terms)
-      val (dictHits, dictMisses) = dictSplit(keys)
-      if (dictMisses.isEmpty) {
-        val dfs = dfsOf(fields, dictHits, Nil)
-        (dfs, blocksOf(dfs.keys.toSeq))
-      } else {
-        val (blockHits, blockMisses) = blockSplit(keys)
-        val side =
-          if (blockMisses.isEmpty) None
-          else {
-            sideProbes.incrementAndGet()
-            Some(new SideProbe(fetchAndCache(blockMisses)))
-          }
-        val dfs =
-          try dfsOf(fields, dictHits, dictMisses)
-          catch { case t: Throwable => side.foreach(_.await()); throw t }
-        val blocks = blockHits.toMap ++ side.fold(Map.empty[(String, String), Array[BlockRow]])(_.get())
-        (dfs, blocks.filter { case (k, _) => dfs.contains(k) })
-      }
+      val dfs = this.dfs(fields, terms)
+      (dfs, blocksOf(dfs.keys.toSeq))
     }
 
     /** Single-key convenience for probes/tests. */
@@ -262,19 +207,15 @@ object LocalSearcher {
       * for the ≤ k·overfetch page, so the full-table at-open collect (the
       * last unbounded-at-open structure in the serving tier) is now the
       * same pruned-probe + LRU shape as [[dfs]]/[[blocksOf]]. Misses are
-      * fetched in one probe per page — `docId IN (...)` reaches the scan
-      * (PushedFilters), and docs files are sorted by docId within
-      * partitions, so parquet row-group stats skip. Above
-      * `spark.sql.parquet.pushdown.inFilterThreshold` (10) ids — a full
-      * k·overfetch page is 30 — parquet evaluates the pushed IN as a
-      * min/max range on the row groups, so a page of scattered ids skips
-      * less — and `docCacheEntries` bounds residency
-      * (default unbounded = the resident-after-warm-up posture). ABSENT
-      * ids cache as None (the [[dfs]] discipline) — with the sharded
+      * fetched in one direct read per page ([[SearchIndex.pageProbe]]):
+      * `docId IN (...)` reaches parquet, and docs files are sorted by
+      * docId within partitions, so row-group statistics and the page
+      * index skip what the page does not touch; `docCacheEntries` bounds
+      * residency (default unbounded = the resident-after-warm-up posture).
+      * ABSENT ids cache as None (the [[dfs]] discipline) — with the sharded
       * router's owner routing a shard is only ever asked for ids it
       * scored, so absence is the defensive case, but an unrouted caller
-      * must never re-pay a probe job per repeat for ids a shard cannot
-      * own (measured before routing: 140 ms sharded p50 vs sub-ms). */
+      * must never re-pay a probe per repeat for ids a shard cannot own. */
     private val docCache =
       new _root_.java.util.LinkedHashMap[Long, Option[DocMeta]](16, 0.75f, true) {
         override def removeEldestEntry(
@@ -282,9 +223,6 @@ object LocalSearcher {
           size() > docCacheEntries
       }
     def residentDocs: Int = docCache.synchronized(docCache.size())
-    /** The probe [[docsOf]] runs for its misses (plan inspection). */
-    private[graft] def docsProbe(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
-      index.pageProbe(ids, shardFilter(col("docGroup")))
     def docsOf(ids: Seq[Long]): Map[Long, DocMeta] = {
       val (hits, misses) = docCache.synchronized {
         val h = Map.newBuilder[Long, DocMeta]
@@ -298,44 +236,13 @@ object LocalSearcher {
       val fetched =
         if (misses.isEmpty) Map.empty[Long, DocMeta]
         else {
-          val rows = docsProbe(misses).collect()
-            .map(r => r.getLong(0) -> DocMeta(r.getString(1), r.getString(2),
-              r.getString(3), r.getDouble(4), r.getDouble(5))).toMap
+          val rows = index.pageProbe(misses, shard)
           docCache.synchronized {
             misses.foreach(id => docCache.put(id, rows.get(id)))
           }
           rows
         }
       hits ++ fetched
-    }
-  }
-
-  /** `body` on its own daemon thread, started at construction. A fresh
-    * thread inherits the creating thread's inheritable thread locals —
-    * Spark's local properties among them — so its jobs carry the caller's
-    * job group, description and scheduler pool. */
-  private final class SideProbe[T](body: => T) {
-    private var result: Either[Throwable, T] = _
-    private val thread = new Thread(() => {
-      result = try Right(body) catch { case t: Throwable => Left(t) }
-    }, "graft-block-probe")
-    thread.setDaemon(true)
-    thread.start()
-
-    /** Wait for the thread to finish, even across interrupts (the
-      * caller's interrupt status is restored). */
-    def await(): Unit = {
-      var interrupted = false
-      while (thread.isAlive)
-        try thread.join()
-        catch { case _: InterruptedException => interrupted = true }
-      if (interrupted) Thread.currentThread().interrupt()
-    }
-
-    /** [[await]], then the result or the thread's own exception. */
-    def get(): T = {
-      await()
-      result.fold(t => throw t, identity)
     }
   }
 

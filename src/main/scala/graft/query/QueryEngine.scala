@@ -2,13 +2,15 @@ package graft.query
 
 import graft.core.Analyzer
 import graft.index.{BlockRow, Codec, IndexBuilder}
+import graft.io.DirectTable
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Handle to a built index (IndexBuilder layout). Dictionary lookups and
-  * corpus stats are tiny; they are collected once / per query and shipped in
-  * task closures (the reference's "broadcast stats" shape, SURVEY §2.11). */
+/** Handle to a built index (IndexBuilder layout). Dictionary lookups,
+  * corpus stats and page metadata are tiny; they are read directly from the
+  * table files on the driver (no Spark job), once / per query, and shipped
+  * in task closures (the reference's "broadcast stats" shape, SURVEY §2.11). */
 class SearchIndex(val spark: SparkSession, val dir: String,
     val io: graft.io.TableIO = graft.io.ParquetTableIO,
     // broadcast budget for the tombstone membership view (VERDICT r5 item
@@ -59,6 +61,12 @@ class SearchIndex(val spark: SparkSession, val dir: String,
   lazy val docs: DataFrame = io.read(spark, layout.docs)
   lazy val postings: DataFrame = io.read(spark, layout.postings)
   lazy val dictionary: DataFrame = io.read(spark, layout.dictionary)
+  /** The same three tables read directly on the caller's thread, over the
+    * files of the DataFrames above: the serving reads ([[lookup]],
+    * [[pageProbe]], the serving tier's block fetch) run no Spark job. */
+  private[graft] lazy val docsTable = new DirectTable(docs)
+  private[graft] lazy val postingsTable = new DirectTable(postings)
+  private[graft] lazy val dictionaryTable = new DirectTable(dictionary)
   /** termBucket count of the bucketed dictionary layout (None on an index
     * whose full refresh predates it / crashed mid-write — probes then fall
     * back to tlen-only pruning, correct but less pruned). */
@@ -66,8 +74,9 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     graft.index.IndexBuilder.dictBucketCount(spark, dir, io)
   /** field -> (N, avgdl) */
   lazy val stats: Map[String, (Long, Double)] =
-    io.read(spark, layout.stats).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    new DirectTable(io.read(spark, layout.stats)).rows(Seq("field", "n", "avgdl"))
+      .map(r => r(0).asInstanceOf[String] ->
+        (r(1).asInstanceOf[Long], r(2).asInstanceOf[Double])).toMap
 
   /** Posting blocks decoded across queries on this index — executor-side
     * decodes (WAND and exhaustive) report back through the accumulator, so
@@ -102,10 +111,14 @@ class SearchIndex(val spark: SparkSession, val dir: String,
   /** Whether [[warm]] pinned the dictionary (false when refused/not warmed). */
   private[graft] def dictionaryPinned: Boolean = hotDict != null
 
-  /** (field, term) -> df. Hot map if warmed, else a predicate-pushed scan —
-    * tlen IS the dictionary's partition column, so probing with the query
-    * terms' lengths prunes to O(distinct term lengths) partitions before
-    * the term filter runs (same trick as fuzzyExpand's length bands).
+  /** (field, term) -> df. Hot map if warmed, else a direct read of the
+    * query terms' dictionary partitions — tlen IS the dictionary's partition
+    * column, so probing with the query terms' lengths prunes to O(distinct
+    * term lengths) partitions before the term filter runs (same trick as
+    * fuzzyExpand's length bands). Pruning is EXACT-PAIR: each term
+    * contributes its own (tlen, termBucket) pair, never the
+    * |lens| × |buckets| cross product — the probe reads at most |terms|
+    * directories of a 10^9-term dictionary.
     *
     * The termBucket pruning level is an optimization with a VERIFIED
     * fallback: `dictionary` and `dictBuckets` come from two separate table
@@ -122,54 +135,36 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     val hd = hotDict
     if (hd != null)
       return (for (f <- fields; t <- terms; d <- hd.get((f, t))) yield (f, t) -> d).toMap
-    def run(df: DataFrame): Map[(String, String), Long] = df.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val probed = run(lookupDf(fields, terms))
-    val missing = terms.filter(t => !fields.exists(f => probed.contains((f, t))))
-    if (dictBuckets.isEmpty || missing.isEmpty) probed
-    else probed ++ run(bandedLookupDf(fields, missing))
-  }
-
-  /** tlen-band-pruned dictionary probe (level 1 only). */
-  private def bandedLookupDf(fields: Seq[String], terms: Seq[String]): DataFrame = {
-    val lens: Seq[Any] = terms.map(_.length).distinct
-    dictionary
-      .filter(col("tlen").isin(lens: _*)) // partition pruning, level 1
-      .filter(col("field").isin(fields: _*) && col("term").isin(terms: _*))
-      .select("field", "term", "df")
-  }
-
-  /** The cold-path dictionary probe behind [[lookup]], exposed for plan
-    * inspection (PlanSpec asserts both partition-pruning levels). Pruning
-    * is EXACT-PAIR: each term contributes its own (tlen, termBucket) pair
-    * (grouped per tlen), never the |lens| × |buckets| cross product — the
-    * probe reads at most |terms| directories of a 10^9-term dictionary. */
-  private[graft] def lookupDf(fields: Seq[String], terms: Seq[String]): DataFrame = {
-    val base = dictBuckets match {
-      case Some(b) =>
-        val pairs = terms
-          .map(t => (t.length, graft.index.IndexBuilder.termBucketOf(t, b)))
-          .distinct
-        val prune = pairs.groupBy(_._1).map { case (tl, ps) =>
-          col("tlen") === tl && col("termBucket").isin(ps.map(_._2).distinct: _*)
-        }.reduce(_ || _)
-        dictionary.filter(prune)
-      case None =>
-        val lens: Seq[Any] = terms.map(_.length).distinct
-        dictionary.filter(col("tlen").isin(lens: _*))
+    def probe(ts: Seq[String], partition: DirectTable.DataFile => Boolean) =
+      dictionaryTable.rows(Seq("field", "term", "df"),
+        Seq(DirectTable.In("field", fields), DirectTable.In("term", ts)), partition)
+        .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String]) ->
+          r(2).asInstanceOf[Long]).toMap
+    def band(ts: Seq[String]): DirectTable.DataFile => Boolean = {
+      val lens = ts.map(_.length).toSet
+      f => lens.contains(f.int("tlen"))
     }
-    base
-      .filter(col("field").isin(fields: _*) && col("term").isin(terms: _*))
-      .select("field", "term", "df")
+    dictBuckets match {
+      case None => probe(terms, band(terms))
+      case Some(b) =>
+        val pairs = terms.map(t => (t.length, IndexBuilder.termBucketOf(t, b))).toSet
+        val probed = probe(terms, f => pairs.contains((f.int("tlen"), f.int("termBucket"))))
+        val missing = terms.filter(t => !fields.exists(f => probed.contains((f, t))))
+        if (missing.isEmpty) probed else probed ++ probe(missing, band(missing))
+    }
   }
 
-  /** The doc-metadata page probe behind [[QueryEngine.search]] and the
-    * serving tier's `docsOf`, exposed for plan inspection (PlanSpec
-    * asserts `docId IN (ids)` reaches the scan's PushedFilters). `where`
-    * narrows the scan further (a serving shard's docGroup filter). */
-  private[graft] def pageProbe(ids: Seq[Long], where: Column = lit(true)): DataFrame =
-    docs.filter(where && col("docId").isin(ids: _*))
-      .select("docId", "repo", "path", "lang", "qualityScore", "repoScore")
+  /** The doc metadata of a page of ids, read directly from the docs table
+    * (`docId IN ids` pushed to the row groups and pages): the page read of
+    * [[QueryEngine.search]] and of the serving tier's `docsOf`. `shard`
+    * keeps only a serving shard's docGroups. */
+  private[graft] def pageProbe(ids: Seq[Long], shard: Option[(Int, Int)] = None)
+      : Map[Long, LocalSearcher.DocMeta] =
+    docsTable.rows(Seq("docId", "repo", "path", "lang", "qualityScore", "repoScore"),
+      Seq(DirectTable.In("docId", ids)), DirectTable.inShard(shard))
+      .map(r => r(0).asInstanceOf[Long] -> LocalSearcher.DocMeta(r(1).asInstanceOf[String],
+        r(2).asInstanceOf[String], r(3).asInstanceOf[String],
+        r(4).asInstanceOf[Double], r(5).asInstanceOf[Double])).toMap
 }
 
 object SearchIndex {
@@ -221,23 +216,20 @@ object QueryEngine {
     val top = cand.orderBy($"score".desc, $"docId".asc).limit(m)
       .as[(Long, Double)].collect()
 
-    // R10 metadata attachment for the ≤ m page ids, as a PRUNED probe:
-    // `docId IN (page ids)` reaches the scan — parquet row-group stats on
-    // the docId-sorted docs files cold, cached-batch min/max pruning on a
-    // warmed index — so the probe reads a few batches. The previous
-    // broadcast-join form scanned the ENTIRE docs table per query to join
-    // ≤ m rows (guide §2.4: the join's only role was metadata attachment;
-    // its big-side scan was the per-query floor). The composite sort,
-    // diversity pass and rank assignment stay O(m) driver work.
+    // R10 metadata attachment for the ≤ m page ids, as a PRUNED direct
+    // read (no Spark job): `docId IN (page ids)` reaches the row-group
+    // stats and page index of the docId-sorted docs files, so the read
+    // touches a few pages. The older broadcast-join form scanned the ENTIRE
+    // docs table per query to join ≤ m rows (guide §2.4: the join's only
+    // role was metadata attachment). The composite sort, diversity pass and
+    // rank assignment stay O(m) driver work.
     val joined: Array[(Long, Double, String, String, String, Double, Double)] =
       if (top.isEmpty) Array.empty
       else {
-        val scores = top.toMap
-        index.pageProbe(top.map(_._1).toSeq)
-          .as[(Long, String, String, String, Double, Double)]
-          .collect()
-          .map { case (d, repo, path, lang, q, rs) =>
-            (d, scores(d), repo, path, lang, q, rs) }
+        val metas = index.pageProbe(top.map(_._1).toSeq)
+        top.flatMap { case (d, score) =>
+          metas.get(d).map(m => (d, score, m.repo, m.path, m.lang, m.qualityScore, m.repoScore))
+        }
       }
 
     // R8 composite sort

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.CorpusGen
 import graft.index.IndexBuilder
+import graft.io.{ParquetTableIO, SnapshotTableIO, TableIO}
 import graft.query.{LocalSearcher, QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
 import java.io.File
@@ -10,7 +11,6 @@ import org.apache.spark.graft.JobRecorder
 import org.scalatest.funsuite.AnyFunSuite
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
 /** Serving mode must be rank- AND score-identical to the distributed
   * engine — same index tables, same scoring code, no Spark jobs per query. */
@@ -198,7 +198,6 @@ class LocalSpec extends AnyFunSuite {
       LocalSearcher.search(local, q, opts) // warms the shared reader
       val cold = LocalSearcher.load(index)
       val first = LocalSearcher.search(cold, q, opts)
-      assert(cold.sideProbes.get == 1, s"'$q': the cold search ran no side block probe")
       val warm = LocalSearcher.search(local, q, opts)
       val exhaustive = QueryEngine.search(index, q, opts.copy(wand = false)).collect()
         .map(r => (r.getInt(0), r.getLong(1),
@@ -217,10 +216,10 @@ class LocalSpec extends AnyFunSuite {
     val got = Await.result(Future(queries.map(q => LocalSearcher.searchSharded(sharded, q, opts)))(
       ExecutionContext.global), 5.minutes)
     assert(got == queries.map(q => LocalSearcher.search(local, q, opts)))
-    assert(sharded.shards.forall(_.sideProbes.get > 0), "a shard's cold query ran no side probe")
   }
 
-  test("cold search failure: the original exception, thrown only after the side probe finished") {
+  test("cold search failure: a table deleted under an open reader rethrows " +
+      "the reader's own exception and leaves no partial cache entry") {
     /** A copy of the fixture index with every table open, then `table` removed. */
     def without(table: String): SearchIndex = {
       val d = new File(s"/tmp/graft-test/local-index-no-$table")
@@ -231,88 +230,109 @@ class LocalSpec extends AnyFunSuite {
       FileUtils.deleteDirectory(new File(d, table))
       idx
     }
-    def probeAlive = Thread.getAllStackTraces.keySet.asScala
-      .exists(t => t.getName == "graft-block-probe" && t.isAlive)
     def thrownIn(e: Throwable, method: String) =
       e.getStackTrace.exists(_.getMethodName.endsWith(method))
     val q = "python tutorial"
     val keys = Seq("python", "tutorial").map(t => ("content", t))
 
-    // the block probe fails: its own exception (not a wrapper), nothing cached
+    // the block fetch fails: its own exception, as the direct read throws
+    // it; the dictionary read before it completed and cached whole entries
     val noPostings = without("postings")
     val li = LocalSearcher.load(noPostings)
     val e = intercept[Throwable](LocalSearcher.search(li, q))
-    assert(li.sideProbes.get == 1 && !probeAlive)
-    assert(thrownIn(e, "fetchBlocks"), s"not the block probe's exception: $e")
+    assert(e.isInstanceOf[java.io.FileNotFoundException], s"not the read's own exception: $e")
+    assert(thrownIn(e, "fetchBlocks"), s"not the block fetch's exception: $e")
     val direct = intercept[Throwable](LocalSearcher.load(noPostings).blocksOf(keys))
-    assert(e.getClass == direct.getClass, s"rethrown $e, the probe itself throws $direct")
-    assert(li.residentBlockTerms == 0, "a failed block probe left cache entries")
+    assert(e.getClass == direct.getClass, s"rethrown $e, the read itself throws $direct")
+    assert(li.residentBlockTerms == 0, "a failed block fetch left cache entries")
     assert(li.residentDictTerms == keys.size, "the dictionary probe did not complete")
+    assert(intercept[Throwable](LocalSearcher.search(li, q)).getClass == e.getClass,
+      "a repeat after the failure did not fail the same way")
 
-    // the dictionary probe fails: its exception, after the side probe
-    // finished (its blocks are cached by the time the search throws)
+    // the dictionary probe fails: nothing is cached, no block is fetched
     val li2 = LocalSearcher.load(without("dictionary"))
     val e2 = intercept[Throwable](LocalSearcher.search(li2, q))
-    assert(li2.sideProbes.get == 1 && !probeAlive)
-    assert(thrownIn(e2, "lookup"), s"not the dictionary probe's exception: $e2")
-    assert(li2.residentBlockTerms == keys.size,
-      "the search threw before its side block probe finished")
-    assert(li2.residentDictTerms == 0)
+    assert(e2.isInstanceOf[java.io.FileNotFoundException] && thrownIn(e2, "lookup"),
+      s"not the dictionary probe's exception: $e2")
+    assert(li2.residentDictTerms == 0 && li2.residentBlockTerms == 0)
+
+    // the page read fails: no doc entry is cached
+    val li3 = LocalSearcher.load(without("docs"))
+    val e3 = intercept[Throwable](LocalSearcher.search(li3, q))
+    assert(e3.isInstanceOf[java.io.FileNotFoundException] && thrownIn(e3, "pageProbe"),
+      s"not the page read's exception: $e3")
+    assert(li3.residentDocs == 0, "a failed page read left cache entries")
+    assert(li3.residentDictTerms == keys.size && li3.residentBlockTerms == keys.size)
   }
 
-  test("job shape: a cold query runs two overlapping probe jobs, then the page probe; " +
-      "a warm repeat runs none; every job carries the caller's job group") {
+  /** The fixture corpus built again on snapshot storage. */
+  private lazy val snapshotDir = {
+    val dir = "/tmp/graft-test/local-index-snapshot"
+    IndexBuilder.deleteDir(spark, dir)
+    IndexBuilder.build(spark,
+      CorpusGen.generateDF(spark, 1000L, seed = 19L, partitions = 4), dir,
+      IndexBuilder.Params(blockSize = 64, docGroupSize = 256L,
+        fields = Seq("content", "path"), io = SnapshotTableIO))
+    dir
+  }
+
+  test("job shape: a fresh reader's load and first cold queries run no Spark job, " +
+      "dictionary_meta and stats reads included, on ParquetTableIO and SnapshotTableIO") {
+    val sc = spark.sparkContext
+    val opts = SearchOpts(k = 10)
+    // the second query has a term the dictionary lacks: the banded re-probe
+    val qs = Seq("database performance tuning", "python zzqxabsent tutorial")
+    Seq((ParquetTableIO: TableIO) -> index.dir, (SnapshotTableIO: TableIO) -> snapshotDir)
+        .foreach { case (io, dir) =>
+      // before the direct reads: 1 job to load, 4 for the first cold query
+      val (hits, jobs) = JobRecorder.record(sc) {
+        val li = LocalSearcher.load(new SearchIndex(spark, dir, io))
+        qs.map(q => LocalSearcher.search(li, q, opts))
+      }
+      assert(jobs.isEmpty, s"$io: fresh reader load + cold queries ran jobs $jobs")
+      assert(hits.forall(_.nonEmpty))
+      val dist = qs.map(q => QueryEngine.search(new SearchIndex(spark, dir, io), q, opts)
+        .collect().map(r => (r.getInt(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq)
+      assert(hits.map(bits) == dist, s"$io: cold serving pages != distributed pages")
+    }
+  }
+
+  test("a warmed index (tables cached, dictionary pinned) reads the same pages") {
+    val warmed = new SearchIndex(spark, index.dir).warm()
+    try {
+      assert(warmed.docsTable.files.nonEmpty && warmed.postingsTable.files.nonEmpty,
+        "the direct reader lost the files of a cached table")
+      val opts = SearchOpts(k = 10)
+      queries.foreach { q =>
+        val page = QueryEngine.search(warmed, q, opts).collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+        assert(page.nonEmpty || q == "the if return")
+        assert(LocalSearcher.search(LocalSearcher.load(warmed), q, opts)
+          .map(h => (h.rank, h.docId, h.score)) == page, s"'$q': warmed serving != warmed engine")
+        assert(LocalSearcher.search(local, q, opts).map(h => (h.rank, h.docId, h.score)) == page,
+          s"'$q': warmed engine != cold serving")
+      }
+    } finally {
+      warmed.postings.unpersist(blocking = true)
+      warmed.docs.unpersist(blocking = true)
+    }
+  }
+
+  test("job shape: a warm repeat runs no Spark job and opens no file") {
     val sc = spark.sparkContext
     val opts = SearchOpts(k = 10)
     val q = "database performance tuning"
-    // a handle whose lazy state is already resolved: the first query on a
-    // fresh handle also collects dictionary_meta (next test)
     val idx = new SearchIndex(spark, index.dir)
-    LocalSearcher.search(LocalSearcher.load(idx), "python tutorial", opts)
-    val terms = Seq("database", "performance", "tuning")
-    assert(idx.lookup(Seq("content"), terms).size == terms.size,
-      "fixture: every query term must be in the dictionary (an absent one adds a banded probe)")
-    // two probes racing can still land one after the other on a loaded
-    // host; a sequential reader never overlaps them
-    val overlapped = (1 to 3).map { _ =>
-      val li = LocalSearcher.load(idx)
-      sc.setJobGroup("g", "cold search", interruptOnCancel = false)
-      val (hits, jobs) =
-        try JobRecorder.record(sc)(LocalSearcher.search(li, q, opts))
-        finally sc.clearJobGroup()
-      assert(hits.nonEmpty)
-      assert(jobs.size == 3, s"cold query jobs: $jobs")
-      assert(jobs.forall(_.group.contains("g")), s"a job lost the caller's group: $jobs")
-      val Seq(a, b, page) = jobs
-      assert(page.startMs >= math.max(a.endMs, b.endMs),
-        s"more than two jobs before scoring: $jobs")
-      assert(li.sideProbes.get == 1)
-
-      val (again, warmJobs) = JobRecorder.record(sc)(LocalSearcher.search(li, q, opts))
-      assert(again == hits)
-      assert(warmJobs.isEmpty, s"warm repeat ran jobs: $warmJobs")
-      assert(li.sideProbes.get == 1, "warm repeat started a side probe")
-      a.overlaps(b)
-    }
-    assert(overlapped.contains(true), "the dictionary and block probes never overlapped")
-  }
-
-  test("job shape: a fresh reader's load runs one job (the stats collect), " +
-      "its first cold query four (the three probes and the dictionary_meta " +
-      "collect); no table read infers a schema") {
-    val sc = spark.sparkContext
-    val q = "database performance tuning"
-    val terms = Seq("database", "performance", "tuning")
-    assert(index.lookup(Seq("content"), terms).size == terms.size,
-      "fixture: every query term must be in the dictionary (an absent one adds a banded probe)")
-    // before table reads took their schema from metadata: 2 and 8 jobs, one
-    // schema-inference job per table read (stats; dictionary,
-    // dictionary_meta, postings, docs)
-    val (li, loadJobs) =
-      JobRecorder.record(sc)(LocalSearcher.load(new SearchIndex(spark, index.dir)))
-    assert(loadJobs.size == 1, s"fresh reader load jobs: $loadJobs")
-    val (hits, jobs) = JobRecorder.record(sc)(LocalSearcher.search(li, q, SearchOpts(k = 10)))
-    assert(hits.nonEmpty)
-    assert(jobs.size == 4, s"first cold query jobs: $jobs")
+    val li = LocalSearcher.load(idx)
+    val hits = LocalSearcher.search(li, q, opts)
+    def opened = Seq(idx.dictionaryTable, idx.postingsTable, idx.docsTable)
+      .map(_.filesOpened.get).sum
+    val before = opened
+    assert(before > 0, "the cold query opened no file")
+    val (again, jobs) = JobRecorder.record(sc)(LocalSearcher.search(li, q, opts))
+    assert(again == hits)
+    assert(jobs.isEmpty, s"warm repeat ran jobs: $jobs")
+    assert(opened == before, "warm repeat read files")
   }
 }

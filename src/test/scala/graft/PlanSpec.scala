@@ -38,8 +38,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("doc-metadata page probe pushes docId IN (...) into the scan (R10)") {
     import org.apache.spark.sql.functions._
-    // the shape search() issues after collecting the top-m page: a pruned
-    // membership probe, never a join against a full docs-table scan
+    // the page read in Spark's form (the engine reads it directly, tested
+    // below): a pruned membership probe, never a join against a full
+    // docs-table scan
     val probe = index.docs
       .filter(col("docId").isin(3L, 77L, 201L))
       .select(col("docId"), col("repo"), col("path"), col("lang"),
@@ -185,26 +186,26 @@ class PlanSpec extends AnyFunSuite {
 
   test("exact-term lookup prunes BOTH partition levels (tlen + termBucket) " +
       "and reads only the terms' buckets") {
+    import org.apache.spark.sql.functions.col
     val terms = Seq("python", "tutorial")
-    val probe = index.lookupDf(Seq("content"), terms)
-    val plan = planOf(probe)
-    val partFilters = plan.linesIterator
-      .filter(_.contains("PartitionFilters")).mkString("\n")
-    assert(partFilters.contains("tlen") && partFilters.contains("termBucket"),
-      s"lookup probe missing a pruning level:\n${plan.take(2000)}")
-    // the pruned scan reads at most |terms| (tlen, bucket) directories
-    val scanned = probe.queryExecution.executedPlan.collectLeaves()
-      .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.selectedPartitions.partitionCount }.sum
-    assert(scanned <= terms.size,
-      s"expected <=${terms.size} pruned partitions, scanned $scanned")
-    // pruning never changes the answer: probe == unpruned dictionary filter
+    val idx = new SearchIndex(spark, index.dir) // its own read counters
+    val nb = idx.dictBuckets.get
+    val pairs = terms.map(t => (t.length, IndexBuilder.termBucketOf(t, nb))).toSet
+    val dict = idx.dictionaryTable
+    val wanted = dict.files.filter(f => pairs.contains((f.int("tlen"), f.int("termBucket"))))
+    assert(wanted.map(f => (f.int("tlen"), f.int("termBucket"))).distinct.size <= terms.size)
+    assert(dict.files.size > wanted.size, "fixture: the dictionary must span more partitions")
+    val got = idx.lookup(Seq("content"), terms)
+    assert(got.size == terms.size, s"fixture: both terms are in the dictionary, got $got")
+    // the direct read opened exactly the files of the terms' partitions
+    assert(dict.filesOpened.get == wanted.size,
+      s"opened ${dict.filesOpened.get} files, the terms' partitions hold ${wanted.size}")
+    // pruning never changes the answer: lookup == Spark's unpruned filter IN
     val unpruned = index.dictionary
-      .filter(org.apache.spark.sql.functions.col("field") === "content" &&
-        org.apache.spark.sql.functions.col("term").isin(terms: _*))
-      .select("field", "term", "df")
-    assert(probe.collect().map(_.toSeq).toSet ==
-      unpruned.collect().map(_.toSeq).toSet)
+      .filter(col("field") === "content" && col("term").isin(terms: _*))
+      .select("field", "term", "df").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(got == unpruned)
   }
 
   test("driver-side termBucketOf == Spark's pmod(xxhash64(term), n), bitwise") {
@@ -232,27 +233,76 @@ class PlanSpec extends AnyFunSuite {
       "column pruning failed — totalTf should not be read")
   }
 
-  test("page probes at k·overfetch = 30 ids push docId IN into the docs scan") {
+  test("page probes at k·overfetch = 30 ids skip row groups of a docs table " +
+      "written with several row groups, == Spark's filter IN") {
+    import org.apache.commons.io.FileUtils
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.query.LocalSearcher
     val m = SearchOpts().k * SearchOpts().overfetch
     assert(m == 30)
+    // a copy of the index whose docs table is rewritten in row groups of a
+    // few rows (this fixture only), docId-sorted within each partition
+    val dir = new java.io.File("/tmp/graft-test/plan-index-rowgroups")
+    FileUtils.deleteDirectory(dir)
+    FileUtils.copyDirectory(new java.io.File(index.dir), dir)
+    FileUtils.deleteDirectory(new java.io.File(dir, "docs"))
+    index.docs.repartition(col("docGroup"), col("segment")).sortWithinPartitions("docId")
+      .write.option("parquet.block.size", 1L)
+      .option("parquet.page.size.row.check.min", 5L)
+      .option("parquet.page.size.row.check.max", 5L)
+      .partitionBy("docGroup", "segment").parquet(s"$dir/docs")
+    val idx = new SearchIndex(spark, dir.getPath)
+    val docs = idx.docsTable
     val ids = (0L until 400L by 13L).take(m)
-    // above spark.sql.parquet.pushdown.inFilterThreshold (10) parquet
-    // evaluates the set as a min/max range, but it must still be pushed
-    def pushedIds(df: org.apache.spark.sql.DataFrame): Set[Long] = {
-      val pushed = df.queryExecution.executedPlan.collectLeaves()
-        .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metadata.getOrElse("PushedFilters", "") }.mkString
-      """In\(docId, \[([^\]]*)\]""".r.findFirstMatchIn(pushed)
-        .map(_.group(1).split(",").map(_.trim.toLong).toSet)
-        .getOrElse(fail(s"docId IN not pushed to the docs scan: $pushed"))
+    def viaSpark(where: org.apache.spark.sql.Column) =
+      idx.docs.filter(where && col("docId").isin(ids: _*))
+        .select("docId", "repo", "path", "lang", "qualityScore", "repoScore").collect()
+        .map(r => r.getLong(0) -> LocalSearcher.DocMeta(r.getString(1), r.getString(2),
+          r.getString(3), r.getDouble(4), r.getDouble(5))).toMap
+    val page = idx.pageProbe(ids)
+    assert(page.size == m && page == viaSpark(lit(true)))
+    // an unsharded page opens every file: read + skipped is every row group
+    assert(docs.filesOpened.get == docs.files.size)
+    val (read, skipped) = (docs.rowGroupsRead.get, docs.rowGroupsSkipped.get)
+    assert(read + skipped > 2 * m, s"fixture: ${read + skipped} row groups")
+    assert(read <= m, s"read $read of ${read + skipped} row groups for $m ids")
+    // a serving shard's page: its docGroups only, the same rows as Spark's
+    val shard = idx.pageProbe(ids, Some((1, 2)))
+    assert(shard.nonEmpty && shard.size < m && shard == viaSpark(pmod(col("docGroup"), lit(2)) === 1))
+  }
+
+  test("the serving block fetch == Spark's filter IN on the postings table") {
+    import org.apache.spark.sql.functions.col
+    import graft.query.LocalSearcher
+    val keys = Seq("python", "tutorial", "zzqxabsent").map(t => ("content", t))
+    val got = LocalSearcher.load(index).blocksOf(keys)
+    val want = index.postings
+      .filter(col("field") === "content" && col("term").isin(keys.map(_._2): _*))
+      .collect().toSeq
+      .map(r => (r.getAs[String]("term"), r.getAs[Any]("docGroup").toString.toLong,
+        r.getAs[Int]("blockIdx"), r.getAs[Long]("firstDocId"),
+        r.getAs[Array[Byte]]("bytes").toSeq))
+    def flat(t: String) = got(("content", t)).toSeq
+      .map(b => (b.term, b.docGroup, b.blockIdx, b.firstDocId, b.bytes.toSeq))
+    assert(got(("content", "zzqxabsent")).isEmpty)
+    Seq("python", "tutorial").foreach { t =>
+      assert(flat(t).nonEmpty && flat(t).toSet == want.filter(_._1 == t).toSet, s"blocks of $t")
     }
-    Seq(
-      "engine" -> index.pageProbe(ids),
-      "serving" -> LocalSearcher.load(index).docsProbe(ids),
-      "serving shard" -> LocalSearcher.loadSharded(index, 2).shards(1).docsProbe(ids)
-    ).foreach { case (name, probe) =>
-      assert(pushedIds(probe) == ids.toSet, s"$name probe pushed a different id set")
-    }
+  }
+
+  test("a requested column missing from a file fails the direct read, never reads as null") {
+    import spark.implicits._
+    val t = "/tmp/graft-test/plan-missing-column"
+    graft.io.ParquetTableIO.drop(spark, t)
+    Seq((1L, "a")).toDF("x", "y").write.parquet(s"$t/g=1")
+    Seq(2L).toDF("x").write.parquet(s"$t/g=2")
+    val table = graft.io.ParquetTableIO.read(spark, t)
+    assert(table.columns.toSeq == Seq("x", "y", "g"), "fixture: the schema has y")
+    val direct = new graft.io.DirectTable(table)
+    assert(direct.rows(Seq("x", "g")).map(_.toSeq).toSet == Set(Seq(1L, 1), Seq(2L, 2)))
+    val e = intercept[IllegalStateException](direct.rows(Seq("x", "y")))
+    assert(e.getMessage.contains("column y is missing"), e.getMessage)
+    // pruned to the file that has y, the same read succeeds
+    assert(direct.rows(Seq("y"), partitions = _.int("g") == 1).map(_.toSeq) == Seq(Seq("a")))
   }
 }

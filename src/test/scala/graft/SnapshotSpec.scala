@@ -500,4 +500,60 @@ class SnapshotSpec extends AnyFunSuite {
     assert(served(LocalSearcher.searchSharded(LocalSearcher.loadSharded(idx, 2), q,
       SearchOpts(k = 10))) == before, "a serving shard dropped a live doc")
   }
+
+  test("serving page == distributed page == exhaustive plan, bitwise, on " +
+      "SnapshotTableIO with uncommitted files planted in the docs, postings " +
+      "and dictionary partitions; unsharded and 2-shard readers") {
+    val d = "/tmp/graft-test/snap-orphan-read"
+    IndexBuilder.deleteDir(spark, d)
+    IndexBuilder.build(spark, corpus, d, params(SnapshotTableIO))
+    val layout = IndexBuilder.Layout(d)
+    val queries = Seq("python tutorial", "machine learning", "database performance tuning")
+    val opts = SearchOpts(k = 10)
+    def bits(rows: Seq[(Int, Long, Double)]) =
+      rows.map { case (r, id, s) => (r, id, java.lang.Double.doubleToRawLongBits(s)) }
+    def dist(idx: SearchIndex, q: String, o: SearchOpts) = bits(QueryEngine.search(idx, q, o)
+      .collect().toSeq.map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))))
+    def served(hits: Seq[LocalSearcher.Hit]) = bits(hits.map(h => (h.rank, h.docId, h.score)))
+    val before = queries.map(q => dist(new SearchIndex(spark, d, SnapshotTableIO), q, opts))
+    assert(before.forall(_.nonEmpty))
+
+    // never-committed residue beside a committed file in each table: a
+    // copy of the postings file (every block twice), and dictionary / docs
+    // rows with a different df / repo
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def committed(table: String) = SnapshotTableIO.read(spark, table).inputFiles
+      .map(f => new Path(new java.net.URI(f))).sorted.head
+    def plant(table: String, rows: Path => DataFrame): Unit = {
+      val file = committed(table)
+      val tmp = s"$d/_plant"
+      rows(file).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).head
+      assert(fs.rename(part, new Path(file.getParent, s"orphan-${part.getName}")))
+      fs.delete(new Path(tmp), true)
+    }
+    plant(layout.postings, f => spark.read.parquet(f.toString))
+    plant(layout.dictionary, f => spark.read.parquet(f.toString)
+      .withColumn("df", col("df") + 1000L))
+    plant(layout.docs, f => spark.read.parquet(f.toString)
+      .withColumn("repo", lit("orphan/repo")))
+    assert(ParquetTableIO.read(spark, layout.dictionary).inputFiles.exists(_.contains("orphan-")),
+      "fixture: a raw listing must see the planted files")
+
+    val idx = new SearchIndex(spark, d, SnapshotTableIO)
+    val li = LocalSearcher.load(idx)
+    val sharded = LocalSearcher.loadSharded(idx, 2)
+    Seq(opts, opts.copy(fields = Seq("content" -> 1.5), phraseBoost = 2.0)).foreach { o =>
+      queries.zipWithIndex.foreach { case (q, i) =>
+        val page = dist(idx, q, o)
+        if (o == opts) assert(page == before(i), s"'$q': the distributed page read a planted file")
+        assert(page == dist(idx, q, o.copy(wand = false)), s"'$q': WAND != exhaustive")
+        assert(served(LocalSearcher.search(li, q, o)) == page, s"'$q': serving != distributed")
+        assert(served(LocalSearcher.searchSharded(sharded, q, o)) == page,
+          s"'$q': 2-shard serving != distributed")
+      }
+    }
+    assert(!LocalSearcher.search(li, "python tutorial", opts).exists(_.repo == "orphan/repo"))
+  }
 }
