@@ -11,7 +11,8 @@ import java.nio.file.{Files, Paths}
 /** Dumps the formatted physical plans of the engine's hot paths to
   * EXPLAIN.md — the judge-facing evidence that the plans are the ones a
   * 100 TB deployment wants (pushed filters, pruned columns, broadcast
-  * joins, TakeOrderedAndProject).  Usage: runMain graft.bench.ExplainDump */
+  * joins, TakeOrderedAndProject).  Usage: runMain graft.bench.ExplainDump,
+  * from the directory EXPLAIN.md should be written to (the repo root). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -86,11 +87,10 @@ object ExplainDump {
 
     // tombstone deletes: the candidates/WAND plan is UNCHANGED (the live-docs
     // skip happens inside the existing MapPartitions — no extra operator, no
-    // extra shuffle); the visible plan pieces are the shard-pruned tombstone
-    // load and the fallback wildcard arm's anti-join
+    // extra shuffle); the visible plan piece is the fallback wildcard arm's
+    // anti-join (a serving shard's tombstone load is a direct parquet read,
+    // graft.io.DirectTable, and has no Spark plan)
     graft.index.Deletes.deleteWhere(spark, dir, pmod(col("docId"), lit(97)) === 5)
-    val shardTombs = graft.io.ParquetTableIO.read(spark, graft.index.Deletes.tombstones(dir))
-      .filter(pmod(col("docGroup"), lit(4L)) === 1L).select("docId")
     val delIndex = new SearchIndex(spark, dir)
     val delCand = QueryEngine.candidates(delIndex, "python tutorial",
       SearchOpts(wand = true))
@@ -258,12 +258,6 @@ object ExplainDump {
        |${fmt(delCand)}
        |```
        |
-       |## 10b. Serving shard's tombstone load (docGroup partition pruning)
-       |
-       |```
-       |${fmt(shardTombs)}
-       |```
-       |
        |## 10c. Fallback wildcard arm under deletes (anti-join, still page-bounded)
        |
        |```
@@ -295,7 +289,7 @@ object ExplainDump {
        |${fmt(snapScan)}
        |```
        |""".stripMargin
-    Files.writeString(Paths.get("/root/repo/EXPLAIN.md"), md)
+    Files.writeString(Paths.get("EXPLAIN.md"), md) // the working directory
     println(s"wrote EXPLAIN.md (${md.length} chars)")
     spark.stop()
   }

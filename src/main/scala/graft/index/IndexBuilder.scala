@@ -4,6 +4,7 @@ import graft.core.{Analyzer, Posting}
 import graft.io.{DirectTable, ParquetTableIO, TableIO}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CachedTable
 
 /** Stored posting-block row. Blocks of a (field,term) are globally ordered
   * by firstDocId (docGroup ranges are docId ranges, and segments within a
@@ -23,9 +24,11 @@ case class BlockRow(
   * compaction decode produce — and emits a compressed block every
   * `blockSize` postings, computing the block statistics in a single pass.
   * Memory is O(blockSize), never a whole posting list. Every posting must
-  * satisfy tf == positions.length >= 1 (tf is the position count). Output
-  * is differential-tested against an occurrence-grained reference builder
-  * (CodecSpec). */
+  * satisfy tf == positions.length >= 1 (tf is the position count). A docId
+  * that repeats within one (field, term, docGroup) run is two documents
+  * sharing an id: the builder raises [[IndexBuilder.docIdCollision]]
+  * instead of merging their postings. Output is differential-tested
+  * against an occurrence-grained reference builder (CodecSpec). */
 final class PostingBlockIterator(
     rows: Iterator[(String, String, Long, Long, Int, Array[Int])],
     blockSize: Int) extends Iterator[BlockRow] {
@@ -73,6 +76,8 @@ final class PostingBlockIterator(
     }
 
     var continue = true
+    var first = true
+    var prev = 0L
     while (continue && buf.hasNext) {
       val h = buf.head
       if (h._1 != f || h._2 != t || h._3 != g) continue = false
@@ -81,6 +86,11 @@ final class PostingBlockIterator(
         require(ps != null && ps.length >= 1,
           s"posting ($f, $t, docGroup $g, docId $d) has no positions: " +
             "tf == positions.length >= 1 is required")
+        if (!first && d == prev)
+          throw IndexBuilder.docIdCollision(
+            s"docId $d appears twice in the postings of ($f, $t, docGroup $g)")
+        first = false
+        prev = d
         block += Posting(d, ps.length, dl, ps)
         if (block.size >= blockSize) flushBlock()
       }
@@ -135,8 +145,10 @@ final class PostingBlockIterator(
   * distinct `inputSnapshot` that is STABLE across retries of that batch
   * (StreamingIndexer derives it from the micro-batch epoch). Hash-derived
   * ids (withDocId fallback) are for static one-shot builds only: resume
-  * then skips whole done groups, and the build fails fast on docId
-  * collisions (metrics.docIdCollisions audit).
+  * then skips whole done groups, and a docId collision fails the build
+  * before its lineage commit (the write tasks check the batch, the derived
+  * refresh audits the whole docs table; metrics.docIdCollisions records
+  * the invariant).
   *
   * Per-row invariant (BASELINE.json input_hint): when the input has a
   * `sha256` column the build recomputes sha2(content,256) and records
@@ -342,72 +354,36 @@ object IndexBuilder {
       .withColumn("qualityScore", params.qualityScoreCol())
       .withColumn("repoScore", params.repoScoreCol())
 
-    // Staging (guide §1.2/§5): when the batch's plan contains an opaque
-    // object-serialization boundary (a typed map / generator input), column
-    // pruning cannot reach through it, so every consumer pass below — the
-    // audit aggregate, the docs write, the postings build — would re-run
-    // FULL row materialization (for the bench generator that includes a
-    // SHA-256 per row per pass). Stage the batch once: content + per-field
-    // dl + sha, NOT token arrays (measured in r4 and kept: materializing
-    // the token arrays through the columnar cache costs more than the two
-    // re-tokenizations it would save). The audit aggregate below is the
-    // action that fills the cache. File-backed inputs skip the persist
-    // entirely: their re-reads are column-pruned scans, and caching a
-    // 100 TB batch would double its I/O for nothing.
-    val opaqueInput = docsDf.queryExecution.optimizedPlan.collectFirst {
-      case s: org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject => s
-    }.isDefined
-    val staged =
-      if (opaqueInput)
-        docsDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else docsDf
-
-    try {
     val metaCols = Seq("docId", "repo", "path", "lang") ++
       params.fields.map(f => s"dl_$f") ++
       Seq("sha256_computed", "shaOk", "qualityScore", "repoScore", "docGroup")
 
-    // fail fast on docId collisions BEFORE any write: a duplicated id would
-    // interleave two documents' position streams inside one posting and
-    // surface as an opaque codec failure deep inside a task. BATCH-scoped
-    // (cost proportional to the batch, column-pruned to docId/docGroup):
-    // dense-id appends cannot collide with committed rows by construction
-    // (pendingRows keeps only docId > committed max per group), and the
-    // full-table audit in refreshDerived remains the backstop for the
-    // documented-unsupported hash-id append edge. The distinct docGroup
-    // count sizes the postings shuffle below.
-    val nGroupsBatch = locally {
-      val d = staged
-        .agg(count(lit(1)).as("n"), countDistinct($"docId").as("nd"),
-          countDistinct($"docGroup").as("ng"))
-        .collect()(0)
-      if (d.getLong(0) != d.getLong(1))
-        throw new IllegalStateException(
-          s"docId collision: ${d.getLong(0)} doc rows but ${d.getLong(1)} " +
-            "distinct docIds in this batch — supply dense ingest-assigned " +
-            "docIds (hash-derived ids collide at scale)")
-      d.getLong(2)
-    }
-
+    // docId collisions are caught inside the write tasks, which see every
+    // docGroup sorted by docId (a docGroup is a function of the docId, so
+    // both copies of a repeated id meet in one task): the docs write checks
+    // adjacent ids (UniqueSortedIds) and the block builder checks each
+    // posting run (PostingBlockIterator). A duplicated id would otherwise
+    // merge two documents' postings. BATCH-scoped: dense-id appends cannot
+    // collide with committed rows by construction (pendingRows keeps only
+    // docId > committed max per group), and the full-table audit in
+    // refreshDerived remains the backstop for the documented-unsupported
+    // hash-id append edge.
+    //
     // the docs write and the postings build are independent consumers of
-    // the persisted batch — overlap them so the postings stage's tail
-    // back-fills the cores the docs write frees (guide §2.6). Sequential
-    // under a snapshot TableIO, whose manifest commits are simplest kept
-    // single-writer-per-call.
-    val docsOut = staged.select(metaCols.map(col): _*)
+    // the batch — overlap them so the postings stage's tail back-fills the
+    // cores the docs write frees (guide §2.6). Sequential under a snapshot
+    // TableIO, whose manifest commits are simplest kept single-writer-per-
+    // call. Each reads the batch plan itself: a file-backed batch is two
+    // column-pruned scans, and an opaque one (a typed map / generator,
+    // which column pruning cannot reach through) is evaluated once per
+    // consumer, side by side. Persisting it would put a cache-fill job
+    // ahead of both passes; the build ran slower that way, because it is
+    // bound by sequential Spark jobs, not by the batch's CPU.
+    val docsOut = docsDf.select(metaCols.map(col): _*)
       .withColumnRenamed("sha256_computed", "sha256")
       .withColumn("segment", lit(segment))
       .repartition(col("docGroup")).sortWithinPartitions("docId")
-    def writeDocs(): Unit =
-      io.overwritePartitions(docsOut, layout.docs, Seq("docGroup", "segment"))
-    val docsFut: Option[java.util.concurrent.Future[_]] =
-      if (io eq ParquetTableIO) {
-        val t = java.util.concurrent.Executors.newSingleThreadExecutor()
-        try Some(t.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = writeDocs()
-        }))
-        finally t.shutdown()
-      } else { writeDocs(); None }
+      .withColumn("docId", uniqueSortedIds(col("docId")))
 
     // ---- postings ----
     // ONE shuffle of PACKED (doc, term) rows, not raw token occurrences: a
@@ -423,35 +399,26 @@ object IndexBuilder {
         ColumnBridge.expression(c)))
     }
     val perDocTerm = params.fields.map { f =>
-      staged.select($"docId", $"docGroup", col(s"dl_$f").as("dl"),
+      docsDf.select($"docId", $"docGroup", col(s"dl_$f").as("dl"),
           explode(tokenPostingsCol(Analyzer.tokensCol(col(f)))).as("tp"))
         .select(lit(f).as("field"), $"tp.term".as("term"), $"docGroup",
           $"docId", $"dl", $"tp.positions".as("positions"))
     }.reduce(_ unionByName _)
 
-    // Scale-adaptive exchange plan (measured, guide §1.2/§2.4/§2.5):
-    //  - FUSED (one exchange, keyed by docGroup): the block builder's
-    //    in-partition sort still sees complete ordered (field, term,
-    //    docGroup) runs, and the finished blocks are already grouped by
-    //    docGroup, so the write needs NO second shuffle of the compressed
-    //    block bytes — at deployment scale that second shuffle re-moves the
-    //    entire index, the dominant avoidable volume of the build. Chosen
-    //    when the batch has ≥ 32× more docGroups than shuffle partitions,
-    //    where hash assignment of groups to tasks is statistically even.
-    //  - TWO-EXCHANGE (hash by (field, term, docGroup), then a docGroup
-    //    shuffle of the finished blocks for one-file-per-group layout):
-    //    below that ratio a docGroup-keyed build stage is lumpy (few keys,
-    //    many tasks — measured +35% build wall at c8 on the 25-group bench
-    //    corpus), so the even fine-grained key keeps the expensive stage
-    //    balanced and only the cheap block write pays the lumpy exchange.
-    // Block CONTENT is identical either way (runs and their sort order are
-    // partitioning-invariant); only file arrangement differs.
-    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-    val fused = nGroupsBatch >= 32L * shufflePartitions
+    // Exchange plan (measured, guide §1.2/§2.4/§2.5): hash by (field, term,
+    // docGroup) — an even, fine-grained key that keeps the block-building
+    // stage balanced at any docGroup count — then a docGroup shuffle of the
+    // finished blocks for the one-file-per-group layout. Block CONTENT does
+    // not depend on the plan (runs and their sort order are
+    // partitioning-invariant). A fused plan (one exchange keyed by
+    // docGroup, no second shuffle) lost by 35% below 32× more docGroups
+    // than shuffle partitions (a docGroup-keyed stage is lumpy there) and
+    // did not beat this plan above it (16k-doc builds, 4 shuffle
+    // partitions, median of 3: 18.35 vs 18.54 s at 250 docGroups, 46.6 vs
+    // 44.5 s at 1000), so it was deleted.
     val blockSize = params.blockSize
     val blocks: Dataset[BlockRow] =
-      (if (fused) perDocTerm.repartition($"docGroup")
-       else perDocTerm.repartition($"field", $"term", $"docGroup"))
+      perDocTerm.repartition($"field", $"term", $"docGroup")
       .sortWithinPartitions($"field", $"term", $"docGroup", $"docId")
       .as[(String, String, Long, Long, Int, Array[Int])]
       .mapPartitions(it => new PostingBlockIterator(it, blockSize))
@@ -461,61 +428,84 @@ object IndexBuilder {
     // each `sum(length(bytes))` re-reads the whole compressed index (the
     // `bytes` column is ~95% of the table's bytes) right after writing it.
     // Every writer stores it (the format stamp refuses older layouts).
-    //
-    // a postings-side failure must still AWAIT the side-thread docs write
-    // before propagating — an abandoned in-flight write racing an
-    // in-process retry would be a same-holder writer overlap the lock
-    // cannot see
+    val blocksOut = blocks.toDF().withColumn("segment", lit(segment))
+      .withColumn("nBytes", length($"bytes"))
     try {
-      val blocksOut = blocks.toDF().withColumn("segment", lit(segment))
-        .withColumn("nBytes", length($"bytes"))
-      io.overwritePartitions(
-        if (fused) blocksOut
-        else blocksOut.repartition(col("docGroup"))
-          .sortWithinPartitions("field", "term", "firstDocId", "blockIdx"),
-        layout.postings, Seq("docGroup", "segment"))
+      alongside(parallel = io eq ParquetTableIO)(
+        io.overwritePartitions(docsOut, layout.docs, Seq("docGroup", "segment")))(
+        io.overwritePartitions(
+          blocksOut.repartition(col("docGroup"))
+            .sortWithinPartitions("field", "term", "firstDocId", "blockIdx"),
+          layout.postings, Seq("docGroup", "segment")))
     } catch { case t: Throwable =>
-      docsFut.foreach(f => try f.get() catch { case _: Throwable => () })
-      throw t
+      collisionIn(t) match {
+        case None => throw t
+        case Some(c) =>
+          // the failed write committed nothing, but the other one may have
+          // (colliding docs that share no term pass the block builder): drop
+          // this batch's partitions unless a committed lineage row already
+          // owns the segment, so a corrected retry starts clean
+          if (!committedSegment(spark, layout, io, segment))
+            Seq(layout.docs, layout.postings).foreach(p => io.deletePartitions(
+              spark, p, Seq("docGroup" -> "*", "segment" -> segment)))
+          throw new IllegalStateException(c.getMessage, t)
+      }
     }
-    docsFut.foreach(_.get()) // surface docs-write failures before commit
 
-    // ---- dictionary/stats/metrics: re-derived from the committed tables,
-    // so a crash-retry of this segment cannot double-count it ----
-    refreshDerived(spark, dir, io, params.dictTargetBucketRows)
+    // ---- lineage: per-(docGroup, segment) rows of the segment just
+    // written, partitioned by snapshot. Aggregated on the executors beside
+    // the derived refresh — planned, persisted and filled on the side
+    // thread, never collected — and written LAST (it is the commit marker a
+    // resume trusts) by dynamic overwrite of THIS snapshot's partition only.
+    // Append-only at the table level; committed state is an aggregation,
+    // never driver memory. ----
+    @volatile var lineage: DataFrame = null
+    try {
+      alongside(parallel = true) {
+        lineage = segmentLineage(spark, layout, io, segment)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        CachedTable.fill(lineage)
+      } {
+        // ---- dictionary/stats/metrics: re-derived from the committed
+        // tables, so a crash-retry of this segment cannot double-count it
+        refreshDerived(spark, dir, io, params.dictTargetBucketRows)
+      }
+      io.overwritePartitions(lineage, layout.lineage, Seq("inputSnapshot"))
+    } finally if (lineage != null) { lineage.unpersist(false); () }
+  }
 
-    // ---- lineage LAST (the commit marker a resume trusts): per-(docGroup,
-    // segment) rows, partitioned by snapshot — dynamic overwrite of THIS
-    // snapshot's partition only. Append-only at the table level; committed
-    // state is an aggregation, never driver memory. ----
-    val allBlocks = io.read(spark, layout.postings)
-    val allDocs = io.read(spark, layout.docs)
-    val segPostings = allBlocks.filter($"segment" === segment)
-    val segDocs = allDocs.filter($"segment" === segment)
-    // LEFT join FROM docs: a group whose batch docs all tokenized to zero
-    // tokens emits no postings, but its docs ARE committed — dropping the
-    // lineage row would re-select those docIds as pending forever (and
-    // trip the collision audit on the re-ingest)
-    val newLineage = segDocs.groupBy($"docGroup")
-      .agg(count(lit(1)).as("docs"), max($"docId").as("maxDocId"),
-        min($"shaOk").as("shaOk"))
-      .join(
-        segPostings.groupBy($"docGroup")
-          .agg(sum($"n").as("p_"), sum($"nBytes").as("b_"),
-            countDistinct($"term").as("f_")),
-        Seq("docGroup"), "left_outer")
-      .withColumn("postingsEmitted", coalesce($"p_", lit(0L)))
-      .withColumn("bytesCompressed", coalesce($"b_", lit(0L)))
-      .withColumn("mergeFanIn", coalesce($"f_", lit(0L)))
-      // cast: docGroup is the docs PARTITION column here, path-inferred as
-      // int for small values — lineage partitionId is long by contract
-      // (mixed-width files would poison the lineage table's schema merge)
-      .select($"docGroup".cast("long").as("partitionId"), lit("done").as("status"),
-        $"docs", $"maxDocId", $"postingsEmitted", $"bytesCompressed",
-        $"mergeFanIn", $"shaOk", current_timestamp().as("updatedAt"),
-        lit(segment).as("inputSnapshot"))
-    io.overwritePartitions(newLineage, layout.lineage, Seq("inputSnapshot"))
-    } finally if (opaqueInput) { staged.unpersist(false); () }
+  /** The lineage rows of `segment`: ONE aggregate over the union of the
+    * segment's doc and block rows (no join). Doc rows carry docId/shaOk,
+    * block rows term/n/nBytes, and each aggregate skips the other side's
+    * nulls; partitioned by docGroup up front, both levels of the distinct
+    * term count need one exchange. Rows come FROM docs: a group whose batch
+    * docs all tokenized to zero tokens emits no postings, but its docs ARE
+    * committed — dropping the lineage row would re-select those docIds as
+    * pending forever (and trip the collision check on the re-ingest). */
+  private def segmentLineage(spark: SparkSession, layout: Layout, io: TableIO,
+      segment: String): DataFrame = {
+    import spark.implicits._
+    val docsTable = io.read(spark, layout.docs)
+    val segDocs = docsTable.filter($"segment" === segment)
+      .select($"docGroup".cast("long").as("docGroup"), $"docId", $"shaOk",
+        lit(null).cast("string").as("term"), lit(null).cast("int").as("n"),
+        lit(null).cast("int").as("nBytes"))
+    val segBlocks = io.read(spark, layout.postings).filter($"segment" === segment)
+      .select($"docGroup".cast("long").as("docGroup"),
+        lit(null).cast(docsTable.schema("docId").dataType).as("docId"),
+        lit(null).cast("boolean").as("shaOk"), $"term", $"n", $"nBytes")
+    segDocs.unionByName(segBlocks).repartition($"docGroup").groupBy($"docGroup")
+      .agg(count($"docId").as("docs"), max($"docId").as("maxDocId"),
+        min($"shaOk").as("shaOk"), sum($"n").as("p_"), sum($"nBytes").as("b_"),
+        countDistinct($"term").as("mergeFanIn"))
+      .filter($"docs" > 0)
+      // lineage partitionId is long by contract (docGroup is a partition
+      // column, path-inferred as int for small values; mixed-width files
+      // would poison the lineage table's schema merge)
+      .select($"docGroup".as("partitionId"), lit("done").as("status"),
+        $"docs", $"maxDocId", coalesce($"p_", lit(0L)).as("postingsEmitted"),
+        coalesce($"b_", lit(0L)).as("bytesCompressed"), $"mergeFanIn", $"shaOk",
+        current_timestamp().as("updatedAt"), lit(segment).as("inputSnapshot"))
   }
 
   /** Re-derive dictionary, stats and metrics from the CURRENT docs/postings
@@ -525,12 +515,15 @@ object IndexBuilder {
     * needs no manifest. The one maintenance path for these tables: called
     * after every build/resume (appends and upserts included), compaction
     * and Retention expiry. Audits docId uniqueness (count vs
-    * countDistinct) and throws on collision before writing stats.
+    * countDistinct) and throws on collision before writing any derived
+    * table.
     *
     * Cost note (scale): this is O(index METADATA) per call — the scans are
     * column-pruned to block metadata (n/sumTf/maxTf/minDl/nBytes, never
     * `bytes`) and doc metadata (docId/shaOk/dl), so it pays
-    * metadata-proportional, not data-proportional, work. */
+    * metadata-proportional, not data-proportional, work. The docs and the
+    * dictionary aggregates run side by side, then the dictionary, stats and
+    * metrics writes (on plain parquet); the meta marker goes last. */
   private[graft] def refreshDerived(spark: SparkSession, dir: String,
       io: TableIO = ParquetTableIO,
       dictTargetBucketRows: Long = DefaultDictTargetBucketRows): Unit = {
@@ -541,24 +534,15 @@ object IndexBuilder {
     val fields = allDocs.columns.filter(_.startsWith("dl_"))
       .map(_.stripPrefix("dl_")).toSeq.sorted
 
-    // one job: N, per-field Σdl, sha violations, docId collision audit.
-    // Σdl is stored exactly as a LONG (stats.sumDl); avgdl = sumDl.toDouble
-    // / n, so any segmentation of the same docs yields bitwise-equal stats.
+    // docs aggregate: N, per-field Σdl, sha violations, docId collision
+    // audit (three jobs under AQE, for the countDistinct; they run beside
+    // the dictionary aggregate). Σdl is stored exactly as a LONG
+    // (stats.sumDl); avgdl = sumDl.toDouble / n, so any segmentation of the
+    // same docs yields bitwise-equal stats.
     val docAggCols = count(lit(1)).as("n") +:
       countDistinct($"docId").as("nDistinct") +:
       sum(when(!$"shaOk", 1L).otherwise(0L)).as("shaViol") +:
       fields.map(f => sum(col(s"dl_$f").cast("long")).as(s"sumdl_$f"))
-    val docAgg = allDocs.agg(docAggCols.head, docAggCols.tail: _*).collect()(0)
-    val nDocs = docAgg.getAs[Long]("n")
-    val nDistinct = docAgg.getAs[Long]("nDistinct")
-    val shaViol = docAgg.getAs[Long]("shaViol")
-    // docId collisions silently merge different docs' postings (wrong
-    // tf/dl) — at 10^12 rows a 64-bit hash id EXPECTS collisions, so this
-    // is a hard failure, not a warning.
-    if (nDistinct != nDocs)
-      throw new IllegalStateException(
-        s"docId collision: $nDocs doc rows but $nDistinct distinct docIds — " +
-          "supply dense ingest-assigned docIds (hash-derived ids collide at scale)")
 
     // dictionary: per-term block count + maxTf/minDl give the query side
     // term-level upper bounds and seek metadata without touching postings.
@@ -578,47 +562,53 @@ object IndexBuilder {
     val target =
       if (dictTargetBucketRows != DefaultDictTargetBucketRows) dictTargetBucketRows
       else dictMeta(spark, dir, io).map(_._2).getOrElse(DefaultDictTargetBucketRows)
-    // ONE postings scan serves dictionary AND metrics (the metrics columns
-    // — per-term group fan-in, compressed/raw bytes — used to be a second
-    // full (field, term) aggregation over the same block metadata; they now
-    // ride this aggregate and metrics rolls up from the persisted result)
-    val dictAgg = allBlocks.groupBy($"field", $"term")
+    // ONE postings scan serves dictionary AND metrics (per-term group
+    // fan-in, compressed/raw bytes ride this aggregate; metrics sum up from
+    // the persisted result). Hash-partitioned by (field, term) up front, the
+    // block rows need ONE exchange: the distinct count's inner
+    // (field, term, docGroup) level and the outer (field, term) level are
+    // both clustered by it (Spark's own plan exchanges before each level)
+    val dictAgg = allBlocks.repartition($"field", $"term").groupBy($"field", $"term")
       .agg(sum($"n").as("df"), sum($"sumTf").as("totalTf"),
         count(lit(1)).as("nBlocks"), max($"maxTf").as("maxTf"),
         min($"minDl").as("minDl"),
         countDistinct($"docGroup").as("g"), sum($"nBytes").as("bc"),
         sum(lit(16L) * $"n" + lit(4L) * $"sumTf").as("raw"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
     // provision at PHYSICAL-PARTITION grain: rows land in (tlen, termBucket)
     // PAIRS, so a global-vocab/target bucket count would leave every pair
     // holding ~target/#tlen-bands rows — #bands× more, smaller files (and
-    // manifest lines) than provisioned. ONE rollup job yields the global
-    // provisioning inputs (vocab, bands) AND the per-field metrics rollup —
-    // these were two separate driver aggregates over the same persisted
-    // result (guide §1.2: fewer passes before config tweaks).
-    val rolled = dictAgg.rollup($"field")
-      .agg(grouping($"field").cast("int").as("gid"), count(lit(1)).as("v"),
-        countDistinct(length($"term")).as("b"),
-        max($"g").as("maxFan"), avg($"g").as("avgFan"),
-        sum($"df").as("postings"), sum($"nBlocks").as("blocks"),
-        sum($"bc").as("bytes"), sum($"raw").as("raw"))
-      .collect()
-    val globalRow = rolled.find(_.getAs[Int]("gid") == 1)
-    val vocab = globalRow.map(_.getAs[Long]("v")).getOrElse(0L)
-    val bands = math.max(1L, globalRow.map(_.getAs[Long]("b")).getOrElse(0L))
-    val perField = rolled.filter(_.getAs[Int]("gid") == 0)
-      .map(r => r.getString(0) -> r).toMap
+    // manifest lines) than provisioned. ONE plain (field, term length)
+    // aggregate, collected (fields × term lengths rows), yields both the
+    // provisioning inputs (vocab, bands) and the per-field metrics exactly:
+    // sums and maxima add up across lengths, and avgMergeFanIn = Σg / terms
+    // is the quotient Spark's avg(g) computes (a double sum of integers
+    // below 2^53 is exact).
+    val (docAgg, byLen) = alongside(parallel = true)(
+      allDocs.agg(docAggCols.head, docAggCols.tail: _*).collect()(0))(
+      dictAgg.groupBy($"field", length($"term").as("tlen"))
+        .agg(count(lit(1)).as("v"), max($"g").as("maxFan"), sum($"g").as("sumFan"),
+          sum($"df").as("postings"), sum($"nBlocks").as("blocks"),
+          sum($"bc").as("bytes"), sum($"raw").as("raw"))
+        .collect().toSeq)
+    val nDocs = docAgg.getAs[Long]("n")
+    val nDistinct = docAgg.getAs[Long]("nDistinct")
+    val shaViol = docAgg.getAs[Long]("shaViol")
+    // docId collisions silently merge different docs' postings (wrong
+    // tf/dl) — at 10^12 rows a 64-bit hash id EXPECTS collisions, so this
+    // is a hard failure, not a warning.
+    if (nDistinct != nDocs)
+      throw docIdCollision(s"$nDocs doc rows but $nDistinct distinct docIds")
+
+    val vocab = byLen.map(_.getAs[Long]("v")).sum
+    val bands = math.max(1L, byLen.map(_.getAs[Int]("tlen")).distinct.size.toLong)
     val nBuckets = math.max(1L,
       (vocab + bands * target - 1) / (bands * target)).toInt
     // meta DROPPED first, re-written last: any crash window leaves it
     // absent, which consumers treat as "no bucket layout" (always safe —
     // see Layout.dictionaryMeta)
     io.drop(spark, layout.dictionaryMeta)
-    // the dictionary overwrite is the expensive derived write; under plain
-    // parquet it runs on a side thread while the tiny independent tables
-    // (stats, metrics) commit — the meta marker still waits for it below,
-    // preserving the crash-window ordering.
-    // Sequential under a snapshot TableIO (single-writer manifest commits).
     def writeDictionary(): Unit = io.overwriteTable(
       dictAgg
         .select($"field", $"term", $"df", $"totalTf", $"nBlocks", $"maxTf", $"minDl")
@@ -626,61 +616,96 @@ object IndexBuilder {
         .withColumn("termBucket", termBucketCol(nBuckets))
         .repartition($"tlen", $"termBucket").sortWithinPartitions("field", "term"),
       layout.dictionary, Seq("tlen", "termBucket"))
-    val dictFut: Option[java.util.concurrent.Future[_]] =
-      if (io eq ParquetTableIO) {
-        val t = java.util.concurrent.Executors.newSingleThreadExecutor()
-        try Some(t.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = writeDictionary()
-        }))
-        finally t.shutdown()
-      } else { writeDictionary(); None }
-
-    // a failure in the small writes must still AWAIT the side-thread
-    // dictionary write before propagating: an abandoned in-flight write
-    // racing an in-process retry's own dictionary overwrite would be a
-    // writer-writer overlap the lock cannot see (same holder)
-    try {
-    io.overwritePartitions(
+    def writeStats(): Unit = io.overwritePartitions(
       fields.map { f =>
         val sumDl = Option(docAgg.getAs[java.lang.Long](s"sumdl_$f"))
           .map(_.longValue).getOrElse(0L)
         (f, nDocs, if (nDocs > 0) sumDl.toDouble / nDocs else 0.0, sumDl)
       }.toDF("field", "n", "avgdl", "sumDl").coalesce(1),
       layout.stats, Nil)
-
-    // metrics: rolled up from the same rollup job as the provisioning (raw-
-    // size estimate derived exactly from block metadata: every occurrence
-    // is one position, so raw = 16B/posting + 4B/occurrence = 16*n+4*sumTf)
-    val rows = fields.map { f =>
-      val r = perField.get(f)
-      (f, nDocs,
-        r.map(_.getAs[Long]("postings")).getOrElse(0L),
-        r.map(_.getAs[Long]("blocks")).getOrElse(0L),
-        r.map(_.getAs[Long]("bytes")).getOrElse(0L),
-        r.map(_.getAs[Long]("raw")).getOrElse(0L),
-        r.map(_.getAs[Long]("maxFan")).getOrElse(0L),
-        r.map(_.getAs[Double]("avgFan")).getOrElse(0.0), shaViol,
-        // 0 by construction in any COMMITTED build — the audit above throws
-        // before this write otherwise; the column records the invariant
-        nDocs - nDistinct)
+    // metrics (raw-size estimate derived exactly from block metadata: every
+    // occurrence is one position, so raw = 16B/posting + 4B/occurrence =
+    // 16*n+4*sumTf)
+    def writeMetrics(): Unit = {
+      val rows = fields.map { f =>
+        val r = byLen.filter(_.getString(0) == f)
+        def total(c: String) = r.map(_.getAs[Long](c)).sum
+        val terms = total("v")
+        (f, nDocs, total("postings"), total("blocks"), total("bytes"), total("raw"),
+          if (r.isEmpty) 0L else r.map(_.getAs[Long]("maxFan")).max,
+          if (terms == 0L) 0.0 else total("sumFan").toDouble / terms, shaViol,
+          // 0 by construction in any COMMITTED build — the audit above
+          // throws before this write otherwise; the column records the
+          // invariant
+          nDocs - nDistinct)
+      }
+      io.overwritePartitions(
+        rows.toDF("field", "docs", "postingsEmitted", "blocks", "bytesCompressed",
+          "bytesRawEstimate", "maxMergeFanIn", "avgMergeFanIn", "shaViolations",
+          "docIdCollisions").coalesce(1),
+        layout.metrics, Nil)
     }
-    io.overwritePartitions(
-      rows.toDF("field", "docs", "postingsEmitted", "blocks", "bytesCompressed",
-        "bytesRawEstimate", "maxMergeFanIn", "avgMergeFanIn", "shaViolations",
-        "docIdCollisions").coalesce(1),
-      layout.metrics, Nil)
-    } catch { case t: Throwable =>
-      dictFut.foreach(f => try f.get() catch { case _: Throwable => () })
-      throw t
-    }
-    // surface dictionary-write failures BEFORE the meta marker goes back:
-    // a failed dictionary with a fresh marker would claim a bucket layout
-    // that is not on disk (meta absent = safe fallback everywhere)
-    dictFut.foreach(_.get())
-    dictAgg.unpersist()
+    // the dictionary overwrite is the expensive derived write; under plain
+    // parquet it runs beside the tiny independent stats and metrics writes,
+    // which run beside each other. Sequential under a snapshot TableIO
+    // (single-writer manifest commits). A dictionary-write failure surfaces
+    // BEFORE the meta marker goes back: a failed dictionary with a fresh
+    // marker would claim a bucket layout that is not on disk (meta absent
+    // = safe fallback everywhere).
+    val par = io eq ParquetTableIO
+    alongside(par)(writeDictionary())(alongside(par)(writeStats())(writeMetrics()))
     io.overwritePartitions(
       Seq((nBuckets, target)).toDF("nBuckets", "targetRows").coalesce(1),
       layout.dictionaryMeta, Nil)
+    } finally { dictAgg.unpersist(); () }
+  }
+
+  /** Runs `side` on a new thread and `main` on the caller and returns both
+    * results. The thread is created inside the call, so it inherits the
+    * caller's Spark local properties (job group, scheduler pool). Both
+    * always finish before this returns or throws: a failing `main` waits
+    * for `side` before propagating — an abandoned in-flight write racing an
+    * in-process retry would be a same-holder writer overlap the lock cannot
+    * see — and a failing `side` surfaces after `main` completes. With
+    * `parallel` false, `side` runs and then `main`, both on the caller. */
+  private[index] def alongside[A, B](parallel: Boolean)(side: => A)(main: => B): (A, B) =
+    if (!parallel) { val a = side; (a, main) }
+    else {
+      @volatile var out: Either[Throwable, A] = null
+      val t = new Thread(() => out = try Right(side) catch { case e: Throwable => Left(e) },
+        "graft-build-side")
+      t.setDaemon(true)
+      t.start()
+      val b = try main catch { case e: Throwable => t.join(); throw e }
+      t.join()
+      out.fold(e => throw e, a => (a, b))
+    }
+
+  /** The error every docId-collision check raises (the docs write, the
+    * block builder, the refresh's full-table audit). */
+  private[graft] def docIdCollision(detail: String): IllegalStateException =
+    new IllegalStateException(s"docId collision: $detail — supply dense " +
+      "ingest-assigned docIds (hash-derived ids collide at scale)")
+
+  /** A collision a write task raised, found in the cause chain of the
+    * failed write (Spark wraps the task's exception). */
+  private def collisionIn(t: Throwable): Option[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).find {
+      case e: IllegalStateException => Option(e.getMessage).exists(_.startsWith("docId collision"))
+      case _ => false
+    }
+
+  /** True when a committed lineage row records `segment` (read from the
+    * lineage table's partition directories: no job). */
+  private def committedSegment(spark: SparkSession, layout: Layout, io: TableIO,
+      segment: String): Boolean =
+    io.exists(spark, layout.lineage) &&
+      new DirectTable(io.read(spark, layout.lineage)).files
+        .exists(_.values.get("inputSnapshot").exists(v => String.valueOf(v) == segment))
+
+  private def uniqueSortedIds(c: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.UniqueSortedIds(ColumnBridge.expression(c)))
   }
 
   def fileExists(spark: SparkSession, path: String): Boolean =

@@ -179,17 +179,19 @@ object Upsert {
     // never read. Re-validated by the maintenance step at the end.
     KeyMap.invalidate(spark, dir)
 
-    val nAdds = stagedAdds.count()
+    // the staged parquet's footer row counts: no job
+    val nAdds = graft.io.ParquetFooters.rowCount(stagedAdds)
     val added =
       if (nAdds == 0L) 0L
       else {
         // fresh dense ids above every committed id: base from lineage (the
-        // commit marker resume trusts), dense rank by key order; 0 on a
+        // commit marker resume trusts) — the maxDocId column statistics in
+        // its files' footers, no job — dense rank by key order; 0 on a
         // not-yet-built index (bootstrap batch)
         val base =
           if (!io.exists(spark, layout.lineage)) 0L
-          else io.read(spark, layout.lineage)
-            .agg(max(col("maxDocId"))).collect()(0).getLong(0) + 1L
+          else graft.io.ParquetFooters.maxLong(io.read(spark, layout.lineage), "maxDocId")
+            .fold(0L)(_ + 1L)
         val parts = math.max(1, stagedAdds.rdd.getNumPartitions)
         val ordered = stagedAdds
           .repartitionByRange(parts, keyCs: _*).sortWithinPartitions(keyCs: _*)
@@ -208,7 +210,7 @@ object Upsert {
     // briefly, never loses); count delta = applied tombstones
     val before = Deletes.count(spark, dir, io)
     val afterTotal =
-      if (tombs.isEmpty) before
+      if (graft.io.ParquetFooters.rowCount(tombs) == 0L) before
       else Deletes.deleteIds(spark, dir, tombs, io)
 
     // keymap maintenance LAST (all mutations committed): incremental bucket

@@ -177,4 +177,22 @@ private[graft] object ParquetFooters {
       .flatMap(f => footer(conf, new Path(new java.net.URI(f))).getBlocks.asScala)
       .map(_.getRowCount).sum
   }
+
+  /** The largest value of the LONG data column `column` in the files a
+    * DataFrame scans, from the row-group statistics in their footers; None
+    * when the files hold no row. A row group with rows but no statistic
+    * for the column fails the call: the answer would be a guess. */
+  def maxLong(df: DataFrame, column: String): Option[Long] = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.inputFiles.iterator.flatMap { f =>
+      val file = new Path(new java.net.URI(f))
+      footer(conf, file).getBlocks.asScala.iterator.filter(_.getRowCount > 0).map { b =>
+        val chunk = b.getColumns.asScala.find(_.getPath.toDotString == column)
+        if (!chunk.exists(c => c.getStatistics != null && c.getStatistics.hasNonNullValue))
+          throw new IllegalStateException(
+            s"$file: a row group has no statistics for column $column")
+        chunk.get.getStatistics.genericGetMax.asInstanceOf[java.lang.Long].longValue
+      }
+    }.maxOption
+  }
 }

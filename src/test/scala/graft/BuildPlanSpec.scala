@@ -6,15 +6,12 @@ import graft.query.{QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-6 optimization invariants for the build's scale-adaptive exchange
-  * plan and the guarded warm() driver pin.
+/** Invariants of the build's exchange plan and the guarded warm() driver
+  * pin.
   *
-  * The builder picks between a FUSED single exchange (batch docGroups ≥
-  * 32 × shuffle partitions — the deployment regime, where the finished
-  * blocks need no second shuffle) and the classic two-exchange plan (the
-  * small/local regime, where a docGroup-keyed stage would be lumpy).
-  * Block/dictionary CONTENT must be identical either way — only file
-  * arrangement may differ. */
+  * Block/dictionary CONTENT must not depend on how the build's exchanges
+  * are partitioned: 8 and 512 shuffle partitions put the 300 docGroups'
+  * runs into different tasks and files, never into different blocks. */
 class BuildPlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -37,35 +34,34 @@ class BuildPlanSpec extends AnyFunSuite {
         r.getLong(3), r.getLong(4), r.getInt(5), r.getInt(6)))
       .toSeq.sorted
 
-  test("fused single-exchange build (groups >= 32x shuffle partitions) is " +
-      "content-identical to the two-exchange plan") {
+  test("block content is independent of the shuffle partition count") {
     val n = 600L
-    // docGroupSize 2 -> 300 groups: >= 32*8 under the test session's 8
-    // shuffle partitions (fused), < 32*512 under 512 (two-exchange)
+    // docGroupSize 2 -> 300 groups: more than 32 per task under the test
+    // session's 8 shuffle partitions, fewer than one under 512
     val params = IndexBuilder.Params(blockSize = 8, docGroupSize = 2L,
       fields = Seq("content"))
     val corpus = CorpusGen.generateDF(spark, n, 7L, partitions = 3)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val fusedDir = "/tmp/graft-test/fused-build"
-    val twoDir = "/tmp/graft-test/twoex-build"
+    val narrowDir = "/tmp/graft-test/build-8-partitions"
+    val wideDir = "/tmp/graft-test/build-512-partitions"
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "8")
-      IndexBuilder.deleteDir(spark, fusedDir)
-      IndexBuilder.build(spark, corpus, fusedDir, params)
+      IndexBuilder.deleteDir(spark, narrowDir)
+      IndexBuilder.build(spark, corpus, narrowDir, params)
       spark.conf.set("spark.sql.shuffle.partitions", "512")
-      IndexBuilder.deleteDir(spark, twoDir)
-      IndexBuilder.build(spark, corpus, twoDir, params)
+      IndexBuilder.deleteDir(spark, wideDir)
+      IndexBuilder.build(spark, corpus, wideDir, params)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    assert(blockRows(fusedDir).nonEmpty)
-    assert(blockRows(fusedDir) == blockRows(twoDir),
-      "posting blocks differ between the fused and two-exchange plans")
-    assert(dictRows(fusedDir) == dictRows(twoDir))
+    assert(blockRows(narrowDir).nonEmpty)
+    assert(blockRows(narrowDir) == blockRows(wideDir),
+      "posting blocks differ between 8 and 512 shuffle partitions")
+    assert(dictRows(narrowDir) == dictRows(wideDir))
 
     val opts = SearchOpts(k = 10, overfetch = 3, diversity = true)
-    val a = QueryEngine.search(new SearchIndex(spark, fusedDir),
+    val a = QueryEngine.search(new SearchIndex(spark, narrowDir),
       "python tutorial", opts).collect().toSeq
-    val b = QueryEngine.search(new SearchIndex(spark, twoDir),
+    val b = QueryEngine.search(new SearchIndex(spark, wideDir),
       "python tutorial", opts).collect().toSeq
     assert(a == b, "search diverged between build plans")
   }

@@ -280,6 +280,33 @@ class ResumeSpec extends AnyFunSuite {
       IndexBuilder.build(spark, corpus, "/tmp/graft-test/resume-collide", params)
     }
     assert(e.getMessage.contains("docId collision"))
+
+    // a colliding append raises the same error and commits no lineage row,
+    // and a clean retry of the batch equals an index that never saw the
+    // collision. The two colliding docs share id 450 (docGroup 3, outside
+    // the clean batch) and no term, so only the docs write sees them: the
+    // postings write commits its partitions and the failed append must
+    // drop them again
+    val all = CorpusGen.generateDF(spark, 300L, seed = 29L, partitions = 2)
+    val batch = all.filter($"docId" >= 200)
+    val twins = batch.filter($"docId" >= 298)
+      .withColumn("content", when($"docId" === 298L, lit("alpha alpha")).otherwise(lit("beta")))
+      .withColumn("docId", lit(450L))
+    val colliding = batch.filter($"docId" < 298).unionByName(twins)
+    val dir = "/tmp/graft-test/resume-collide-append"
+    val clean = "/tmp/graft-test/resume-collide-clean"
+    val s1 = params.copy(inputSnapshot = "s1")
+    Seq(dir, clean).foreach(d => IndexBuilder.build(spark, all.filter($"docId" < 200), d, params))
+    val e2 = intercept[IllegalStateException](IndexBuilder.resume(spark, colliding, dir, s1))
+    assert(e2.getMessage.contains("docId collision"), e2.getMessage)
+    assert(spark.read.parquet(s"$dir/lineage").filter($"inputSnapshot" === "s1").isEmpty,
+      "a colliding append committed a lineage row")
+    IndexBuilder.resume(spark, batch, dir, s1)
+    IndexBuilder.resume(spark, batch, clean, s1)
+    for (t <- Seq("docs", "postings", "dictionary", "dictionary_meta", "stats",
+        "metrics", "lineage"))
+      assert(TableRows.same(graft.io.ParquetTableIO, dir, clean, t),
+        s"$t differs after the clean retry")
   }
 
   test("sha256 invariant: corrupted content is detected per row and per group") {

@@ -209,4 +209,17 @@ class UpsertSpec extends AnyFunSuite {
     val shas = dup.select(sha2(col("content"), 256)).collect().map(_.getString(0))
     assert(winner == Seq(shas.min), "duplicate key must resolve to the min-sha variant")
   }
+
+  test("fresh-id base from footer statistics; a footer without them fails loudly") {
+    import spark.implicits._
+    val dir = "/tmp/graft-test/upsert-footer-stats"
+    Seq(3L, 17L, 9L).toDF("maxDocId").write.mode("overwrite").parquet(s"$dir/with")
+    assert(graft.io.ParquetFooters.maxLong(spark.read.parquet(s"$dir/with"), "maxDocId")
+      .contains(17L))
+    Seq(3L).toDF("maxDocId").write.mode("overwrite")
+      .option("parquet.column.statistics.enabled", "false").parquet(s"$dir/without")
+    val e = intercept[IllegalStateException](
+      graft.io.ParquetFooters.maxLong(spark.read.parquet(s"$dir/without"), "maxDocId"))
+    assert(e.getMessage.contains("no statistics for column maxDocId"), e.getMessage)
+  }
 }
