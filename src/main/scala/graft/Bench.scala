@@ -82,7 +82,7 @@ object Bench {
 
   /** Block-skip probe on a tf-SKEWED corpus (the reference-query corpus is
     * deliberately tf-flat, where block maxima are all alike and block-level
-    * pruning has nothing to cut — see WandDiag/BASELINE.md): 30 high-tf
+    * pruning has nothing to cut — see BASELINE.md): 30 high-tf
     * docs up front raise the heap floor above every flat block's bound, so
     * the block-max WAND path must skip their decodes. Returns the measured
     * skip ratio (decoded / total blocks of the term, complemented). */

@@ -41,7 +41,7 @@ object Analyzer {
   /** Catalyst form of [[tokenize]]: array<string> of all tokens. Native
     * one-pass byte scan (graft.functions.TokenRuns) over Spark's own
     * `lower()` — the build's hottest pass; bitwise-identical to
-    * [[tokensColRegex]] (FunctionsSpec differential, TokenizeBench). */
+    * [[tokensColRegex]] (FunctionsSpec differential). */
   def tokensCol(c: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.functions.TokenRuns(

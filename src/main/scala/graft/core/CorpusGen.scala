@@ -110,7 +110,7 @@ object CorpusGen {
     * tf: the reference-query corpus above plants query terms at flat tf
     * 1-5, which makes every posting block's upper bound alike — block-max
     * WAND then has nothing to prune at block grain on the reference queries
-    * (the round-2 finding; see BASELINE.md WandDiag analysis). Real engines
+    * (the round-2 finding; see BASELINE.md's tf-flat analysis). Real engines
     * are different in two ways reproduced here:
     *
     *  1. tf is heavy-tailed (reps ~ u^-1.2, capped 64), so per-block maxTf

@@ -391,50 +391,27 @@ object Compaction {
         Seq("docGroup" -> "*", "segment" -> s))
       io.deletePartitions(spark, layout.lineage, Seq("inputSnapshot" -> s))
     }
-    val segDocs = io.read(spark, layout.docs).filter($"segment" === newSeg)
-    val segPostings = io.read(spark, layout.postings)
-      .filter($"segment" === newSeg)
-    // merged rows inherit their group's NEWEST constituent timestamp from
-    // the phase-1 carry table (retention age must survive the merge). By
-    // the marker protocol the carry ALWAYS exists here (written in phase 1,
-    // dropped only after both markers), so a missing carry means external
-    // interference — warn loudly and degrade to current_timestamp (which
-    // postpones, never loses, retention) rather than wedging every index
-    // open on an unrecoverable roll-forward.
-    val carried =
+    // the merged segment's lineage is the build's (one aggregate over its
+    // doc and block rows), except that merged rows inherit their group's
+    // NEWEST constituent timestamp from the phase-1 carry table (retention
+    // age must survive the merge). By the marker protocol the carry ALWAYS
+    // exists here (written in phase 1, dropped only after both markers), so
+    // a missing carry means external interference — warn loudly and keep
+    // current_timestamp (which postpones, never loses, retention) rather
+    // than wedging every index open on an unrecoverable roll-forward.
+    val fresh = IndexBuilder.segmentLineage(spark, layout, io, newSeg)
+    val lineage =
       if (io.exists(spark, carryDir(dir)))
-        io.read(spark, carryDir(dir)).withColumnRenamed("partitionId", "docGroup")
+        fresh.join(io.read(spark, carryDir(dir)), Seq("partitionId"), "left_outer")
+          .withColumn("updatedAt", coalesce($"carriedAt", $"updatedAt"))
+          .drop("carriedAt")
       else {
         System.err.println(
           s"[graft] WARNING: compaction carry table missing during " +
             s"roll-forward of $newSeg in $dir — merged lineage timestamps " +
             "reset to now; retention of this data is postponed accordingly")
-        segDocs.select($"docGroup").limit(0)
-          .withColumn("carriedAt", current_timestamp())
+        fresh
       }
-    // same left-join-from-docs shape as the build: a group whose docs all
-    // tokenized empty emits no postings but stays committed
-    val lineage = segDocs.groupBy($"docGroup")
-      .agg(count(lit(1)).as("docs"), max($"docId").as("maxDocId"),
-        min($"shaOk").as("shaOk"))
-      .join(
-        segPostings.groupBy($"docGroup")
-          .agg(sum($"n").as("p_"),
-            sum($"nBytes").as("b_"),
-            countDistinct($"term").as("f_")),
-        Seq("docGroup"), "left_outer")
-      .join(carried, Seq("docGroup"), "left_outer")
-      // cast: docGroup here comes from the docs PARTITION column, whose
-      // type is path-inferred (int for small values) — the builder's
-      // lineage writes partitionId as long, and mixed widths across
-      // lineage partition files poison schema merging and typed readers
-      .select($"docGroup".cast("long").as("partitionId"), lit("done").as("status"),
-        $"docs", $"maxDocId",
-        coalesce($"p_", lit(0L)).as("postingsEmitted"),
-        coalesce($"b_", lit(0L)).as("bytesCompressed"),
-        coalesce($"f_", lit(0L)).as("mergeFanIn"),
-        $"shaOk", coalesce($"carriedAt", current_timestamp()).as("updatedAt"),
-        lit(newSeg).as("inputSnapshot"))
     io.overwritePartitions(lineage, layout.lineage, Seq("inputSnapshot"))
     // tombstone GC: the merged segment was written without its deleted docs
     // (writeCompactedSegment/mergedBlocks), so any tombstone whose doc no

@@ -482,7 +482,7 @@ object IndexBuilder {
     * docs all tokenized to zero tokens emits no postings, but its docs ARE
     * committed — dropping the lineage row would re-select those docIds as
     * pending forever (and trip the collision check on the re-ingest). */
-  private def segmentLineage(spark: SparkSession, layout: Layout, io: TableIO,
+  private[index] def segmentLineage(spark: SparkSession, layout: Layout, io: TableIO,
       segment: String): DataFrame = {
     import spark.implicits._
     val docsTable = io.read(spark, layout.docs)

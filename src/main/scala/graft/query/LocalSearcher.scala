@@ -1,6 +1,5 @@
 package graft.query
 
-import graft.core.Analyzer
 import graft.index.BlockRow
 import graft.io.DirectTable
 import graft.io.DirectTable.In
@@ -8,12 +7,13 @@ import graft.query.QueryEngine.SearchOpts
 
 /** Serving mode: the reference engine answers queries IN-PROCESS over a
   * resident index (3-20 ms on 22.8k docs, README.md:102). This is our
-  * equivalent: load the SAME index tables (postings blocks stay compressed
-  * in memory, dictionary + doc metadata as maps) and run the SAME scoring
-  * code — QueryEngine.scoreGroup / BoundedTopK, i.e. block-max WAND with
-  * identical float-op order — on the serving thread. Results are
-  * rank- and score-identical to the distributed path (LocalSpec), latency
-  * is microseconds-to-milliseconds.
+  * equivalent: read the SAME index tables into bounded LRU caches
+  * (postings blocks stay compressed) and run the SAME query front end as
+  * the distributed plan on the serving thread — one [[QueryPlan]] (weights,
+  * phrase gate, bounds), QueryEngine.scoreGroup / BoundedTopK (block-max
+  * WAND with identical float-op order) and [[QueryEngine.paginate]].
+  * Results are rank- and score-identical to the distributed path
+  * (LocalSpec), latency is microseconds-to-milliseconds.
   *
   * Scale posture: this is the QUERY-SERVICE tier, not the build tier. A
   * 10^12-file deployment shards this loader by docGroup across serving
@@ -35,9 +35,9 @@ object LocalSearcher {
   /** In-memory image of an index dir (blocks remain varint-compressed),
     * filled on demand. A cold query reads the index's parquet files
     * directly on the calling thread (graft.io.DirectTable) and runs no
-    * Spark job: the dictionary probe, then the block fetch of the terms it
-    * holds ([[termData]]), then the page-metadata probe ([[docsOf]]). A
-    * warm query reads no file.
+    * Spark job: the dictionary probe ([[dfs]]), then the block fetch of the
+    * terms it holds ([[blocksOf]]), then the page-metadata probe
+    * ([[docsOf]]). A warm query reads no file.
     *
     * With `shard = Some((i, n))` the image holds only docGroups with
     * `docGroup % n == i` — every read is pruned on the docGroup partition
@@ -77,63 +77,29 @@ object LocalSearcher {
       * per-shard dictionary map is tens of GB; the global df a shard needs
       * for bit-identical scores is exactly its queries' terms). Misses are
       * fetched in one pruned probe ([[SearchIndex.lookup]]) and ABSENT
-      * terms are cached too (None), so unknown-term queries
-      * don't re-probe. LRU-bounded; `residentDictTerms` reports the
-      * footprint (BENCH counter). */
-    private val dictCacheMax = 1 << 20
-    private val dictCache =
-      new _root_.java.util.LinkedHashMap[(String, String), Option[Long]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: _root_.java.util.Map.Entry[(String, String), Option[Long]]): Boolean =
-          size() > dictCacheMax
-      }
-    def residentDictTerms: Int = dictCache.synchronized(dictCache.size())
-    def dfs(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] = {
-      // snapshot hit VALUES in the same critical section that detects the
-      // misses: under concurrent serving at the cache cap, an entry seen by
-      // containsKey can be evicted before a later read, and re-reading would
-      // silently drop that term's df from the query (nondeterministic
-      // scores). Hits come from the snapshot, misses from the probe.
-      val (hits, misses) = dictCache.synchronized {
-        val h = Seq.newBuilder[((String, String), Option[Long])]
-        val m = Seq.newBuilder[(String, String)]
-        for (f <- fields; t <- terms) {
-          val k = (f, t)
-          if (dictCache.containsKey(k)) h += k -> dictCache.get(k)
-          else m += k
-        }
-        (h.result(), m.result())
-      }
-      val probed =
-        if (misses.isEmpty) Map.empty[(String, String), Long]
-        else {
-          val p = index.lookup(fields, misses.map(_._2).distinct)
-          dictCache.synchronized { misses.foreach(k => dictCache.put(k, p.get(k))) }
-          p
-        }
-      (hits.collect { case (k, Some(v)) => k -> v } ++
-        misses.flatMap(k => probed.get(k).map(k -> _))).toMap
-    }
+      * terms are cached too, so unknown-term queries don't re-probe.
+      * LRU-bounded; `residentDictTerms` reports the footprint (BENCH
+      * counter). */
+    private val dictCache = new Lru[(String, String), Long](1 << 20)
+    def residentDictTerms: Int = dictCache.size
+    def dfs(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] =
+      dictCache.getAll(for (f <- fields; t <- terms) yield (f, t))(misses =>
+        index.lookup(fields, misses.map(_._2).distinct))
+
     /** Posting blocks, served from a BYTE-BUDGETED hot cache keyed by
       * (field, term), blocks ordered by (docGroup, firstDocId) — segments
       * of an incrementally-grown group restart blockIdx, so firstDocId is
-      * the global within-group order. The round-3 residency gap: a shard
-      * used to load ALL its blocks at open, so its memory was bounded only
-      * by adding shards; now a node holds at most `blockCacheBytes` of
-      * compressed postings (LRU, default unbounded = the old resident
-      * posture after warm-up), misses are fetched in one direct read (the
-      * postings files are sorted by (field, term) within each partition,
-      * so parquet statistics and the page index skip non-matching row
-      * groups and pages), and ABSENT terms cache as empty arrays so
-      * unknown-term queries don't re-probe.
-      * Eviction can never corrupt an in-flight query: the fetched arrays
-      * stay referenced by the query's own map; eviction only drops the
-      * cache's reference. */
-    private val blockCache =
-      new _root_.java.util.LinkedHashMap[(String, String), Array[BlockRow]](16, 0.75f, true)
-    private var blockCacheBytesUsed = 0L
-    def residentBlockBytes: Long = blockCache.synchronized(blockCacheBytesUsed)
-    def residentBlockTerms: Int = blockCache.synchronized(blockCache.size())
+      * the global within-group order. A node holds at most
+      * `blockCacheBytes` of compressed postings (LRU, default unbounded =
+      * the resident posture after warm-up); misses are fetched in one
+      * direct read (the postings files are sorted by (field, term) within
+      * each partition, so parquet statistics and the page index skip
+      * non-matching row groups and pages), and ABSENT terms are cached as
+      * empty arrays (weight 0), so unknown-term queries don't re-probe. */
+    private val blockCache = new Lru[(String, String), Array[BlockRow]](blockCacheBytes,
+      _.fold(0L)(_.iterator.map(_.bytes.length.toLong).sum))
+    def residentBlockBytes: Long = blockCache.weight
+    def residentBlockTerms: Int = blockCache.size
 
     private def fetchBlocks(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] =
       index.postingsTable.rows(
@@ -150,100 +116,33 @@ object LocalSearcher {
         .groupBy(b => (b.field, b.term))
         .view.mapValues(_.sortBy(b => (b.docGroup, b.firstDocId, b.blockIdx))).toMap
 
-    /** Fetch `misses` (non-empty) in one probe and cache them, absent keys
-      * as empty arrays. */
-    private def fetchAndCache(misses: Seq[(String, String)])
-        : Map[(String, String), Array[BlockRow]] = {
-      val p = fetchBlocks(misses)
-      val entries = misses.map(k => k -> p.getOrElse(k, Array.empty[BlockRow]))
-      blockCache.synchronized {
-        entries.foreach { case (k, v) =>
-          val prev = blockCache.put(k, v)
-          blockCacheBytesUsed +=
-            v.iterator.map(_.bytes.length.toLong).sum -
-              (if (prev == null) 0L
-               else prev.iterator.map(_.bytes.length.toLong).sum)
-        }
-        // evict eldest until under budget — never below the entries a
-        // single query needs (they are already referenced by `entries`)
-        val it = blockCache.entrySet().iterator()
-        while (blockCacheBytesUsed > blockCacheBytes && it.hasNext) {
-          val e = it.next()
-          blockCacheBytesUsed -= e.getValue.iterator.map(_.bytes.length.toLong).sum
-          it.remove()
-        }
+    /** The blocks of each key, empty for a key without any (in this shard). */
+    def blocksOf(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] =
+      blockCache.getAll(keys) { misses =>
+        val fetched = fetchBlocks(misses)
+        misses.map(k => k -> fetched.getOrElse(k, Array.empty[BlockRow])).toMap
       }
-      entries.toMap
-    }
-
-    def blocksOf(keys: Seq[(String, String)]): Map[(String, String), Array[BlockRow]] = {
-      val (hits, misses) = blockCache.synchronized {
-        val h = Map.newBuilder[(String, String), Array[BlockRow]]
-        val m = Seq.newBuilder[(String, String)]
-        keys.foreach { k =>
-          if (blockCache.containsKey(k)) h += k -> blockCache.get(k)
-          else m += k
-        }
-        (h.result(), m.result())
-      }
-      if (misses.isEmpty) hits else hits ++ fetchAndCache(misses)
-    }
-
-    /** A query's term data: the df of every (field, term) the dictionary
-      * holds, and the blocks of each of those keys — the dictionary probe,
-      * then the block fetch of the keys it found. */
-    def termData(fields: Seq[String], terms: Seq[String])
-        : (Map[(String, String), Long], Map[(String, String), Array[BlockRow]]) = {
-      val dfs = this.dfs(fields, terms)
-      (dfs, blocksOf(dfs.keys.toSeq))
-    }
 
     /** Single-key convenience for probes/tests. */
     def blocksFor(field: String, term: String): Array[BlockRow] =
       blocksOf(Seq((field, term))).getOrElse((field, term), Array.empty)
 
-    /** Doc metadata, served from a bounded hot cache — the round-4
-      * residency gap (VERDICT r4 item #3): pagination needs metadata only
-      * for the ≤ k·overfetch page, so the full-table at-open collect (the
-      * last unbounded-at-open structure in the serving tier) is now the
-      * same pruned-probe + LRU shape as [[dfs]]/[[blocksOf]]. Misses are
-      * fetched in one direct read per page ([[SearchIndex.pageProbe]]):
-      * `docId IN (...)` reaches parquet, and docs files are sorted by
-      * docId within partitions, so row-group statistics and the page
-      * index skip what the page does not touch; `docCacheEntries` bounds
-      * residency (default unbounded = the resident-after-warm-up posture).
-      * ABSENT ids cache as None (the [[dfs]] discipline) — with the sharded
-      * router's owner routing a shard is only ever asked for ids it
-      * scored, so absence is the defensive case, but an unrouted caller
-      * must never re-pay a probe per repeat for ids a shard cannot own. */
-    private val docCache =
-      new _root_.java.util.LinkedHashMap[Long, Option[DocMeta]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: _root_.java.util.Map.Entry[Long, Option[DocMeta]]): Boolean =
-          size() > docCacheEntries
-      }
-    def residentDocs: Int = docCache.synchronized(docCache.size())
-    def docsOf(ids: Seq[Long]): Map[Long, DocMeta] = {
-      val (hits, misses) = docCache.synchronized {
-        val h = Map.newBuilder[Long, DocMeta]
-        val m = Seq.newBuilder[Long]
-        ids.distinct.foreach { id =>
-          if (docCache.containsKey(id)) docCache.get(id).foreach(v => h += id -> v)
-          else m += id
-        }
-        (h.result(), m.result())
-      }
-      val fetched =
-        if (misses.isEmpty) Map.empty[Long, DocMeta]
-        else {
-          val rows = index.pageProbe(misses, shard)
-          docCache.synchronized {
-            misses.foreach(id => docCache.put(id, rows.get(id)))
-          }
-          rows
-        }
-      hits ++ fetched
-    }
+    /** Doc metadata, served from a bounded hot cache: pagination needs
+      * metadata only for the ≤ k·overfetch page, so nothing is collected
+      * at open. Misses are fetched in one direct read per page
+      * ([[SearchIndex.pageProbe]]): `docId IN (...)` reaches parquet, and
+      * docs files are sorted by docId within partitions, so row-group
+      * statistics and the page index skip what the page does not touch;
+      * `docCacheEntries` bounds residency (default unbounded = the
+      * resident-after-warm-up posture). ABSENT ids are cached too — with
+      * the sharded router's owner routing a shard is only ever asked for
+      * ids it scored, so absence is the defensive case, but an unrouted
+      * caller must never re-pay a probe per repeat for ids a shard cannot
+      * own. */
+    private val docCache = new Lru[Long, DocMeta](docCacheEntries)
+    def residentDocs: Int = docCache.size
+    def docsOf(ids: Seq[Long]): Map[Long, DocMeta] =
+      docCache.getAll(ids.distinct)(index.pageProbe(_, shard))
   }
 
   def load(index: SearchIndex, blockCacheBytes: Long = Long.MaxValue,
@@ -311,73 +210,25 @@ object LocalSearcher {
     * every shard), so per-shard candidates merge into exactly the global
     * candidate set. */
   private def scoredCandidates(li: LocalIndex, query: String,
-      opts: SearchOpts): Seq[(Long, Double)] = {
-    val terms = Analyzer.distinctQueryTerms(query).sorted
-    if (terms.isEmpty) return Seq.empty
-    val fieldNames = opts.fields.map(_._1)
-    val boosts = opts.fields.toMap
-    val (dfs, blockMap) = li.termData(fieldNames, terms.toSeq)
-    if (dfs.isEmpty) return Seq.empty
-
-    val weights = dfs.map { case ((f, t), df) =>
-      (f, t) -> boosts(f) * BM25.idf(li.stats(f)._1, df, opts.bm25)
+      opts: SearchOpts): Seq[(Long, Double)] =
+    QueryPlan.of(query, opts, li.stats, li.dfs) match {
+      case None => Seq.empty
+      case Some(plan) =>
+        val blockMap = li.blocksOf(plan.dfs.keys.toSeq)
+        val heap = new QueryEngine.BoundedTopK(opts.k * opts.overfetch)
+        val onDecode: () => Unit = () => { li.decodeCount.incrementAndGet(); () }
+        blockMap.valuesIterator.flatten.toSeq.groupBy(_.docGroup).toSeq.sortBy(_._1)
+          .foreach { case (_, grp) => QueryEngine.scoreGroup(grp, plan, heap, onDecode, li.deletes) }
+        li.scoredCount.addAndGet(heap.scored)
+        heap.results
     }
-    val avgdls = li.stats.map { case (f, (_, a)) => f -> a }
 
-    val pTerms = if (opts.phraseBoost > 0) Analyzer.queryTerms(query)
-      else Array.empty[String]
-    val phraseOn = pTerms.length >= 2 &&
-      pTerms.forall(t => dfs.contains((opts.phraseField, t)))
-    val phraseIdf = if (phraseOn)
-      pTerms.map(t => BM25.idf(li.stats(opts.phraseField)._1,
-        dfs((opts.phraseField, t)), opts.bm25)).min
-    else 0.0
-    val phraseUb = if (phraseOn)
-      math.max(0.0, opts.phraseBoost * phraseIdf * (opts.bm25.k1 + 1.0)) else 0.0
-
-    val m = opts.k * opts.overfetch
-    val heap = new QueryEngine.BoundedTopK(m)
-    val allBlocks = dfs.keys.toSeq.flatMap(k => blockMap.getOrElse(k, Array.empty[BlockRow]))
-    val onDecode: () => Unit = () => { li.decodeCount.incrementAndGet(); () }
-    allBlocks.groupBy(_.docGroup).toSeq.sortBy(_._1).foreach { case (_, grp) =>
-      QueryEngine.scoreGroup(grp, weights, avgdls, opts.bm25, heap, phraseOn,
-        pTerms, opts.phraseField, opts.phraseBoost, phraseIdf, phraseUb, onDecode,
-        li.deletes)
-    }
-    li.scoredCount.addAndGet(heap.scored)
-    heap.results
-  }
-
-  /** Shared pagination: composite sort + diversity + rank assignment
-    * (mirrors QueryEngine.search steps 3-5). */
-  private def paginate(top: Seq[(Long, Double)], meta: Long => DocMeta,
-      opts: SearchOpts): Seq[Hit] = {
-    val composite = top.map { case (d, s) => (d, s, meta(d)) }
-      .sortBy { case (d, s, m) => (-s, -m.qualityScore, -m.repoScore, d) }
-    val page =
-      if (!opts.diversity) composite.take(opts.k)
-      else {
-        val cap = math.max(1, opts.k / 3)
-        val counts = scala.collection.mutable.Map[String, Int]()
-        val p0 = scala.collection.mutable.ArrayBuffer[(Long, Double, DocMeta)]()
-        val p1 = scala.collection.mutable.ArrayBuffer[(Long, Double, DocMeta)]()
-        composite.foreach { h =>
-          val c = counts.getOrElse(h._3.repo, 0)
-          if (c < cap) { counts(h._3.repo) = c + 1; p0 += h } else p1 += h
-        }
-        (p0 ++ p1).take(opts.k).toSeq
-      }
-    page.zipWithIndex.map { case ((d, s, m), i) =>
-      Hit(i + 1, d, s, m.repo, m.path, m.lang, m.qualityScore, m.repoScore)
-    }
-  }
-
-  /** Mirrors QueryEngine.search step-for-step on the serving thread. */
+  /** [[QueryEngine.search]] on the serving thread: the same candidates,
+    * top-m and [[QueryEngine.paginate]]. */
   def search(li: LocalIndex, query: String, opts: SearchOpts = SearchOpts()): Seq[Hit] = {
-    val m = opts.k * opts.overfetch
     val top = scoredCandidates(li, query, opts)
-      .sortBy { case (d, s) => (-s, d) }.take(m)
-    paginate(top, li.docsOf(top.map(_._1)), opts)
+      .sortBy { case (d, s) => (-s, d) }.take(opts.k * opts.overfetch)
+    QueryEngine.paginate(top, li.docsOf(top.map(_._1)), opts)
   }
 
   /** Scatter-gather search over serving shards: per-shard top-m heaps,
@@ -397,6 +248,6 @@ object LocalSearcher {
       .sortBy { case (d, s, _) => (-s, d) }.take(m)
     val owners = merged.groupBy(_._3).view
       .mapValues(_.map(_._1).toSeq).toMap
-    paginate(merged.map { case (d, s, _) => (d, s) }, si.docMetas(owners), opts)
+    QueryEngine.paginate(merged.map { case (d, s, _) => (d, s) }, si.docMetas(owners), opts)
   }
 }

@@ -3,6 +3,7 @@ package graft.query
 import graft.core.Analyzer
 import graft.index.{BlockRow, Codec, IndexBuilder}
 import graft.io.DirectTable
+import graft.query.LocalSearcher.{DocMeta, Hit}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -10,7 +11,9 @@ import org.apache.spark.sql.expressions.Window
 /** Handle to a built index (IndexBuilder layout). Dictionary lookups,
   * corpus stats and page metadata are tiny; they are read directly from the
   * table files on the driver (no Spark job), once / per query, and shipped
-  * in task closures (the reference's "broadcast stats" shape, SURVEY §2.11). */
+  * in task closures (the reference's "broadcast stats" shape, SURVEY §2.11).
+  * The tombstones are loaded once, at open: a newly opened handle sees
+  * deletes committed after an older one opened. */
 class SearchIndex(val spark: SparkSession, val dir: String,
     val io: graft.io.TableIO = graft.io.ParquetTableIO,
     // broadcast budget for the tombstone membership view (VERDICT r5 item
@@ -32,27 +35,15 @@ class SearchIndex(val spark: SparkSession, val dir: String,
   /** Tombstone membership view (graft.index.Deletes — Lucene live-docs
     * semantics): loaded and broadcast ONCE per index open, never per query;
     * its size is bounded by delete-rate × merge-interval (compaction
-    * applies + GCs tombstones), not corpus size. Mutating deletes through
-    * [[graft.index.Deletes]] while this handle is open requires
-    * [[reloadDeletes]] — same single-writer posture as every other index
+    * applies + GCs tombstones), not corpus size. A handle sees the
+    * tombstones committed before it opened; a newly opened [[SearchIndex]]
+    * sees later ones — same single-writer posture as every other index
     * mutation. */
-  @volatile private var deletesBc
+  private[query] val deletesBroadcast
       : org.apache.spark.broadcast.Broadcast[graft.index.DeleteSet] =
     spark.sparkContext.broadcast(graft.index.Deletes.loadSet(spark, dir, io = io,
       maxEntries = maxBroadcastTombstones))
-  def deletes: graft.index.DeleteSet = deletesBc.value
-  private[query] def deletesBroadcast = deletesBc
-  def reloadDeletes(): this.type = {
-    val prev = deletesBc
-    deletesBc = spark.sparkContext.broadcast(graft.index.Deletes.loadSet(spark, dir, io = io,
-      maxEntries = maxBroadcastTombstones))
-    // unpersist, NOT destroy (ADVICE r4): an in-flight distributed query
-    // that captured the old broadcast may not have fetched it on executors
-    // yet — destroy() would fail that job; unpersist keeps it re-fetchable
-    // from the driver while freeing executor memory
-    prev.unpersist(blocking = false)
-    this
-  }
+  def deletes: graft.index.DeleteSet = deletesBroadcast.value
   /** The tombstone table as a DataFrame, for declarative anti-joins
     * (fallback wildcard arm). */
   private[query] def tombstonesDf: Option[DataFrame] =
@@ -84,35 +75,19 @@ class SearchIndex(val spark: SparkSession, val dir: String,
   val blocksDecoded: org.apache.spark.util.LongAccumulator =
     spark.sparkContext.longAccumulator("graft.blocksDecoded")
 
-  /** Optional query-service mode: pin postings/docs in executor memory and
-    * the dictionary on the driver, so a search runs as ONE Spark action
-    * with no dictionary job (the resident-index posture of the reference's
-    * OpenSearch node). Off by default — a 10^12-file dictionary belongs in
-    * the predicate-pushed scan path, not driver memory. The driver pin is
-    * GUARDED (VERDICT r5 item #5): a vocabulary above `maxDictTerms` is
-    * refused — queries then keep the pruned per-query probe (and the
-    * serving tier's LRU remains the at-scale hot path) instead of an
-    * unbounded driver collect. */
-  @volatile private var hotDict: Map[(String, String), Long] = null
-  def warm(): this.type = warm(SearchIndex.MaxWarmDictTerms)
-  def warm(maxDictTerms: Long): this.type = {
+  /** Optional query-service mode: pin postings and docs in executor
+    * memory (the resident-index posture of the reference's OpenSearch
+    * node), so a distributed search scans no file. Off by default. The
+    * dictionary is not pinned: [[lookup]] reads the query terms'
+    * partitions directly on the driver, with no Spark job, warm or not. */
+  def warm(): this.type = {
     postings.cache().count()
     docs.cache().count()
-    val vocab = dictionary.count()
-    if (vocab <= maxDictTerms)
-      hotDict = dictionary.select("field", "term", "df").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    else
-      System.err.println(s"[graft] warm(): dictionary has $vocab rows " +
-        s"(> $maxDictTerms) — refusing the driver pin; lookups stay on the " +
-        "partition-pruned probe path (use the serving tier's LRU for hot dfs)")
     this
   }
-  /** Whether [[warm]] pinned the dictionary (false when refused/not warmed). */
-  private[graft] def dictionaryPinned: Boolean = hotDict != null
 
-  /** (field, term) -> df. Hot map if warmed, else a direct read of the
-    * query terms' dictionary partitions — tlen IS the dictionary's partition
+  /** (field, term) -> df: a direct read of the query terms' dictionary
+    * partitions — tlen IS the dictionary's partition
     * column, so probing with the query terms' lengths prunes to O(distinct
     * term lengths) partitions before the term filter runs (same trick as
     * fuzzyExpand's length bands). Pruning is EXACT-PAIR: each term
@@ -132,9 +107,6 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     * (and LocalSearcher's dfs cache remembers absence across queries). */
   def lookup(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] = {
     if (terms.isEmpty) return Map.empty
-    val hd = hotDict
-    if (hd != null)
-      return (for (f <- fields; t <- terms; d <- hd.get((f, t))) yield (f, t) -> d).toMap
     def probe(ts: Seq[String], partition: DirectTable.DataFile => Boolean) =
       dictionaryTable.rows(Seq("field", "term", "df"),
         Seq(DirectTable.In("field", fields), DirectTable.In("term", ts)), partition)
@@ -159,19 +131,15 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     * [[QueryEngine.search]] and of the serving tier's `docsOf`. `shard`
     * keeps only a serving shard's docGroups. */
   private[graft] def pageProbe(ids: Seq[Long], shard: Option[(Int, Int)] = None)
-      : Map[Long, LocalSearcher.DocMeta] =
+      : Map[Long, DocMeta] =
     docsTable.rows(Seq("docId", "repo", "path", "lang", "qualityScore", "repoScore"),
       Seq(DirectTable.In("docId", ids)), DirectTable.inShard(shard))
-      .map(r => r(0).asInstanceOf[Long] -> LocalSearcher.DocMeta(r(1).asInstanceOf[String],
+      .map(r => r(0).asInstanceOf[Long] -> DocMeta(r(1).asInstanceOf[String],
         r(2).asInstanceOf[String], r(3).asInstanceOf[String],
         r(4).asInstanceOf[Double], r(5).asInstanceOf[Double])).toMap
 }
 
 object SearchIndex {
-  /** [[SearchIndex.warm]]'s driver-pin refusal threshold: dictionaries
-    * above this row count stay on the partition-pruned probe path (a
-    * 10^9-term vocabulary must never be collected to the driver). */
-  val MaxWarmDictTerms: Long = 4L * 1024 * 1024
   /** Per-open broadcast budget for the tombstone membership view; above
     * it, queries route deletes through the declarative anti-join path. */
   val MaxBroadcastTombstones: Long = 10000000L
@@ -199,10 +167,13 @@ object QueryEngine {
   /** Engine semantics (fixed so distributed, WAND, oracle and SQL agree):
     *  1. candidates = OR over distinct query terms, score = sum of
     *     boost*idf*tfNorm in ascending (field, term) order (+ phrase arm);
-    *  2. top-(k*overfetch) candidates by (score desc, docId asc);
+    *  2. top-(k*overfetch) candidates by (score desc, docId asc), joined
+    *     to their doc metadata (R10; a candidate without a docs row drops);
     *  3. R8 composite sort (score, qualityScore, repoScore, docId);
     *  4. R9 repo-diversity two-pass greedy, cap max(1, k/3);
-    *  5. limit k; broadcast join to doc metadata (R10).
+    *  5. limit k, ranked from 1.
+    * The metadata join and steps 3-5 are [[paginate]], which the serving
+    * tier runs too.
     *
     * Result columns: rank, docId, score, repo, path, lang, qualityScore,
     * repoScore.
@@ -211,49 +182,42 @@ object QueryEngine {
     val spark = index.spark
     import spark.implicits._
     val cand = candidates(index, query, opts)
-    val m = opts.k * opts.overfetch
     // top-m by (score desc, docId asc): TakeOrderedAndProject — no full sort
-    val top = cand.orderBy($"score".desc, $"docId".asc).limit(m)
-      .as[(Long, Double)].collect()
+    val top = cand.orderBy($"score".desc, $"docId".asc).limit(opts.k * opts.overfetch)
+      .as[(Long, Double)].collect().toSeq
+    // R10 metadata for the ≤ m page ids, as a PRUNED direct read (no Spark
+    // job): `docId IN (page ids)` reaches the row-group stats and page
+    // index of the docId-sorted docs files, so the read touches a few pages
+    val metas = if (top.isEmpty) Map.empty[Long, DocMeta]
+      else index.pageProbe(top.map(_._1))
+    paginate(top, metas, opts).toDF()
+  }
 
-    // R10 metadata attachment for the ≤ m page ids, as a PRUNED direct
-    // read (no Spark job): `docId IN (page ids)` reaches the row-group
-    // stats and page index of the docId-sorted docs files, so the read
-    // touches a few pages. The older broadcast-join form scanned the ENTIRE
-    // docs table per query to join ≤ m rows (guide §2.4: the join's only
-    // role was metadata attachment). The composite sort, diversity pass and
-    // rank assignment stay O(m) driver work.
-    val joined: Array[(Long, Double, String, String, String, Double, Double)] =
-      if (top.isEmpty) Array.empty
-      else {
-        val metas = index.pageProbe(top.map(_._1).toSeq)
-        top.flatMap { case (d, score) =>
-          metas.get(d).map(m => (d, score, m.repo, m.path, m.lang, m.qualityScore, m.repoScore))
-        }
-      }
-
-    // R8 composite sort
-    val composite = joined.sortBy { case (docId, score, _, _, _, q, rs) =>
-      (-score, -q, -rs, docId)
-    }
-    // R9 two-pass greedy diversity (opensearch_service.py:111-143)
+  /** The page of both tiers. `top` (the ≤ m candidates) is joined to its
+    * metadata; a candidate without a metadata row is dropped. Then the R8
+    * composite sort (score, qualityScore, repoScore desc; docId asc), the
+    * R9 two-pass greedy repo diversity with cap max(1, k/3)
+    * (opensearch_service.py:111-143), and the first k, ranked from 1. */
+  private[query] def paginate(top: Seq[(Long, Double)],
+      metas: Map[Long, DocMeta], opts: SearchOpts): Seq[Hit] = {
+    val composite = top.flatMap { case (d, s) => metas.get(d).map(m => (d, s, m)) }
+      .sortBy { case (d, s, m) => (-s, -m.qualityScore, -m.repoScore, d) }
     val page =
       if (!opts.diversity) composite.take(opts.k)
       else {
         val cap = math.max(1, opts.k / 3)
         val counts = scala.collection.mutable.Map[String, Int]()
-        val pass0 = scala.collection.mutable.ArrayBuffer[(Long, Double, String, String, String, Double, Double)]()
-        val pass1 = scala.collection.mutable.ArrayBuffer[(Long, Double, String, String, String, Double, Double)]()
+        val pass0 = scala.collection.mutable.ArrayBuffer[(Long, Double, DocMeta)]()
+        val pass1 = scala.collection.mutable.ArrayBuffer[(Long, Double, DocMeta)]()
         composite.foreach { h =>
-          val c = counts.getOrElse(h._3, 0)
-          if (c < cap) { counts(h._3) = c + 1; pass0 += h } else pass1 += h
+          val c = counts.getOrElse(h._3.repo, 0)
+          if (c < cap) { counts(h._3.repo) = c + 1; pass0 += h } else pass1 += h
         }
-        (pass0 ++ pass1).take(opts.k).toArray
+        (pass0 ++ pass1).take(opts.k).toSeq
       }
-    page.zipWithIndex.map { case ((docId, score, repo, path, lang, q, rs), i) =>
-      (i + 1, docId, score, repo, path, lang, q, rs)
-    }.toSeq.toDF("rank", "docId", "score", "repo", "path", "lang",
-      "qualityScore", "repoScore")
+    page.zipWithIndex.map { case ((d, s, m), i) =>
+      Hit(i + 1, d, s, m.repo, m.path, m.lang, m.qualityScore, m.repoScore)
+    }
   }
 
   /** Lucene AUTO edit-distance budget: 0 for len<3, 1 for 3-5, 2 for >=6. */
@@ -377,35 +341,12 @@ object QueryEngine {
   def candidates(index: SearchIndex, query: String, opts: SearchOpts): DataFrame = {
     val spark = index.spark
     import spark.implicits._
-    val terms = Analyzer.distinctQueryTerms(query).sorted
-    if (terms.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-
-    val fieldNames = opts.fields.map(_._1)
-    val boosts = opts.fields.toMap
-    val dfs = index.lookup(fieldNames, terms.toSeq)
-    if (dfs.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-
-    // (field, term) -> weight = boost * idf  (driver-side; <= 32 entries)
-    val weights: Map[(String, String), Double] = dfs.map { case ((f, t), df) =>
-      val (n, _) = index.stats(f)
-      (f, t) -> boosts(f) * BM25.idf(n, df, opts.bm25)
+    val plan = QueryPlan.of(query, opts, index.stats, index.lookup) match {
+      case Some(p) => p
+      case None => return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
     }
-    val avgdls: Map[String, Double] = index.stats.map { case (f, (_, a)) => f -> a }
-
-    val phraseTerms: Array[String] =
-      if (opts.phraseBoost > 0) Analyzer.queryTerms(query) else Array.empty
-    val phraseOn = phraseTerms.length >= 2 &&
-      phraseTerms.forall(t => dfs.contains((opts.phraseField, t)))
-    val phraseIdf: Double =
-      if (phraseOn)
-        phraseTerms.map(t => BM25.idf(index.stats(opts.phraseField)._1,
-          dfs((opts.phraseField, t)), opts.bm25)).min
-      else 0.0
-
     val blocks = index.postings
-      .filter(col("field").isin(fieldNames: _*) && col("term").isin(terms.toSeq: _*))
+      .filter(col("field").isin(plan.fields: _*) && col("term").isin(plan.terms.toSeq: _*))
       .select(col("field"), col("term"), col("docGroup").cast("long").as("docGroup"),
         col("blockIdx"), col("firstDocId"), col("lastDocId"), col("n"),
         col("sumTf"), col("maxTf"), col("minTf"), col("minDl"), col("maxDl"),
@@ -419,18 +360,15 @@ object QueryEngine {
       // exhaustive are rank-identical, and the anti-join removes exactly
       // the docs the scoring-time membership skip would have), with no
       // driver/executor-resident tombstone structure (DeleteSpec).
-      val scored = exhaustiveCandidates(spark, blocks, weights, avgdls, opts,
-        phraseOn, phraseTerms, phraseIdf, index.blocksDecoded, null)
+      val scored = exhaustiveCandidates(spark, blocks, plan, index.blocksDecoded, null)
       index.tombstonesDf match {
         case Some(t) => scored.join(t.select(col("docId")), Seq("docId"), "left_anti")
         case None => scored
       }
     } else if (opts.wand)
-      wandCandidates(spark, blocks, weights, avgdls, opts, phraseOn, phraseTerms,
-        phraseIdf, index.blocksDecoded, index.deletesBroadcast)
+      wandCandidates(spark, blocks, plan, index.blocksDecoded, index.deletesBroadcast)
     else
-      exhaustiveCandidates(spark, blocks, weights, avgdls, opts, phraseOn, phraseTerms,
-        phraseIdf, index.blocksDecoded, index.deletesBroadcast)
+      exhaustiveCandidates(spark, blocks, plan, index.blocksDecoded, index.deletesBroadcast)
   }
 
   /** Phrase tfNorm arm shared by all paths (fixed op order). Phrase term
@@ -486,16 +424,11 @@ object QueryEngine {
   // ---------------------------------------------------------------- exhaustive
 
   private def exhaustiveCandidates(spark: SparkSession, blocks: Dataset[BlockRow],
-      weights: Map[(String, String), Double], avgdls: Map[String, Double],
-      opts: SearchOpts, phraseOn: Boolean, phraseTerms: Array[String],
-      phraseIdf: Double,
-      decodeAcc: org.apache.spark.util.LongAccumulator = null,
-      deletesBc: org.apache.spark.broadcast.Broadcast[graft.index.DeleteSet] = null): DataFrame = {
+      plan: QueryPlan, decodeAcc: org.apache.spark.util.LongAccumulator,
+      deletesBc: org.apache.spark.broadcast.Broadcast[graft.index.DeleteSet]): DataFrame = {
     import spark.implicits._
-    val p = opts.bm25
-    val pf = opts.phraseField
-    val pb = opts.phraseBoost
-    val pTerms = phraseTerms
+    val p = plan.opts.bm25
+    val pf = plan.opts.phraseField
     val acc = Option(decodeAcc)
     val delBc = Option(deletesBc)
 
@@ -504,9 +437,9 @@ object QueryEngine {
     // until purge)
     val decoded: Dataset[(Long, String, String, Double, Int, Seq[Int])] =
       blocks.flatMap { b =>
-        val avgdl = avgdls(b.field)
-        val w = weights((b.field, b.term))
-        val keepPos = phraseOn && b.field == pf && pTerms.contains(b.term)
+        val avgdl = plan.avgdls(b.field)
+        val w = plan.weights((b.field, b.term))
+        val keepPos = plan.needsPositions(b.field, b.term)
         val dels = delBc.map(_.value).getOrElse(graft.index.DeleteSet.empty)
         acc.foreach(_.add(1L))
         Codec.decodeBlock(b.firstDocId, b.bytes).iterator
@@ -522,12 +455,13 @@ object QueryEngine {
       val rows = it.toArray.sortBy(d => (d._2, d._3))
       var score = 0.0
       rows.foreach(d => score += d._4) // ascending (field, term) order
-      if (phraseOn) {
+      if (plan.phraseOn) {
         val byTerm = rows.iterator
           .filter(d => d._2 == pf && d._6.nonEmpty)
           .map(d => d._3 -> d._6.toArray).toMap
         val dl = rows.find(_._2 == pf).map(_._5).getOrElse(0)
-        score += phraseScore(pTerms, byTerm, dl, avgdls(pf), pb, phraseIdf, p)
+        score += phraseScore(plan.phraseTerms, byTerm, dl, plan.avgdls(pf),
+          plan.opts.phraseBoost, plan.phraseIdf, p)
       }
       (docId, score)
     }.toDF("docId", "score")
@@ -544,19 +478,10 @@ object QueryEngine {
     * less-than so equal-score/smaller-docId boundary candidates are still
     * scored — required for exact rank identity with the exhaustive path. */
   private def wandCandidates(spark: SparkSession, blocks: Dataset[BlockRow],
-      weights: Map[(String, String), Double], avgdls: Map[String, Double],
-      opts: SearchOpts, phraseOn: Boolean, phraseTerms: Array[String],
-      phraseIdf: Double,
-      decodeAcc: org.apache.spark.util.LongAccumulator = null,
-      deletesBc: org.apache.spark.broadcast.Broadcast[graft.index.DeleteSet] = null): DataFrame = {
+      plan: QueryPlan, decodeAcc: org.apache.spark.util.LongAccumulator,
+      deletesBc: org.apache.spark.broadcast.Broadcast[graft.index.DeleteSet]): DataFrame = {
     import spark.implicits._
-    val p = opts.bm25
-    val m = opts.k * opts.overfetch
-    val pf = opts.phraseField
-    val pb = opts.phraseBoost
-    val pTerms = phraseTerms
-    // phrase arm is non-negative, bounded by boost*idf*(k1+1)
-    val phraseUb = if (phraseOn) math.max(0.0, pb * phraseIdf * (p.k1 + 1.0)) else 0.0
+    val m = plan.opts.k * plan.opts.overfetch
     val acc = Option(decodeAcc)
     val delBc = Option(deletesBc)
 
@@ -569,8 +494,7 @@ object QueryEngine {
         val heap = new BoundedTopK(m)
         val grouped = new GroupIterator(it)
         while (grouped.hasNext)
-          scoreGroup(grouped.next(), weights, avgdls, p, heap, phraseOn,
-            pTerms, pf, pb, phraseIdf, phraseUb, onDecode, dels)
+          scoreGroup(grouped.next(), plan, heap, onDecode, dels)
         heap.results.iterator
       }
       .toDF("docId", "score")
@@ -739,12 +663,12 @@ object QueryEngine {
     }
   }
 
-  private[query] def scoreGroup(groupBlocks: Seq[BlockRow],
-      weights: Map[(String, String), Double], avgdls: Map[String, Double],
-      p: BM25.Params, heap: BoundedTopK, phraseOn: Boolean,
-      pTerms: Array[String], pf: String, pb: Double, phraseIdf: Double,
-      phraseUb: Double, onDecode: () => Unit = () => (),
-      deleted: graft.index.DeleteSet = graft.index.DeleteSet.empty): Unit = {
+  private[query] def scoreGroup(groupBlocks: Seq[BlockRow], plan: QueryPlan,
+      heap: BoundedTopK, onDecode: () => Unit, deleted: graft.index.DeleteSet): Unit = {
+    val p = plan.opts.bm25
+    val pf = plan.opts.phraseField
+    val phraseOn = plan.phraseOn
+    val phraseUb = plan.phraseUb
     val docGroup = groupBlocks.head.docGroup
     // cursors in ascending (field, term) order — the fixed summation order.
     // Blocks of a (field, term) sort by (firstDocId, blockIdx): segments of
@@ -756,8 +680,8 @@ object QueryEngine {
       .sortBy(_._1)
       .map { case ((f, t), bl) =>
         new TermCursor(f, t, bl.sortBy(b => (b.firstDocId, b.blockIdx)).toArray,
-          weights((f, t)), avgdls(f), p, onDecode,
-          needPositions = phraseOn && f == pf && pTerms.contains(t))
+          plan.weights((f, t)), plan.avgdls(f), p, onDecode,
+          needPositions = plan.needsPositions(f, t))
       }
 
     // whole-group skip (strict: boundary ties must still be scored)
@@ -767,7 +691,7 @@ object QueryEngine {
     // of phrase term i (-1 when the group has no block of it); the scratch
     // slices below are refilled per scored doc, never reallocated
     val phraseCursor = if (!phraseOn) Array.empty[Int]
-      else pTerms.map(t => cursors.indexWhere(c => c.field == pf && c.term == t))
+      else plan.phraseTerms.map(t => cursors.indexWhere(c => c.field == pf && c.term == t))
     val phPos = new Array[Array[Int]](phraseCursor.length)
     val phFrom = new Array[Int](phraseCursor.length)
     val phTo = new Array[Int](phraseCursor.length)
@@ -906,7 +830,7 @@ object QueryEngine {
                     j += 1
                   }
                   score += phraseScore(phPos, phFrom, phTo, dlPhrase,
-                    avgdls(pf), pb, phraseIdf, p)
+                    plan.avgdls(pf), plan.opts.phraseBoost, plan.phraseIdf, p)
                 }
                 heap.add(pivotDoc, score)
                 ci = 0

@@ -40,20 +40,11 @@ object SearchService {
       summary: String,
       fromCache: Boolean = false)
 
-  /** LRU of the reference's size (access-order LinkedHashMap, synchronized —
-    * the serving tier is a handful of threads, not a hot lock). */
-  final class QueryCache(maxEntries: Int = 1000) {
-    private val m = new _root_.java.util.LinkedHashMap[String, Response](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: _root_.java.util.Map.Entry[String, Response]): Boolean =
-        size() > maxEntries
-    }
-    def get(k: String): Option[Response] = m.synchronized(Option(m.get(k)))
-    def put(k: String, v: Response): Unit = m.synchronized { m.put(k, v); () }
-    def size: Int = m.synchronized(m.size())
-  }
+  /** Query-result LRU, keyed by the cache key below. */
+  type QueryCache = Lru[String, Response]
 
-  def newCache(maxEntries: Int = 1000): QueryCache = new QueryCache(maxEntries)
+  /** A result cache of the reference's size. */
+  def newCache(maxEntries: Int = 1000): QueryCache = new Lru(maxEntries)
 
   def search(index: SearchIndex, rawQuery: String,
       opts: SearchOpts = SearchOpts(),

@@ -4,10 +4,10 @@ import graft.core.CorpusGen
 import graft.index.IndexBuilder
 import graft.query.{QueryEngine, SearchIndex}
 import graft.query.QueryEngine.SearchOpts
+import org.apache.spark.graft.JobRecorder
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Invariants of the build's exchange plan and the guarded warm() driver
-  * pin.
+/** Invariants of the build's exchange plan and of warm()'s job shape.
   *
   * Block/dictionary CONTENT must not depend on how the build's exchanges
   * are partitioned: 8 and 512 shuffle partitions put the 300 docGroups'
@@ -66,20 +66,35 @@ class BuildPlanSpec extends AnyFunSuite {
     assert(a == b, "search diverged between build plans")
   }
 
-  test("warm() refuses the driver dictionary pin above the budget and keeps " +
-      "search identical on the probe path") {
-    val dir = "/tmp/graft-test/warm-guard"
+  test("warm() runs only the postings and docs cache fills, and a search " +
+      "on the warmed handle runs as many jobs as on a cold one") {
+    val dir = "/tmp/graft-test/warm-jobs"
     IndexBuilder.deleteDir(spark, dir)
     IndexBuilder.build(spark,
       CorpusGen.generateDF(spark, 300L, 9L, partitions = 3), dir,
       IndexBuilder.Params(blockSize = 32, docGroupSize = 128L))
-    val pinned = new SearchIndex(spark, dir).warm()
-    assert(pinned.dictionaryPinned, "small dictionary must pin")
-    val refused = new SearchIndex(spark, dir).warm(maxDictTerms = 1L)
-    assert(!refused.dictionaryPinned, "over-budget dictionary must refuse the pin")
-    val opts = SearchOpts(k = 10, overfetch = 3, diversity = false)
-    val a = QueryEngine.search(pinned, "machine learning", opts).collect().toSeq
-    val b = QueryEngine.search(refused, "machine learning", opts).collect().toSeq
-    assert(a == b, "refused pin changed results")
+    val sc = spark.sparkContext
+    val opts = SearchOpts(k = 10, overfetch = 3)
+    def page(idx: SearchIndex) = JobRecorder.record(sc)(
+      QueryEngine.search(idx, "machine learning", opts).collect().toSeq)
+    // the cold search first: the cache fills below serve every handle
+    // whose plan reads the same files
+    val (coldPage, coldJobs) = page(new SearchIndex(spark, dir))
+    val warmed = new SearchIndex(spark, dir)
+    try {
+      val (_, warmJobs) = JobRecorder.record(sc)(warmed.warm())
+      def reads(j: JobRecorder.Job, table: String) = j.plan.contains(s"$dir/$table]")
+      assert(warmJobs.nonEmpty && warmJobs.forall(j => j.plan.contains("InMemoryRelation") &&
+        (reads(j, "postings") != reads(j, "docs"))),
+        s"warm() ran a job other than a postings or docs cache fill: $warmJobs")
+      assert(Seq("postings", "docs").forall(t => warmJobs.exists(reads(_, t))))
+      val (warmPage, searchJobs) = page(warmed)
+      assert(warmPage.nonEmpty && warmPage == coldPage, "the warmed handle's page differs")
+      assert(searchJobs.size == coldJobs.size,
+        s"warmed search ran ${searchJobs.size} jobs, cold ${coldJobs.size}")
+    } finally {
+      warmed.postings.unpersist(blocking = true)
+      warmed.docs.unpersist(blocking = true)
+    }
   }
 }

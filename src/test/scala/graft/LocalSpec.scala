@@ -265,6 +265,32 @@ class LocalSpec extends AnyFunSuite {
     assert(li3.residentDictTerms == keys.size && li3.residentBlockTerms == keys.size)
   }
 
+  test("a candidate whose docs row is missing is dropped alike by both tiers") {
+    import org.apache.spark.sql.functions.col
+    val q = "python tutorial"
+    val opts = SearchOpts(k = 10)
+    val gone = LocalSearcher.search(local, q, opts).head.docId
+    // a copy of the fixture index whose docs table lacks `gone`'s row
+    val d = new File("/tmp/graft-test/local-index-missing-doc")
+    FileUtils.deleteDirectory(d)
+    FileUtils.copyDirectory(new File(index.dir), d)
+    val docsPath = s"${d.getPath}/docs"
+    val docs = spark.read.parquet(docsPath)
+    val at = docs.filter(col("docId") === gone).select("docGroup", "segment").head()
+    val rest = docs.filter(col("docGroup") === at.get(0) && col("segment") === at.get(1) &&
+      col("docId") =!= gone)
+    ParquetTableIO.overwritePartitions(spark.createDataFrame(
+      java.util.Arrays.asList(rest.collect(): _*), rest.schema), docsPath, Seq("docGroup", "segment"))
+
+    val idx = new SearchIndex(spark, d.getPath)
+    val dist = QueryEngine.search(idx, q, opts).collect()
+      .map(r => (r.getInt(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+    val served = LocalSearcher.search(LocalSearcher.load(idx), q, opts)
+    assert(bits(served) == dist, "the tiers dropped the candidate differently")
+    assert(LocalSearcher.searchSharded(LocalSearcher.loadSharded(idx, 3), q, opts) == served)
+    assert(dist.size == opts.k && !dist.exists(_._2 == gone), s"'$gone' not dropped: $dist")
+  }
+
   /** The fixture corpus built again on snapshot storage. */
   private lazy val snapshotDir = {
     val dir = "/tmp/graft-test/local-index-snapshot"
@@ -298,7 +324,7 @@ class LocalSpec extends AnyFunSuite {
     }
   }
 
-  test("a warmed index (tables cached, dictionary pinned) reads the same pages") {
+  test("a warmed index (tables cached) reads the same pages") {
     val warmed = new SearchIndex(spark, index.dir).warm()
     try {
       assert(warmed.docsTable.files.nonEmpty && warmed.postingsTable.files.nonEmpty,
