@@ -201,11 +201,15 @@ object Deletes {
     else None
   }
 
-  /** Live tombstone count, summed from the table files' footers (no job):
-    * every write stores distinct rows, so file rows are tombstones. */
+  /** Live tombstone count, summed from the footers of the table's listing
+    * (no job): every write stores distinct rows, so file rows are
+    * tombstones. */
   def count(spark: SparkSession, indexDir: String,
-      io: TableIO = ParquetTableIO): Long =
-    df(spark, indexDir, io).map(ParquetFooters.rowCount).getOrElse(0L)
+      io: TableIO = ParquetTableIO): Long = {
+    recover(spark, indexDir, io)
+    if (!io.exists(spark, tombstones(indexDir))) 0L
+    else ParquetFooters.rowCount(io.files(spark, tombstones(indexDir)))
+  }
 
   /** Load the membership view — whole table, or one serving shard's slice
     * (`docGroup % n == i`, pruned on the docGroup partition values so a
@@ -221,16 +225,16 @@ object Deletes {
     * correctness REQUIRES every tombstone (compaction's physical purge,
     * the serving shard slice whose residency is bounded by shard sizing)
     * keep the old behavior; SearchIndex opts into its broadcast budget.
-    * The budget is checked against the whole table's [[count]] (file
-    * footers), before any row is read; a shard slice is over budget when
-    * the whole table is. */
+    * The budget is checked against the whole table's row count (the
+    * footers of its listing, which the direct read then reuses), before any
+    * row is read; a shard slice is over budget when the whole table is. */
   def loadSet(spark: SparkSession, indexDir: String,
       shard: Option[(Int, Int)] = None,
       io: TableIO = ParquetTableIO,
       maxEntries: Long = Long.MaxValue): DeleteSet = {
     recover(spark, indexDir, io)
     if (!io.exists(spark, tombstones(indexDir))) return DeleteSet.empty
-    val t = io.read(spark, tombstones(indexDir))
+    val t = io.files(spark, tombstones(indexDir))
     if (maxEntries != Long.MaxValue && ParquetFooters.rowCount(t) > maxEntries)
       return DeleteSet.overBudgetMarker
     val grouped = new DirectTable(t)

@@ -243,7 +243,7 @@ object IndexBuilder {
       io: TableIO = ParquetTableIO): Option[(Int, Long)] = {
     val meta = Layout(dir).dictionaryMeta
     if (!io.exists(spark, meta)) None
-    else new DirectTable(io.read(spark, meta)).rows(Seq("nBuckets", "targetRows"))
+    else new DirectTable(io.files(spark, meta)).rows(Seq("nBuckets", "targetRows"))
       .headOption.map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Long]))
   }
 
@@ -695,12 +695,12 @@ object IndexBuilder {
       case _ => false
     }
 
-  /** True when a committed lineage row records `segment` (read from the
-    * lineage table's partition directories: no job). */
+  /** True when a committed lineage row records `segment` (the lineage
+    * table's partition values, from its listing: no job). */
   private def committedSegment(spark: SparkSession, layout: Layout, io: TableIO,
       segment: String): Boolean =
     io.exists(spark, layout.lineage) &&
-      new DirectTable(io.read(spark, layout.lineage)).files
+      io.files(spark, layout.lineage).files
         .exists(_.values.get("inputSnapshot").exists(v => String.valueOf(v) == segment))
 
   private def uniqueSortedIds(c: Column): Column = {

@@ -179,8 +179,10 @@ object Upsert {
     // never read. Re-validated by the maintenance step at the end.
     KeyMap.invalidate(spark, dir)
 
-    // the staged parquet's footer row counts: no job
-    val nAdds = graft.io.ParquetFooters.rowCount(stagedAdds)
+    // the staged parquets' footer row counts: no job
+    def stagedRows(name: String): Long =
+      graft.io.ParquetFooters.rowCount(graft.io.ParquetTableIO.files(spark, s"$stageP/$name"))
+    val nAdds = stagedRows("adds0")
     val added =
       if (nAdds == 0L) 0L
       else {
@@ -190,7 +192,7 @@ object Upsert {
         // not-yet-built index (bootstrap batch)
         val base =
           if (!io.exists(spark, layout.lineage)) 0L
-          else graft.io.ParquetFooters.maxLong(io.read(spark, layout.lineage), "maxDocId")
+          else graft.io.ParquetFooters.maxLong(io.files(spark, layout.lineage), "maxDocId")
             .fold(0L)(_ + 1L)
         val parts = math.max(1, stagedAdds.rdd.getNumPartitions)
         val ordered = stagedAdds
@@ -210,7 +212,7 @@ object Upsert {
     // briefly, never loses); count delta = applied tombstones
     val before = Deletes.count(spark, dir, io)
     val afterTotal =
-      if (graft.io.ParquetFooters.rowCount(tombs) == 0L) before
+      if (stagedRows("tombs") == 0L) before
       else Deletes.deleteIds(spark, dir, tombs, io)
 
     // keymap maintenance LAST (all mutations committed): incremental bucket

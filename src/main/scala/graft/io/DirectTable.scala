@@ -1,85 +1,57 @@
 package graft.io
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.{MessageType, Type}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.types._
 
 /** A table read on the calling thread with parquet-mr: no Spark job, for
   * the serving reads that fetch kilobytes (a dictionary bucket, a term's
   * blocks, a page of doc metadata, the stats and tombstone tables).
   *
-  * The file list is the input files of `table`, the DataFrame a
-  * [[TableIO.read]] returned, taken once: the committed manifest for
-  * [[SnapshotTableIO]], Spark's own listing for [[ParquetTableIO]]. The
-  * reader therefore sees exactly the snapshot the table's Spark plan scans,
-  * never an orphan file. Partition values are parsed from each file's
-  * trailing `col=value` directories, unescaped, and typed by the table
-  * schema; `partitions` prunes files on them before any is opened.
+  * The file list, partition values and schema are those of `listing`, one
+  * [[TableIO.files]] call: the committed manifest for [[SnapshotTableIO]],
+  * one directory listing for [[ParquetTableIO]]. A reader that builds its
+  * Spark DataFrame from the same listing therefore scans the same snapshot,
+  * never an orphan file. `partitions` prunes files on their partition
+  * values before any is opened. Each file's footer is read once and kept
+  * by the listing; later reads open the file with the kept footer.
   *
   * [[In]] predicates on data columns reach parquet as `FilterApi` `eq`
   * predicates (row-group statistics and dictionaries, then the page column
   * index through `readNextFilteredRowGroup`), and only the requested
-  * columns are read. Every row of the kept pages is checked against the
-  * predicates here, so pushdown only prunes and never decides an answer. A
-  * requested column a file lacks fails the read; it never reads as null.
+  * columns are read. Within the kept pages the predicate columns are
+  * decoded first, row by row, and checked here, so pushdown only prunes
+  * and never decides an answer; the other columns are decoded only for the
+  * rows that pass and skipped otherwise. A requested column a file lacks
+  * fails the read; it never reads as null.
   *
   * Safe for concurrent callers: each read opens its own file readers. */
-private[graft] final class DirectTable(table: DataFrame) {
+private[graft] final class DirectTable(listing: TableListing) {
   import DirectTable._
 
-  private val conf = table.sparkSession.sparkContext.hadoopConfiguration
+  private val conf = listing.conf
   private val types: Map[String, DataType] =
-    table.schema.fields.iterator.map(f => f.name -> f.dataType).toMap
+    listing.schema.fields.iterator.map(f => f.name -> f.dataType).toMap
 
-  /** The table's data files, in path order: those of the file relation
-    * in its analyzed plan. `Dataset.inputFiles` would read the optimized
-    * plan, which for a cached table (`SearchIndex.warm`) is the in-memory
-    * relation and lists no file. */
-  val files: IndexedSeq[DataFile] =
-    table.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
-      .flatMap {
-        case r: HadoopFsRelation => r.inputFiles.toSeq
-        case r => throw new IllegalArgumentException(s"not a file table: $r")
-      }.distinct.sorted.toIndexedSeq.map { f =>
-        val path = new Path(new java.net.URI(f))
-        DataFile(path, partitionValues(path))
-      }
+  /** The table's data files, in path order. */
+  def files: IndexedSeq[DataFile] = listing.files
 
   /** Files opened, row groups read and row groups skipped (by statistics,
     * dictionaries or the page index) across this table's reads. */
   val filesOpened = new AtomicLong(0L)
   val rowGroupsRead = new AtomicLong(0L)
   val rowGroupsSkipped = new AtomicLong(0L)
-
-  /** The trailing `col=value` directories of `path` whose column is in the
-    * table schema, typed by it. */
-  private def partitionValues(path: Path): Map[String, Any] = {
-    val kvs = Iterator.iterate(path.getParent)(_.getParent).takeWhile(_ != null)
-      .map(_.getName.split("=", 2))
-      .takeWhile(kv => kv.length == 2 && types.contains(kv(0)))
-    kvs.map { case Array(c, raw) =>
-      val v = ExternalCatalogUtils.unescapePathName(raw)
-      c -> (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-            else types(c) match {
-              case IntegerType => v.toInt
-              case LongType => v.toLong
-              case StringType => v
-              case t => throw new IllegalStateException(
-                s"partition column $c of type $t is not supported ($path)")
-            })
-    }.toMap
-  }
+  /** Footers read from storage for this table, its schema's included: at
+    * most one per file, however many reads. */
+  def footersRead: Long = listing.footersRead.get
 
   /** The values of `columns` (data or partition columns) of every row, in
     * files whose partition values pass `partitions`, for which every `where`
@@ -96,58 +68,80 @@ private[graft] final class DirectTable(table: DataFrame) {
       out: scala.collection.mutable.Growable[Array[Any]]): Unit = {
     require(where.forall(w => !file.values.contains(w.column)),
       s"predicates apply to data columns, not partition columns: $where")
-    val dataCols = (columns ++ where.map(_.column)).distinct.filterNot(file.values.contains)
+    // the predicate columns first, then the other requested data columns
+    val predCols = where.map(_.column).distinct
+    val dataCols = (predCols ++ columns).distinct.filterNot(file.values.contains)
+    val footer = listing.footer(file.path)
+    val fileSchema = footer.getFileMetaData.getSchema
+    val fields = dataCols.map { c =>
+      if (!fileSchema.containsField(c))
+        throw new IllegalStateException(s"column $c is missing from ${file.path}")
+      val t = fileSchema.getType(fileSchema.getFieldIndex(c))
+      if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED))
+        throw new IllegalStateException(s"column $c of ${file.path} is not a flat primitive")
+      t
+    }
     val filter = where.map(pushed).reduceOption(FilterApi.and)
       .map(FilterCompat.get).getOrElse(FilterCompat.NOOP)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file.path, conf),
-      HadoopReadOptions.builder(conf).withRecordFilter(filter).build())
+    val input = HadoopInputFile.fromPath(file.path, conf)
+    val stream = input.newStream()
+    val reader =
+      try ParquetFileReader.open(input, footer,
+        HadoopReadOptions.builder(conf).withRecordFilter(filter).build(), stream)
+      catch { case e: Throwable => stream.close(); throw e }
     try {
       filesOpened.incrementAndGet()
-      val fileSchema = reader.getFooter.getFileMetaData.getSchema
-      val fields = dataCols.map { c =>
-        if (!fileSchema.containsField(c))
-          throw new IllegalStateException(s"column $c is missing from ${file.path}")
-        val t = fileSchema.getType(fileSchema.getFieldIndex(c))
-        if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED))
-          throw new IllegalStateException(s"column $c of ${file.path} is not a flat primitive")
-        t
-      }
       val requested = new MessageType(fileSchema.getName, fields: _*)
       reader.setRequestedSchema(requested)
-      val io = new ColumnIOFactory().getColumnIO(requested, fileSchema, true)
-      val materializer = new RowMaterializer(dataCols.size)
-      val strings = dataCols.map(c => types.get(c).contains(StringType)).toArray
+      val columnsOf = requested.getColumns
+      val nCols = dataCols.size
+      val decoders = Array.tabulate(nCols)(j => decoder(columnsOf.get(j),
+        types.get(dataCols(j)).contains(StringType)))
+      val maxDef = Array.tabulate(nCols)(j => columnsOf.get(j).getMaxDefinitionLevel)
+      // each predicate column's accepted raw values (strings as their
+      // UTF-8 bytes, compared before any string is built)
+      val accepted = predCols.map { c =>
+        val w = where.filter(_.column == c)
+        val vs = w.map(_.values).reduce(_ intersect _)
+        if (types.get(c).contains(StringType))
+          vs.map(v => Binary.fromString(v.asInstanceOf[String]): Any)
+        else vs
+      }.toArray
       // where each output column comes from: a data column's index, or -1
       val slot = columns.map(dataCols.indexOf).toArray
-      // the predicates on the raw values (strings as their UTF-8 bytes)
-      val checks = where.map { w =>
-        val j = dataCols.indexOf(w.column)
-        (j, if (strings(j)) w.values.map(v => Binary.fromString(v.asInstanceOf[String]): Any)
-            else w.values)
-      }.toArray
-      val total = reader.getFooter.getBlocks.size
+      val createdBy = footer.getFileMetaData.getCreatedBy
+      val converter = new IgnoringConverter(nCols)
+      val raw = new Array[Any](nCols)
+      val total = footer.getBlocks.size
       var read = 0
       var pages = reader.readNextFilteredRowGroup()
       while (pages != null) {
         read += 1
-        // rows of the row group's kept pages; values are decoded only for
-        // the rows that pass the predicates
-        val records = io.getRecordReader(pages, materializer)
+        val store = new ColumnReadStoreImpl(pages, converter, requested, createdBy)
+        val readers = Array.tabulate(nCols)(j => store.getColumnReader(columnsOf.get(j)))
         var i = 0L
         val n = pages.getRowCount
         while (i < n) {
-          val r = records.read()
-          if (checks.forall { case (j, vs) => vs.contains(r(j)) }) {
+          var pass = true
+          var j = 0
+          while (j < nCols) {
+            val r = readers(j)
+            val defined = r.getCurrentDefinitionLevel == maxDef(j)
+            if (!pass) { if (defined) r.skip() }
+            else {
+              val v = if (defined) decoders(j).raw(r) else null
+              raw(j) = v
+              if (j < accepted.length && !accepted(j).contains(v)) pass = false
+            }
+            r.consume()
+            j += 1
+          }
+          if (pass) {
             val row = new Array[Any](slot.length)
             var k = 0
             while (k < slot.length) {
-              val j = slot(k)
-              row(k) =
-                if (j < 0) file.values(columns(k))
-                else r(j) match {
-                  case b: Binary => if (strings(j)) b.toStringUsingUTF8 else b.getBytes
-                  case v => v
-                }
+              val s = slot(k)
+              row(k) = if (s < 0) file.values(columns(k)) else decoders(s).value(raw(s))
               k += 1
             }
             out += row
@@ -197,12 +191,6 @@ private[graft] object DirectTable {
     def apply(column: String, values: Iterable[Any]): In = new In(column, values.toSet[Any])
   }
 
-  /** A data file and its typed partition values. */
-  final case class DataFile(path: Path, values: Map[String, Any]) {
-    def int(c: String): Int = values(c).asInstanceOf[Number].intValue
-    def long(c: String): Long = values(c).asInstanceOf[Number].longValue
-  }
-
   /** The files of serving shard `(i, n)` — `docGroup % n == i` — or every
     * file when unsharded. */
   def inShard(shard: Option[(Int, Int)]): DataFile => Boolean = shard match {
@@ -210,27 +198,33 @@ private[graft] object DirectTable {
     case None => _ => true
   }
 
-  /** One record as the raw values of its requested columns, in order: a
-    * `Binary` for binary columns, boxed primitives otherwise, null where a
-    * value is null. The array is reused from record to record. */
-  private final class RowMaterializer(n: Int) extends RecordMaterializer[Array[Any]] {
-    private val row = new Array[Any](n)
-    private val root = new GroupConverter {
-      private val cells: Array[Converter] = Array.tabulate(n) { i =>
-        new PrimitiveConverter {
-          override def addBinary(v: Binary): Unit = row(i) = v
-          override def addBoolean(v: Boolean): Unit = row(i) = v
-          override def addDouble(v: Double): Unit = row(i) = v
-          override def addFloat(v: Float): Unit = row(i) = v
-          override def addInt(v: Int): Unit = row(i) = v
-          override def addLong(v: Long): Unit = row(i) = v
-        }
-      }
-      override def getConverter(i: Int): Converter = cells(i)
-      override def start(): Unit = java.util.Arrays.fill(row.asInstanceOf[Array[AnyRef]], null)
-      override def end(): Unit = ()
+  /** Reads one column's current value: `raw` as parquet decodes it (a
+    * `Binary` for binary columns), `value` as the caller gets it (a String
+    * for string columns, bytes for other binary columns). */
+  private final class Decoder(val raw: ColumnReader => Any, val value: Any => Any)
+
+  private def decoder(c: ColumnDescriptor, string: Boolean): Decoder = {
+    import PrimitiveType.PrimitiveTypeName._
+    c.getPrimitiveType.getPrimitiveTypeName match {
+      case INT32 => new Decoder(_.getInteger, identity)
+      case INT64 => new Decoder(_.getLong, identity)
+      case DOUBLE => new Decoder(_.getDouble, identity)
+      case FLOAT => new Decoder(_.getFloat, identity)
+      case BOOLEAN => new Decoder(_.getBoolean, identity)
+      case BINARY | FIXED_LEN_BYTE_ARRAY => new Decoder(_.getBinary, {
+        case b: Binary => if (string) b.toStringUsingUTF8 else b.getBytes
+        case null => null
+      })
+      case t => throw new IllegalStateException(s"column ${c.getPath.mkString(".")}: $t is not supported")
     }
-    override def getCurrentRecord: Array[Any] = row
-    override def getRootConverter: GroupConverter = root
+  }
+
+  /** The converter tree a `ColumnReadStoreImpl` asks for; values are read
+    * from the column readers directly, so it receives none. */
+  private final class IgnoringConverter(n: Int) extends GroupConverter {
+    private val cells: Array[Converter] = Array.fill(n)(new PrimitiveConverter {})
+    override def getConverter(i: Int): Converter = cells(i)
+    override def start(): Unit = ()
+    override def end(): Unit = ()
   }
 }

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-isolated [[TableIO]] — an Iceberg-style table layer built from
@@ -47,13 +47,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - `deletePartitions`: commit = old manifest minus matching partitions —
   *    NO filesystem deletes at all (retention/rollover becomes a pure
   *    metadata operation; physical reclaim is [[vacuum]]);
-  *  - `read`: resolves the newest manifest ONCE at call time and plans over
-  *    that immutable file list with the manifest's stored data schema (no
-  *    schema-inference job; `basePath` keeps partition columns and
-  *    partition pruning), so an open scan keeps reading ITS snapshot while
-  *    later commits land. A crash between data-file moves and the manifest
-  *    rename leaves orphan files that no manifest references — invisible to
-  *    every reader, reclaimed by [[vacuum]].
+  *  - `files`: resolves the newest manifest ONCE at call time; the listing
+  *    is that immutable file list with the manifest's stored data schema
+  *    (no footer read, no job), and `read` plans over it (partition
+  *    columns and partition pruning kept), so an open scan keeps reading
+  *    ITS snapshot while later commits land. A crash between data-file
+  *    moves and the manifest rename leaves orphan files that no manifest
+  *    references — invisible to every reader, reclaimed by [[vacuum]].
   *
   * Isolation contract: readers are isolated from writers for as long as
   * their snapshot's files exist, i.e. until a [[vacuum]] with a retention
@@ -230,7 +230,7 @@ object SnapshotTableIO extends TableIO {
     rels
   }
 
-  override def read(spark: SparkSession, path: String): DataFrame =
+  override def files(spark: SparkSession, path: String): TableListing =
     current(spark, path) match {
       case None =>
         // engine callers guard with io.exists; an unguarded read of a
@@ -238,27 +238,26 @@ object SnapshotTableIO extends TableIO {
         // raw-parquet read that would see orphan/stale files
         throw new IllegalStateException(
           s"SnapshotTableIO: no committed snapshot at $path")
-      case Some(m) => readAt(spark, path, m)
+      case Some(m) => listingAt(spark, path, m)
     }
 
   /** Time travel: the table as of snapshot `version`. */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
-    readAt(spark, path, readManifest(spark, path, version))
+    listingAt(spark, path, readManifest(spark, path, version)).toDF(spark)
 
-  private def readAt(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+  /** The listing of snapshot `m`, all from the manifest: its files, the
+    * stored data columns, and partition columns typed from the files'
+    * directories as a plain parquet read types them. */
+  private def listingAt(spark: SparkSession, path: String, m: Manifest): TableListing = {
+    val root = fsOf(spark, path).makeQualified(new Path(path))
     val full = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     val (pc, dc) = full.fields.partition(f => m.partitionCols.contains(f.name))
-    if (m.files.isEmpty) {
-      // zero-file snapshot: reconstruct the read-back shape (data columns
-      // then partition columns) from the stored schema
-      val ordered = StructType(dc ++ m.partitionCols.flatMap(c => pc.find(_.name == c)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ordered)
-    } else {
-      // the stored data columns stand in for schema inference (no job);
-      // partition columns are still inferred from the paths
-      val abs = m.files.map(f => s"$path/$f")
-      spark.read.schema(StructType(dc)).option("basePath", path).parquet(abs: _*)
-    }
+    if (m.files.isEmpty)
+      // zero-file snapshot: the read-back shape (data columns then
+      // partition columns) from the stored schema
+      TableListing.empty(spark, root,
+        StructType(dc ++ m.partitionCols.flatMap(c => pc.find(_.name == c))), m.partitionCols)
+    else TableListing(spark, root, StructType(dc), m.files.map(f => new Path(root, f)))
   }
 
   override def exists(spark: SparkSession, path: String): Boolean =

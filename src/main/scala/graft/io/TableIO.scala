@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -23,20 +23,29 @@ import scala.jdk.CollectionConverters._
   * REPLACE/overwrite-by-filter snapshot commit, `deletePartitions` a
   * metadata delete) — nothing in the builder or query engine changes.
   *
-  * A read never launches a Spark job. As in a catalog, a table's schema is
-  * metadata: [[ParquetTableIO]] takes the data columns from the footer of
-  * one data file (every file of a table has one schema — the index's
-  * format stamp), [[SnapshotTableIO]] from its committed manifest, and both
-  * hand it to `spark.read.schema`, so Spark skips its schema-inference job.
-  * Partition columns are still inferred from the partition paths (types
-  * and order as a plain `spark.read.parquet`). Only a table with no data
-  * file goes through Spark's inference, which raises its usual error.
+  * A table is read through one primitive, [[files]]: the committed data
+  * files, their typed partition values and the table's Spark schema, as a
+  * [[TableListing]]. It launches no Spark job and plans no DataFrame.
+  * [[ParquetTableIO]] lists the table directory once and takes the data
+  * columns from the footer of its first data file (every file of a table
+  * has one schema — the index's format stamp); [[SnapshotTableIO]] takes
+  * all of it from its committed manifest. Partition columns are typed by
+  * Spark's own partition inference over the files' directories, so a
+  * listing has the types and column order of a plain `spark.read.parquet`.
+  * [[read]] is a DataFrame over a listing, built from the listing without
+  * listing or inferring again (so no job, however many files); the
+  * serving reads ([[DirectTable]]) work from the listing itself, so a
+  * reader that pins one listing per table reads one snapshot in both
+  * tiers.
   */
 trait TableIO {
-  def read(spark: SparkSession, path: String): DataFrame
+  /** The table's committed data files, their typed partition values and
+    * its schema. */
+  def files(spark: SparkSession, path: String): TableListing
+  /** A DataFrame over a fresh listing of the table. */
+  def read(spark: SparkSession, path: String): DataFrame = files(spark, path).toDF(spark)
   def exists(spark: SparkSession, path: String): Boolean
   def drop(spark: SparkSession, path: String): Unit
-
   /** True when [[overwriteTable]] is an ATOMIC, reader-isolated commit
     * (snapshot storage). Callers that otherwise need a staged dir-swap to
     * fake atomicity (primary-state tables like tombstones) can overwrite
@@ -64,13 +73,23 @@ trait TableIO {
 
 object ParquetTableIO extends TableIO {
 
-  override def read(spark: SparkSession, path: String): DataFrame = {
+  /** One recursive listing of the table directory (Spark's hidden-file
+    * rule, see [[ParquetFooters.dataFiles]]); the data schema is the first
+    * file's footer, which the listing keeps. */
+  override def files(spark: SparkSession, path: String): TableListing = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    ParquetFooters.firstDataFile(root.getFileSystem(conf), root) match {
-      case Some(f) => spark.read.schema(ParquetFooters.schema(conf, f)).parquet(path)
-      case None => spark.read.parquet(path) // no data file: Spark's own error
+    val fs = root.getFileSystem(conf)
+    val qualified = fs.makeQualified(root)
+    val data = ParquetFooters.dataFiles(fs, qualified)
+    if (data.isEmpty) {
+      spark.read.parquet(path) // no data file: Spark's own error
+      throw new IllegalStateException(s"no data file under $path")
     }
+    val first = data.head.getPath
+    val footer = ParquetFooters.footer(conf, first)
+    TableListing(spark, qualified, ParquetFooters.schema(first, footer), data.map(_.getPath),
+      statuses = data.iterator.map(st => st.getPath -> st).toMap, known = Map(first -> footer))
   }
 
   override def exists(spark: SparkSession, path: String): Boolean = {
@@ -134,30 +153,30 @@ object ParquetTableIO extends TableIO {
 }
 
 /** Parquet footers, read in the calling process: the table metadata a
-  * read or a row count needs, without a Spark job. */
+  * listing or a row count needs, without a Spark job. */
 private[graft] object ParquetFooters {
 
   /** Spark's leaf-file filter: `_`/`.` names are metadata or in-flight
-    * residue (`_SUCCESS`, `_temporary`, `.crc`), except partition dirs. */
+    * residue (`_SUCCESS`, `_temporary`, `.crc`), except partition dirs, and
+    * `._COPYING_` files are half-copied. */
   private def hidden(name: String): Boolean =
-    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 
-  /** The first data file under `root` in path order (depth-first over
-    * sorted listings, stopping at the first hit), if any. */
-  def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
-    def first(p: Path): Option[Path] = {
-      val (dirs, files) = fs.listStatus(p).toSeq
-        .filterNot(st => hidden(st.getPath.getName))
-        .sortBy(_.getPath.getName).partition(_.isDirectory)
-      files.headOption.map(_.getPath)
-        .orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
-    }
-    if (fs.exists(root)) first(root) else None
+  /** The statuses of the data files under `root`, in path order: one
+    * recursive listing that skips hidden files and directories. Empty when
+    * `root` does not exist. */
+  def dataFiles(fs: FileSystem, root: Path): IndexedSeq[FileStatus] = {
+    def walk(p: Path): Iterator[FileStatus] = fs.listStatus(p).iterator
+      .filterNot(st => hidden(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st))
+    if (!fs.exists(root)) IndexedSeq.empty
+    else walk(root).toIndexedSeq.sortBy(_.getPath.toString)
   }
 
   /** Opened with options built from `conf`: `ParquetReadOptions.builder()`
     * would build a fresh default configuration per open. */
-  private def footer(conf: Configuration, file: Path): ParquetMetadata = {
+  def footer(conf: Configuration, file: Path): ParquetMetadata = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
       HadoopReadOptions.builder(conf).build())
     try r.getFooter finally r.close()
@@ -166,33 +185,27 @@ private[graft] object ParquetFooters {
   /** The Spark schema a file was written with (the
     * `org.apache.spark.sql.parquet.row.metadata` key), or its parquet
     * schema converted when the key is missing — Spark's own footer rule. */
-  def schema(conf: Configuration, file: Path): StructType =
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer(conf, file)),
+  def schema(file: Path, footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(SQLConf.get))
 
-  /** Rows in the files a DataFrame scans, summed from their footers. */
-  def rowCount(df: DataFrame): Long = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    df.inputFiles.iterator
-      .flatMap(f => footer(conf, new Path(new java.net.URI(f))).getBlocks.asScala)
-      .map(_.getRowCount).sum
-  }
+  /** Rows in a listing's files, summed from their footers. */
+  def rowCount(listing: TableListing): Long =
+    listing.files.iterator
+      .flatMap(f => listing.footer(f.path).getBlocks.asScala).map(_.getRowCount).sum
 
-  /** The largest value of the LONG data column `column` in the files a
-    * DataFrame scans, from the row-group statistics in their footers; None
-    * when the files hold no row. A row group with rows but no statistic
-    * for the column fails the call: the answer would be a guess. */
-  def maxLong(df: DataFrame, column: String): Option[Long] = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    df.inputFiles.iterator.flatMap { f =>
-      val file = new Path(new java.net.URI(f))
-      footer(conf, file).getBlocks.asScala.iterator.filter(_.getRowCount > 0).map { b =>
+  /** The largest value of the LONG data column `column` in a listing's
+    * files, from the row-group statistics in their footers; None when the
+    * files hold no row. A row group with rows but no statistic for the
+    * column fails the call: the answer would be a guess. */
+  def maxLong(listing: TableListing, column: String): Option[Long] =
+    listing.files.iterator.flatMap { f =>
+      listing.footer(f.path).getBlocks.asScala.iterator.filter(_.getRowCount > 0).map { b =>
         val chunk = b.getColumns.asScala.find(_.getPath.toDotString == column)
         if (!chunk.exists(c => c.getStatistics != null && c.getStatistics.hasNonNullValue))
           throw new IllegalStateException(
-            s"$file: a row group has no statistics for column $column")
+            s"${f.path}: a row group has no statistics for column $column")
         chunk.get.getStatistics.genericGetMax.asInstanceOf[java.lang.Long].longValue
       }
     }.maxOption
-  }
 }

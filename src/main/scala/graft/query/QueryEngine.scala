@@ -2,7 +2,7 @@ package graft.query
 
 import graft.core.Analyzer
 import graft.index.{BlockRow, Codec, IndexBuilder}
-import graft.io.DirectTable
+import graft.io.{DataFile, DirectTable}
 import graft.query.LocalSearcher.{DocMeta, Hit}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,15 +49,23 @@ class SearchIndex(val spark: SparkSession, val dir: String,
   private[query] def tombstonesDf: Option[DataFrame] =
     graft.index.Deletes.df(spark, dir, io)
 
-  lazy val docs: DataFrame = io.read(spark, layout.docs)
-  lazy val postings: DataFrame = io.read(spark, layout.postings)
-  lazy val dictionary: DataFrame = io.read(spark, layout.dictionary)
-  /** The same three tables read directly on the caller's thread, over the
-    * files of the DataFrames above: the serving reads ([[lookup]],
-    * [[pageProbe]], the serving tier's block fetch) run no Spark job. */
-  private[graft] lazy val docsTable = new DirectTable(docs)
-  private[graft] lazy val postingsTable = new DirectTable(postings)
-  private[graft] lazy val dictionaryTable = new DirectTable(dictionary)
+  /** One listing per table ([[graft.io.TableIO.files]]), taken on first
+    * use and kept for the life of the handle: each table's Spark DataFrame
+    * and its direct reader are built from it, so the distributed plan and
+    * the serving reads of one handle scan the same snapshot, and neither
+    * plans a DataFrame to find its files. */
+  private lazy val docsListing = io.files(spark, layout.docs)
+  private lazy val postingsListing = io.files(spark, layout.postings)
+  private lazy val dictionaryListing = io.files(spark, layout.dictionary)
+  lazy val docs: DataFrame = docsListing.toDF(spark)
+  lazy val postings: DataFrame = postingsListing.toDF(spark)
+  lazy val dictionary: DataFrame = dictionaryListing.toDF(spark)
+  /** The same three tables read directly on the caller's thread: the
+    * serving reads ([[lookup]], [[pageProbe]], the serving tier's block
+    * fetch) run no Spark job and plan no DataFrame. */
+  private[graft] lazy val docsTable = new DirectTable(docsListing)
+  private[graft] lazy val postingsTable = new DirectTable(postingsListing)
+  private[graft] lazy val dictionaryTable = new DirectTable(dictionaryListing)
   /** termBucket count of the bucketed dictionary layout (None on an index
     * whose full refresh predates it / crashed mid-write — probes then fall
     * back to tlen-only pruning, correct but less pruned). */
@@ -65,7 +73,7 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     graft.index.IndexBuilder.dictBucketCount(spark, dir, io)
   /** field -> (N, avgdl) */
   lazy val stats: Map[String, (Long, Double)] =
-    new DirectTable(io.read(spark, layout.stats)).rows(Seq("field", "n", "avgdl"))
+    new DirectTable(io.files(spark, layout.stats)).rows(Seq("field", "n", "avgdl"))
       .map(r => r(0).asInstanceOf[String] ->
         (r(1).asInstanceOf[Long], r(2).asInstanceOf[Double])).toMap
 
@@ -107,12 +115,12 @@ class SearchIndex(val spark: SparkSession, val dir: String,
     * (and LocalSearcher's dfs cache remembers absence across queries). */
   def lookup(fields: Seq[String], terms: Seq[String]): Map[(String, String), Long] = {
     if (terms.isEmpty) return Map.empty
-    def probe(ts: Seq[String], partition: DirectTable.DataFile => Boolean) =
+    def probe(ts: Seq[String], partition: DataFile => Boolean) =
       dictionaryTable.rows(Seq("field", "term", "df"),
         Seq(DirectTable.In("field", fields), DirectTable.In("term", ts)), partition)
         .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String]) ->
           r(2).asInstanceOf[Long]).toMap
-    def band(ts: Seq[String]): DirectTable.DataFile => Boolean = {
+    def band(ts: Seq[String]): DataFile => Boolean = {
       val lens = ts.map(_.length).toSet
       f => lens.contains(f.int("tlen"))
     }

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.pipeline.{Insights, QueryIntel, TextPipeline}
+import graft.pipeline.{QueryIntel, TextPipeline}
 import graft.query.QueryEngine.SearchOpts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -77,33 +77,34 @@ object SearchService {
       val effectiveQuery = expanded.mkString(" ")
 
       // 4. primary search; 5. fallback when empty (R6,
-      //    opensearch_service.py:183-186)
-      var results = QueryEngine.search(index, effectiveQuery, opts)
-      var usedFallback = false
-      if (results.isEmpty) {
-        usedFallback = true
-        val fb = QueryEngine.fallback(index, corrected, opts)
-          .orderBy(col("score").desc, col("docId").asc).limit(opts.k)
-        results = index.docs.join(broadcast(fb), Seq("docId"))
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("docId").asc)))
-          .select(col("rank"), col("docId"), col("score"), col("repo"),
-            col("path"), col("lang"), col("qualityScore"), col("repoScore"))
-      }
+      //    opensearch_service.py:183-186). The <=k-row page is collected
+      //    once; the response carries it as a local DataFrame, so nothing
+      //    is cached with Spark per call.
+      val primary = QueryEngine.search(index, effectiveQuery, opts)
+      val primaryRows = primary.collect()
+      val usedFallback = primaryRows.isEmpty
+      val (schema, rows) =
+        if (!usedFallback) (primary.schema, primaryRows)
+        else {
+          val fb = QueryEngine.fallback(index, corrected, opts)
+            .orderBy(col("score").desc, col("docId").asc).limit(opts.k)
+          val ranked = index.docs.join(broadcast(fb), Seq("docId"))
+            .withColumn("rank", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .orderBy(col("score").desc, col("docId").asc)))
+            .select(col("rank"), col("docId"), col("score"), col("repo"),
+              col("path"), col("lang"), col("qualityScore"), col("repoScore"))
+          (ranked.schema, ranked.collect())
+        }
+      val page = index.spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-      // 6. insights (A1) + template summary (X7). TWO actions over the
-      // <=k-row page: the insights aggregation, and one page collect from
-      // which top-repos and the top path derive locally (same semantics as
-      // Insights.topDomains: count desc, repo asc, limit 3) — not one
-      // Spark job per summary fragment.
-      val page = results.cache()
-      val ins = Insights.searchInsights(page, "repo", "qualityScore", "lang")
-        .collect()(0)
-      val total = ins.getAs[Long]("total_results")
-      val uniqueRepos = ins.getAs[Long]("unique_domains")
-      val pageRows = page.orderBy(col("rank").asc)
-        .select("rank", "repo", "path").collect()
+      // 6. insights (A1) + template summary (X7), from the collected rows
+      //    (Insights.searchInsights' total_results and unique_domains;
+      //    top repos as Insights.topDomains: count desc, repo asc, limit 3)
+      val total = rows.length.toLong
+      val uniqueRepos = rows.iterator.map(_.getAs[String]("repo")).filter(_ != null)
+        .distinct.size.toLong
+      val pageRows = rows.sortBy(_.getAs[Int]("rank"))
       val topRepos = pageRows.groupBy(_.getAs[String]("repo"))
         .map { case (r, rs) => r -> rs.length.toLong }.toSeq
         .sortBy { case (r, n) => (-n, r) }.take(3)

@@ -83,7 +83,8 @@ class BuildPlanSpec extends AnyFunSuite {
     val warmed = new SearchIndex(spark, dir)
     try {
       val (_, warmJobs) = JobRecorder.record(sc)(warmed.warm())
-      def reads(j: JobRecorder.Job, table: String) = j.plan.contains(s"$dir/$table]")
+      // a scan's Location lists the table's files, each under its directory
+      def reads(j: JobRecorder.Job, table: String) = j.plan.contains(s"$dir/$table/")
       assert(warmJobs.nonEmpty && warmJobs.forall(j => j.plan.contains("InMemoryRelation") &&
         (reads(j, "postings") != reads(j, "docs"))),
         s"warm() ran a job other than a postings or docs cache fill: $warmJobs")

@@ -291,4 +291,35 @@ class DeleteSpec extends AnyFunSuite {
     assert(!served.overBudget && served.size == total,
       "over budget, the serving tier must hold every tombstone")
   }
+
+  test("listing counts with tombstones: a fresh reader's open and first cold " +
+      "queries make no TableIO.read call and one TableIO.files call per table, " +
+      "tombstones included, on ParquetTableIO and SnapshotTableIO; the " +
+      "distributed page on the same handle == the serving page, bitwise") {
+    import graft.io.{ParquetTableIO, SnapshotTableIO, TableIO}
+    Seq((ParquetTableIO: TableIO) -> "/tmp/graft-test/del-count-p",
+        (SnapshotTableIO: TableIO) -> "/tmp/graft-test/del-count-s").foreach { case (base, dir) =>
+      IndexBuilder.deleteDir(spark, dir)
+      IndexBuilder.build(spark, CorpusGen.generateDF(spark, 400L, 17L, partitions = 3),
+        dir, params.copy(io = base))
+      assert(Deletes.deleteWhere(spark, dir, delPred, base) > 1)
+      val io = new CountingTableIO(base)
+      val idx = new SearchIndex(spark, dir, io)
+      val li = LocalSearcher.load(idx)
+      val opts = SearchOpts(k = 10)
+      val served = queries.map(q => LocalSearcher.search(li, q, opts)
+        .map(h => (h.rank, h.docId, java.lang.Double.doubleToRawLongBits(h.score))))
+      assert(served.count(_.nonEmpty) > 1 && served.flatten.forall(_._2 % 7 != 3))
+      assert(io.reads.isEmpty, s"$base: the serving reader called read on ${io.reads}")
+      val layout = IndexBuilder.Layout(dir)
+      val touched = Seq(Deletes.tombstones(dir), layout.stats, layout.dictionaryMeta,
+        layout.dictionary, layout.postings, layout.docs)
+      assert(io.listings.sorted == touched.sorted, s"$base: listings ${io.listings}")
+      val dist = queries.map(q => QueryEngine.search(idx, q, opts).collect().toSeq
+        .map(r => (r.getInt(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))))
+      assert(dist == served, s"$base: distributed pages != serving pages")
+      assert(io.listings.sorted == touched.sorted && io.reads.isEmpty,
+        s"$base: the distributed plan read storage again: ${io.listings} ${io.reads}")
+    }
+  }
 }

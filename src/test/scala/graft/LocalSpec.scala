@@ -324,6 +324,36 @@ class LocalSpec extends AnyFunSuite {
     }
   }
 
+  test("listing counts: a fresh reader's open and first cold queries make no " +
+      "TableIO.read call and one TableIO.files call per table touched, on " +
+      "ParquetTableIO and SnapshotTableIO; a distributed query on the same " +
+      "handle reads the same listings and returns the serving page bitwise") {
+    val opts = SearchOpts(k = 10)
+    val qs = Seq("database performance tuning", "python zzqxabsent tutorial")
+    Seq((ParquetTableIO: TableIO) -> index.dir, (SnapshotTableIO: TableIO) -> snapshotDir)
+        .foreach { case (base, dir) =>
+      val io = new CountingTableIO(base)
+      val idx = new SearchIndex(spark, dir, io)
+      val li = LocalSearcher.load(idx)
+      val served = qs.map(q => bits(LocalSearcher.search(li, q, opts)))
+      assert(served.forall(_.nonEmpty))
+      assert(io.reads.isEmpty, s"$base: the serving reader called read on ${io.reads}")
+      val layout = IndexBuilder.Layout(dir)
+      val touched = Seq(layout.stats, layout.dictionaryMeta, layout.dictionary,
+        layout.postings, layout.docs)
+      assert(io.listings.sorted == touched.sorted,
+        s"$base: listings ${io.listings}, one per table expected")
+      val dist = qs.map(q => QueryEngine.search(idx, q, opts).collect().toSeq
+        .map(r => (r.getInt(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))))
+      assert(dist == served, s"$base: distributed pages != serving pages")
+      assert(io.listings.sorted == touched.sorted, s"$base: the distributed plan listed again")
+      assert(io.reads.isEmpty, s"$base: the distributed plan called read on ${io.reads}")
+      Seq(idx.dictionaryTable, idx.postingsTable, idx.docsTable).foreach { t =>
+        assert(t.footersRead <= t.files.size, s"$base: ${t.footersRead} footers, ${t.files.size} files")
+      }
+    }
+  }
+
   test("a warmed index (tables cached) reads the same pages") {
     val warmed = new SearchIndex(spark, index.dir).warm()
     try {

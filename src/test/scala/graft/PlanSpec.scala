@@ -296,13 +296,73 @@ class PlanSpec extends AnyFunSuite {
     graft.io.ParquetTableIO.drop(spark, t)
     Seq((1L, "a")).toDF("x", "y").write.parquet(s"$t/g=1")
     Seq(2L).toDF("x").write.parquet(s"$t/g=2")
-    val table = graft.io.ParquetTableIO.read(spark, t)
-    assert(table.columns.toSeq == Seq("x", "y", "g"), "fixture: the schema has y")
-    val direct = new graft.io.DirectTable(table)
+    val listing = graft.io.ParquetTableIO.files(spark, t)
+    assert(listing.schema.fieldNames.toSeq == Seq("x", "y", "g"), "fixture: the schema has y")
+    val direct = new graft.io.DirectTable(listing)
     assert(direct.rows(Seq("x", "g")).map(_.toSeq).toSet == Set(Seq(1L, 1), Seq(2L, 2)))
     val e = intercept[IllegalStateException](direct.rows(Seq("x", "y")))
     assert(e.getMessage.contains("column y is missing"), e.getMessage)
     // pruned to the file that has y, the same read succeeds
     assert(direct.rows(Seq("y"), partitions = _.int("g") == 1).map(_.toSeq) == Seq(Seq("a")))
+  }
+
+  test("late materialization: direct reads over many row groups, with nulls, " +
+      "partition columns among the outputs and one or two predicates, == " +
+      "Spark's filter IN; one footer read per file however many reads") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val t = "/tmp/graft-test/plan-late"
+    graft.io.ParquetTableIO.drop(spark, t)
+    (0 until 3000).map { i =>
+      (i.toLong, if (i % 7 == 0) null else s"k${i % 50}",
+        if (i % 5 == 0) None else Some(i % 13), i * 0.5, s"text-$i" * (1 + i % 3),
+        Array[Byte](i.toByte, (i >> 8).toByte), i % 3, if (i % 2 == 0) "a b" else "c%d")
+    }.toDF("id", "key", "n", "score", "text", "raw", "g", "s")
+      .repartition(col("g"), col("s")).sortWithinPartitions("key", "id")
+      .write.option("parquet.block.size", 4096L)
+      .option("parquet.page.size.row.check.min", 5L)
+      .option("parquet.page.size.row.check.max", 5L)
+      .partitionBy("g", "s").parquet(t)
+    val listing = graft.io.ParquetTableIO.files(spark, t)
+    val direct = new graft.io.DirectTable(listing)
+    assert(listing.files.exists(_.path.getParent.getName == "s=c%25d"),
+      "fixture: an escaped partition directory")
+    val groups = listing.files.map(f => listing.footer(f.path).getBlocks.size)
+    assert(groups.forall(_ > 3), s"fixture: row groups per file $groups")
+    val table = spark.read.parquet(t)
+    val out = Seq("id", "s", "key", "n", "raw", "g", "text")
+    def cells(row: Seq[Any]) = row.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }
+    def viaSpark(where: org.apache.spark.sql.Column, cs: Seq[String]) =
+      table.filter(where).select(cs.map(col): _*).collect().toSeq.map(r => cells(r.toSeq))
+        .sortBy(_.toString)
+    def viaDirect(cs: Seq[String], where: Seq[graft.io.DirectTable.In],
+        partitions: graft.io.DataFile => Boolean = _ => true) =
+      direct.rows(cs, where, partitions).map(r => cells(r.toSeq)).sortBy(_.toString)
+    val keys = Seq("k3", "k17", "k40", "absent")
+    val ns = Seq(1, 2, 12)
+    val ids = Seq(5L, 777L, 1500L, 2999L, 4000L)
+    val cases = Seq(
+      (out, Seq(graft.io.DirectTable.In("key", keys)), col("key").isin(keys: _*)),
+      (out, Seq(graft.io.DirectTable.In("key", keys), graft.io.DirectTable.In("n", ns)),
+        col("key").isin(keys: _*) && col("n").isin(ns: _*)),
+      (Seq("g", "text"), Seq(graft.io.DirectTable.In("id", ids)), col("id").isin(ids: _*)),
+      (Seq("score", "s"), Seq(graft.io.DirectTable.In("n", ns), graft.io.DirectTable.In("id",
+        0L until 3000L by 3L)), col("n").isin(ns: _*) && (col("id") % 3 === 0)))
+    cases.foreach { case (cs, where, cond) =>
+      val want = viaSpark(cond, cs)
+      assert(want.nonEmpty, s"fixture: no row for $where")
+      assert(viaDirect(cs, where) == want, s"direct rows != Spark's for $where")
+    }
+    assert(viaDirect(out, Seq(graft.io.DirectTable.In("key", keys)), _.int("g") == 1) ==
+      viaSpark(col("key").isin(keys: _*) && col("g") === 1, out))
+    assert(viaDirect(out, Nil) == viaSpark(org.apache.spark.sql.functions.lit(true), out))
+    assert(direct.rowGroupsSkipped.get > 0, "no row group was pruned")
+    val e = intercept[IllegalStateException](direct.rows(Seq("id", "zz")))
+    assert(e.getMessage.contains("column zz is missing"), e.getMessage)
+    assert(direct.footersRead == listing.files.size,
+      s"${direct.footersRead} footers read for ${listing.files.size} files")
   }
 }

@@ -74,6 +74,28 @@ class SearchServiceSpec extends AnyFunSuite {
     assert(r.totalResults > 0)
   }
 
+  test("no cached DataFrame is left behind: 20 calls with and without a " +
+      "query cache, fallback included; totals are the insights of the page") {
+    spark.catalog.clearCache()
+    val cache = SearchService.newCache()
+    val qs = Seq("python tutorial", "machine learning", "zzzznotindexed src",
+      "database performance tuning", "react hooks")
+    val responses = (0 until 20).map { i =>
+      SearchService.search(index, qs(i % qs.size),
+        cache = if (i % 2 == 0) Some(cache) else None).get
+    }
+    assert(responses.exists(_.usedFallback) && responses.exists(!_.usedFallback))
+    assert(responses.exists(_.fromCache))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "SearchService left cached DataFrames registered")
+    responses.foreach { r =>
+      val ins = graft.pipeline.Insights.searchInsights(r.results, "repo", "qualityScore", "lang")
+        .collect()(0)
+      assert(r.totalResults == ins.getAs[Long]("total_results") &&
+        r.uniqueRepos == ins.getAs[Long]("unique_domains"), s"'${r.query}': totals")
+    }
+  }
+
   test("expansion pulls synonym and fuzzy terms into the term set") {
     val r = SearchService.search(index, "pythn", expand = true, fuzzy = true).get
     assert(r.expandedTerms.contains("python"), s"terms=${r.expandedTerms}")

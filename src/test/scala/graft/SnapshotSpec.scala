@@ -462,6 +462,117 @@ class SnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("a table of more files than Spark lists without a job reads with no " +
+      "job on both TableIOs, with Spark's rows") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val threshold = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+    val df = (0 until 600).map(i => (i.toLong, s"v$i", i % 3)).toDF("id", "v", "g")
+      .repartition(threshold + 8)
+    Seq((SnapshotTableIO: TableIO, "/tmp/graft-test/snap-many-s"),
+        (ParquetTableIO: TableIO, "/tmp/graft-test/snap-many-p")).foreach { case (io, t) =>
+      io.drop(spark, t)
+      io.overwriteTable(df, t, Seq("g"))
+      val (read, jobs) = JobRecorder.record(sc)(io.read(spark, t))
+      assert(jobs.isEmpty, s"$io: reading $t ran jobs $jobs")
+      assert(read.inputFiles.length > threshold, s"fixture: ${read.inputFiles.length} files")
+      assert(read.schema.fieldNames.toSeq == Seq("id", "v", "g"))
+      assert(bag(read) == bag(df), s"$io: rows differ")
+      assert(bag(read.filter(col("g") === 1)) == bag(df.filter(col("g") === 1)),
+        s"$io: rows of a pruned partition differ")
+    }
+  }
+
+  test("listing equivalence: every table's listing == Spark's own directory " +
+      "read (files, schema, rows) through build, resume, delete, upsert, " +
+      "retention expiry and compact on both TableIOs; escaped partition " +
+      "values; planted _temporary and .crc residue stays invisible") {
+    import graft.index.Retention
+    import org.apache.commons.io.FileUtils
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq((SnapshotTableIO: TableIO, "/tmp/graft-test/snap-list-s"),
+        (ParquetTableIO: TableIO, "/tmp/graft-test/snap-list-p")).foreach { case (io, d) =>
+      def check(step: String): Unit = {
+        val ts = tables(d).filter(io.exists(spark, _))
+        assert(ts.nonEmpty)
+        ts.foreach { t =>
+          val what = s"$io $step: $t"
+          val fs = new Path(t).getFileSystem(conf)
+          val root = fs.makeQualified(new Path(t))
+          // never-committed residue beside the table's files: a copy of
+          // one data file in a _temporary dir and as a .crc-named file
+          val some = graft.io.ParquetFooters.dataFiles(fs, root).headOption.map(_.getPath)
+          val residue = some.toSeq.flatMap { f =>
+            val tmp = new Path(root, s"_temporary/0/${f.getName}")
+            val crc = new Path(f.getParent, s".${f.getName}.planted.crc")
+            Seq(tmp, crc).foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, p, false, conf))
+            Seq(new Path(root, "_temporary"), crc)
+          }
+          val listing = try io.files(spark, t) finally residue.foreach(fs.delete(_, true))
+          // Spark's directory read: of the table itself, or, for a snapshot
+          // table, of a copy holding only the current snapshot's files
+          val refRoot =
+            if (io == ParquetTableIO) root
+            else {
+              val copy = new java.io.File(s"$d-copy/${root.getName}")
+              FileUtils.deleteDirectory(copy)
+              FileUtils.copyDirectory(new java.io.File(root.toUri.getPath), copy)
+              SnapshotTableIO.vacuum(spark, copy.getPath, retain = 1)
+              fs.makeQualified(new Path(copy.getPath))
+            }
+          def rel(p: Path, under: Path) = p.toString.stripPrefix(under.toString + "/")
+          val refFiles = graft.io.ParquetFooters.dataFiles(fs, refRoot).map(_.getPath)
+          assert(listing.files.map(f => rel(f.path, root)) == refFiles.map(rel(_, refRoot)),
+            s"$what: files differ")
+          if (listing.files.nonEmpty) {
+            val ref = spark.read.parquet(refRoot.toString)
+            assert(ref.inputFiles.map(f => rel(new Path(new java.net.URI(f)), refRoot)).sorted.toSeq ==
+              listing.files.map(f => rel(f.path, root)), s"$what: Spark lists other files")
+            assert(listing.schema == ref.schema, s"$what: schema " +
+              s"${listing.schema.simpleString} != ${ref.schema.simpleString}")
+            assert(listing.partitionColumns == ref.schema.fieldNames.toSeq
+              .takeRight(listing.partitionColumns.size), s"$what: partition columns")
+            assert(bag(listing.toDF(spark)) == bag(ref), s"$what: rows differ")
+            // the direct reader over the listing returns the same rows
+            import org.apache.spark.sql.types._
+            val flat: Set[DataType] = Set(StringType, LongType, IntegerType, DoubleType,
+              FloatType, BooleanType, BinaryType)
+            if (listing.schema.forall(f => flat.contains(f.dataType))) {
+              val direct = new graft.io.DirectTable(listing).rows(listing.schema.fieldNames.toSeq)
+              assert(direct.map(_.toSeq.map {
+                case b: Array[Byte] => b.toSeq
+                case x => x
+              }).groupBy(identity).map { case (r, n) => r -> n.size } == bag(ref),
+                s"$what: direct rows differ")
+            }
+            listing.files.foreach { f =>
+              assert(listing.partitionColumns.forall(f.values.contains), s"$what: ${f.path} values")
+            }
+          }
+        }
+      }
+      IndexBuilder.deleteDir(spark, d)
+      val p = params(io)
+      IndexBuilder.build(spark, corpus.filter(col("docId") < 100), d, p.copy(inputSnapshot = "b0"))
+      check("build")
+      // a segment name Spark escapes in its partition directories
+      IndexBuilder.resume(spark, corpus, d, p.copy(inputSnapshot = "b1 [x]%"))
+      assert(tables(d).exists(t => new java.io.File(s"$t/inputSnapshot=b1 %5Bx%5D%25").isDirectory),
+        "fixture: the lineage has an escaped partition directory")
+      check("resume")
+      Deletes.deleteWhere(spark, d, pmod(col("docId"), lit(11)) === 4, io)
+      check("delete")
+      val batch = corpus.filter(col("docId") % 6 === 0).drop("docId")
+        .withColumn("content", concat(col("content"), lit(" snapup")))
+      Upsert.upsert(spark, batch, d, p.copy(inputSnapshot = "b2"), key)
+      check("upsert")
+      Retention.expireSnapshots(spark, d, Seq("b0"), io)
+      check("expire")
+      assert(Compaction.expungeDeletes(spark, d, blockSize = 32, io).nonEmpty)
+      check("compact")
+    }
+  }
+
   test("the serving tier reads tombstones through the index's storage: an " +
       "orphan tombstone file naming a live doc hides it from no page") {
     import spark.implicits._

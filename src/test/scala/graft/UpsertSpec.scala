@@ -214,12 +214,13 @@ class UpsertSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = "/tmp/graft-test/upsert-footer-stats"
     Seq(3L, 17L, 9L).toDF("maxDocId").write.mode("overwrite").parquet(s"$dir/with")
-    assert(graft.io.ParquetFooters.maxLong(spark.read.parquet(s"$dir/with"), "maxDocId")
+    assert(graft.io.ParquetFooters.maxLong(graft.io.ParquetTableIO.files(spark, s"$dir/with"), "maxDocId")
       .contains(17L))
     Seq(3L).toDF("maxDocId").write.mode("overwrite")
       .option("parquet.column.statistics.enabled", "false").parquet(s"$dir/without")
     val e = intercept[IllegalStateException](
-      graft.io.ParquetFooters.maxLong(spark.read.parquet(s"$dir/without"), "maxDocId"))
+      graft.io.ParquetFooters.maxLong(graft.io.ParquetTableIO.files(spark, s"$dir/without"),
+        "maxDocId"))
     assert(e.getMessage.contains("no statistics for column maxDocId"), e.getMessage)
   }
 }
